@@ -1,8 +1,10 @@
 package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+
+import graft.quality.Expectations
 
 /** Minimal versioned table log — the transactional core of a table
   * format (what Delta/Iceberg provide), built from first principles
@@ -268,8 +270,12 @@ object TableLog {
     * `dbt/dbt_project.yml:15`). Without it Spark takes one file's
     * footer as the schema and silently drops the evolved columns. */
   def read(spark: SparkSession, path: String,
-      version: Option[Int] = None): DataFrame = {
-    val commit = resolve(spark, path, version)
+      version: Option[Int] = None): DataFrame =
+    readCommit(spark, path, resolve(spark, path, version))
+
+  /** [[read]] of an already-resolved commit (no log listing). */
+  private def readCommit(spark: SparkSession, path: String,
+      commit: Commit): DataFrame = {
     require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
     readDirs(spark, commit, commit.dirs.map(d => s"$path/$d"))
   }
@@ -662,12 +668,6 @@ object TableLog {
     * not correctness. */
   private val MaxCommitAttempts = 20
 
-  /** Optimistic-concurrency commit loop. Each attempt RE-DERIVES the
-    * snapshot via `mkDf` against the then-latest version — a merge that
-    * loses the race must be recomputed on top of the winner's snapshot,
-    * or the winner's rows silently vanish (lost update). A losing
-    * attempt's data directory is deleted before retrying, so race
-    * losers leak nothing. */
   /** Commit timestamps are clamped monotonic at WRITE time —
     * `max(previous commit ts + 1, now)` — the same forced-monotonic
     * recording Delta uses, so [[versionAsOf]]'s per-commit eligibility
@@ -678,14 +678,22 @@ object TableLog {
     math.max(System.currentTimeMillis(),
       prev.flatMap(_.timestampMs).getOrElse(0L) + 1L)
 
+  /** Optimistic-concurrency commit loop. Each attempt RE-DERIVES the
+    * snapshot via `mkDf` from the attempt's base — the latest commit,
+    * exactly the version its manifest replaces — so a merge that loses
+    * the race is recomputed on top of the winner's snapshot, never over
+    * it (lost update). The data is written, then checked
+    * ([[checkWritten]]), then published; a refused or losing attempt's
+    * data directory is deleted, so neither leaks files. */
   private def commit(spark: SparkSession, path: String, action: String,
-      carryPrevious: Boolean, inputs: Seq[InputRef] = Seq.empty)
-      (mkDf: () => DataFrame): Commit = {
+      carryPrevious: Boolean, inputs: Seq[InputRef] = Seq.empty,
+      suite: Option[Expectations.Suite] = None)
+      (mkDf: Option[Commit] => DataFrame): Commit = {
     var attempts = 0
     while (attempts < MaxCommitAttempts) {
       val prev = history(spark, path)
       val v = prev.lastOption.map(_.version + 1).getOrElse(1)
-      val df = mkDf()
+      val df = mkDf(prev.lastOption)
       val (dir, dirStats) = writeData(spark, path, df, v)
       val carried = if (carryPrevious) prev.lastOption else None
       val dirs = Seq(dir) ++ carried.map(_.dirs).getOrElse(Seq.empty)
@@ -700,24 +708,12 @@ object TableLog {
       // (which replace data, not metadata), so they come from the
       // previous commit regardless of carryPrevious
       val cons = prev.lastOption.map(_.constraints).getOrElse(Seq.empty)
-      // enforce on the WRITTEN files (never recomputes the plan), under
-      // the new snapshot schema so an evolved-away column reads as null
-      // and `IS NOT NULL` checks catch it. "optimize" is pure layout —
-      // same rows, spec-asserted — and skips the re-validation scan
-      // (at 100 TB revalidating a full rewrite doubles its read cost).
-      if (cons.nonEmpty && action != "optimize") {
-        val bad =
-          try violations(spark.read
-            .schema(DataType.fromJson(schema.get).asInstanceOf[StructType])
-            .parquet(s"$path/$dir"), cons)
-          catch { case e: Throwable =>
-            fs(spark, path).delete(new Path(path, dir), true); throw e
-          }
-        if (bad.nonEmpty) {
-          fs(spark, path).delete(new Path(path, dir), true)
-          throw new ConstraintViolationException(bad, s"$action at $path")
-        }
-      }
+      checkWritten(spark, path, dir, action,
+        DataType.fromJson(schema.get).asInstanceOf[StructType], suite,
+        // "optimize" is pure layout — same rows, spec-asserted — and
+        // skips the re-validation scan (at 100 TB revalidating a full
+        // rewrite doubles its read cost)
+        if (action == "optimize") Seq.empty else cons)
       val ts = monotonicNow(prev.lastOption)
       if (writeManifest(spark, path, v, action, dirs, stats, schema, cons, ts,
           inputs))
@@ -730,20 +726,40 @@ object TableLog {
       s"lost the commit race $MaxCommitAttempts times at $path — writer contention")
   }
 
-  /** Per-constraint violating-row counts, all constraints in ONE
-    * aggregate pass (never a scan per constraint). A row violates only
-    * when the check is FALSE — NULL passes (SQL-standard CHECK). */
-  private def violations(df: DataFrame, cs: Seq[Constraint])
-      : Seq[(String, Long)] = {
-    import org.apache.spark.sql.functions.{coalesce, expr, lit, not, sum, when}
-    val aggs = cs.map(c =>
-      sum(when(not(coalesce(expr(c.expr).cast("boolean"), lit(true))), 1L)
-        .otherwise(0L)))
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    cs.zipWithIndex
-      .map { case (c, i) =>
-        c.name -> (if (row.isNullAt(i)) 0L else row.getLong(i)) }
-      .filter(_._2 > 0L)
+  /** Write, then check, then publish: the expectation suite and the
+    * table's constraints are evaluated together in ONE aggregate pass
+    * over the directory just written — never by recomputing the plan
+    * that produced it — and before the manifest publish. The directory
+    * is read under the new snapshot schema, so an evolved-away column
+    * reads as null and `IS NOT NULL` checks catch it. A violation or an
+    * error deletes the directory and throws, leaving the table at its
+    * prior version with no new files (Delta checks constraints on the
+    * data being written the same way, before its atomic log commit). */
+  private def checkWritten(spark: SparkSession, path: String, dir: String,
+      action: String, schema: StructType,
+      suite: Option[Expectations.Suite], cons: Seq[Constraint]): Unit =
+    if (suite.nonEmpty || cons.nonEmpty) try {
+      val written = spark.read.schema(schema).parquet(s"$path/$dir")
+      // without a suite, an empty one: it carries the constraints and
+      // never refuses
+      val s = suite.getOrElse(
+        Expectations.Suite(s"$action at $path", None, Seq.empty))
+      val verdict = Expectations.gate(
+        Seq((written, s, cons.map(violationCount)))).head
+      Expectations.throwIfRefused(Seq(s -> verdict))
+      val bad = cons.map(_.name).zip(verdict.extra).filter(_._2 > 0L)
+      if (bad.nonEmpty)
+        throw new ConstraintViolationException(bad, s"$action at $path")
+    } catch { case e: Throwable =>
+      fs(spark, path).delete(new Path(path, dir), true); throw e
+    }
+
+  /** A constraint's violating-row count as an aggregate column. A row
+    * violates only when the check is FALSE — NULL passes (SQL-standard
+    * CHECK). */
+  private def violationCount(c: Constraint): Column = {
+    import org.apache.spark.sql.functions.{coalesce, count, expr, lit, not, when}
+    count(when(not(coalesce(expr(c.expr).cast("boolean"), lit(true))), 1))
   }
 
   /** The table's active constraints (empty before any were added). */
@@ -766,9 +782,11 @@ object TableLog {
       val last = resolve(spark, path, None)
       require(!last.constraints.exists(_.name == name),
         s"constraint '$name' already exists")
-      val bad = violations(read(spark, path), Seq(Constraint(name, checkExpr)))
-      if (bad.nonEmpty)
-        throw new ConstraintViolationException(bad,
+      val n = Expectations.gate(Seq((read(spark, path),
+        Expectations.Suite(s"constraint $name", None, Seq.empty),
+        Seq(violationCount(Constraint(name, checkExpr)))))).head.extra.head
+      if (n > 0L)
+        throw new ConstraintViolationException(Seq(name -> n),
           s"existing data at $path (constraint not added)")
       val v = last.version + 1
       val cons = last.constraints :+ Constraint(name, checkExpr)
@@ -814,17 +832,22 @@ object TableLog {
     * batch id and skip the commit when history already carries it. */
   def commitAppend(spark: SparkSession, path: String, df: DataFrame,
       action: String = "append", inputs: Seq[InputRef] = Seq.empty): Commit =
-    commit(spark, path, action, carryPrevious = true, inputs)(() => df)
+    commit(spark, path, action, carryPrevious = true, inputs)(_ => df)
 
   private def commitReplace(spark: SparkSession, path: String, df: DataFrame,
-      action: String, inputs: Seq[InputRef] = Seq.empty): Commit =
-    commit(spark, path, action, carryPrevious = false, inputs)(() => df)
+      action: String, inputs: Seq[InputRef] = Seq.empty,
+      suite: Option[Expectations.Suite] = None): Commit =
+    commit(spark, path, action, carryPrevious = false, inputs, suite)(_ => df)
 
   /** Replace the table contents with `df`. Old versions remain
-    * readable until vacuumed. */
+    * readable until vacuumed. A `suite` gates the commit on the
+    * written files before the manifest publish ([[checkWritten]]): a
+    * failed contract throws and leaves the table at its prior version
+    * with no new files. */
   def commitOverwrite(spark: SparkSession, path: String, df: DataFrame,
-      inputs: Seq[InputRef] = Seq.empty): Commit =
-    commitReplace(spark, path, df, "overwrite", inputs)
+      inputs: Seq[InputRef] = Seq.empty,
+      suite: Option[Expectations.Suite] = None): Commit =
+    commitReplace(spark, path, df, "overwrite", inputs, suite)
 
   /** [[commitOverwrite]] with a caller-supplied action tag — the
     * replay-safe form for foreachBatch sinks: tag the commit with a
@@ -836,6 +859,16 @@ object TableLog {
       inputs: Seq[InputRef] = Seq.empty): Commit =
     commitReplace(spark, path, df, action, inputs)
 
+  /** The upsert of `updates` onto `base` — the attempt's pinned merge
+    * base, read without re-listing the log. */
+  private def mergeOnto(spark: SparkSession, path: String,
+      updates: DataFrame, keys: Seq[String])(base: Option[Commit]): DataFrame =
+    base match {
+      case None => updates
+      case Some(c) => MergeWriter.upsertSyncSchema(
+        readCommit(spark, path, c), updates, keys)
+    }
+
   /** MERGE upsert as a log commit: read the latest snapshot, apply
     * [[MergeWriter.upsertSyncSchema]], write the result as the new
     * snapshot — all-or-nothing at the manifest rename (unlike dynamic
@@ -844,28 +877,23 @@ object TableLog {
     * merging onto the winner's snapshot, never over it. */
   def commitMerge(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], inputs: Seq[InputRef] = Seq.empty): Commit =
-    commit(spark, path, "merge", carryPrevious = false, inputs) { () =>
-      if (history(spark, path).isEmpty) updates
-      else MergeWriter.upsertSyncSchema(read(spark, path), updates, keys)
-    }
+    commit(spark, path, "merge", carryPrevious = false, inputs)(
+      mergeOnto(spark, path, updates, keys))
 
-  /** Expectation-gated MERGE: evaluate the data-quality suite on the
-    * would-be snapshot BEFORE its data or manifest is written — a
-    * failed contract leaves the table untouched at its prior version
-    * (the table-format form of the reference's validate-before-publish
-    * gate). Validation re-runs per attempt against the freshly merged
-    * snapshot. */
+  /** Expectation-gated MERGE: the merged snapshot is written once,
+    * then the data-quality suite is checked on the written files before
+    * the manifest publish ([[checkWritten]]) — the merged plan runs
+    * once, never once to validate and again to write. A failed contract
+    * deletes the written directory and leaves the table at its prior
+    * version (the table-format form of the reference's
+    * validate-before-publish gate). The check re-runs per attempt
+    * against that attempt's merged snapshot. */
   def commitMergeValidated(spark: SparkSession, path: String,
       updates: DataFrame, keys: Seq[String],
-      suite: graft.quality.Expectations.Suite,
+      suite: Expectations.Suite,
       inputs: Seq[InputRef] = Seq.empty): Commit =
-    commit(spark, path, "merge", carryPrevious = false, inputs) { () =>
-      val merged =
-        if (history(spark, path).isEmpty) updates
-        else MergeWriter.upsertSyncSchema(read(spark, path), updates, keys)
-      graft.quality.Expectations.validateOrThrow(merged, suite)
-      merged
-    }
+    commit(spark, path, "merge", carryPrevious = false, inputs, Some(suite))(
+      mergeOnto(spark, path, updates, keys))
 
   /** OPTIMIZE as a log commit: rewrite the latest snapshot into
     * `numFiles` Z-ordered files ([[ZOrder.cluster]]) and commit the

@@ -192,7 +192,7 @@ object Lakehouse {
       .options(options).csv(path)
   }
 
-  /** Expectation suite the merged fact snapshot must satisfy BEFORE a
+  /** Expectation suite the merged fact snapshot must satisfy before a
     * new version becomes visible — the table-format form of the
     * reference's validate-before-publish gate (the dbt `merge` strategy
     * plus model tests, fct_daily_store_metrics.sql:1-5). */
@@ -202,14 +202,6 @@ object Lakehouse {
       NotNull("store_id"), NotNull("dt"),
       MinBound("revenue", 0.0), MinBound("order_count", 0.0)))
 
-  /** Publish the fact through an ATOMIC validated MERGE commit on a
-    * [[graft.lake.TableLog]] table keyed on (store_id, dt) — the
-    * reference's `unique_key=['store_id','dt']` incremental merge with
-    * snapshot semantics: readers of the prior version are never exposed
-    * to a half-written merge (dynamic partition overwrite commits
-    * partition-by-partition; the log commit is all-or-nothing at the
-    * manifest publish), and a failed expectation leaves the table at
-    * its prior version untouched. */
   /** The fact's lineage inputs: the three staging views it aggregates
     * (unversioned — staging is a projection over raw feeds, not a
     * TableLog table). Recorded on every fact merge commit so "which
@@ -220,6 +212,16 @@ object Lakehouse {
     Seq("stg_erp_orders", "stg_crm_leads", "stg_web_events")
       .map(graft.lake.TableLog.InputRef(_, None))
 
+  /** Publish the fact through an ATOMIC validated MERGE commit on a
+    * [[graft.lake.TableLog]] table keyed on (store_id, dt) — the
+    * reference's `unique_key=['store_id','dt']` incremental merge with
+    * snapshot semantics: readers of the prior version are never exposed
+    * to a half-written merge (dynamic partition overwrite commits
+    * partition-by-partition; the log commit is all-or-nothing at the
+    * manifest publish). The merged snapshot is computed and written
+    * once, and [[factSuite]] is checked on the written files before the
+    * manifest publish: a failed expectation removes them and leaves the
+    * table at its prior version. */
   def publishFactToLake(spark: SparkSession, fact: DataFrame,
       lakePath: String): graft.lake.TableLog.Commit =
     graft.lake.TableLog.commitMergeValidated(
@@ -232,11 +234,13 @@ object Lakehouse {
   val LineageTable = "_lineage"
 
   /** Full run over a raw directory: per-domain ingest → validate (fail
-    * fast, local_runner.py:76-102) → stage → publish temp views; then
-    * the cross-domain fact. `lakeDir` (a lake ROOT) additionally merges
-    * the fact into `<lakeDir>/fct_daily_store_metrics` with snapshot
-    * semantics ([[publishFactToLake]]) and republishes
-    * `<lakeDir>/_catalog` — the docs/catalog artifact of the
+    * fast, local_runner.py:76-102; all four suites in ONE Spark action,
+    * one error naming every failing domain) → stage → publish temp
+    * views; then the cross-domain fact. `lakeDir` (a lake ROOT)
+    * additionally merges the fact into `<lakeDir>/fct_daily_store_metrics`
+    * with snapshot semantics ([[publishFactToLake]]: the fact suite is
+    * checked on the written files before the manifest publish) and
+    * republishes `<lakeDir>/_catalog` — the docs/catalog artifact of the
     * reference's publish stage (airflow dag runs `dbt docs generate`
     * after the build). Returns the fact.
     *
@@ -254,10 +258,11 @@ object Lakehouse {
       runId: Option[String] = None): DataFrame =
     graft.lake.TableLog.withRunId(
       runId.getOrElse(java.util.UUID.randomUUID().toString)) {
-    val staged = Seq("erp_orders", "crm_leads", "products", "web_events").map { d =>
-      val raw = ingest(spark, rawDir, d)
-      Expectations.validateOrThrow(raw, suites(d))
-      val s = stage(d, raw)
+    val raw = Seq("erp_orders", "crm_leads", "products", "web_events")
+      .map(d => d -> ingest(spark, rawDir, d))
+    Expectations.validateAllOrThrow(raw.map { case (d, r) => r -> suites(d) })
+    val staged = raw.map { case (d, r) =>
+      val s = stage(d, r)
       s.createOrReplaceTempView(s"stg_$d")   // S9: view publication
       d -> s
     }.toMap

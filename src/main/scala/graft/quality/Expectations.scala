@@ -105,9 +105,10 @@ object Expectations {
     * Non-gating means NOTHING here throws: a policy whose frame is
     * absent (its load failed upstream — exactly when monitoring
     * matters) reports as `error` with NaN hours, and an empty frame
-    * reports `error` via [[freshnessStatus]]. All domains evaluate in
-    * ONE Spark job (per-domain single-row aggregates unioned, one
-    * collect), not N sequential driver round-trips. */
+    * reports `error` (no load time, as in [[freshnessStatus]]). All
+    * domains evaluate in ONE Spark action ([[gate]]: per-domain
+    * single-row aggregates unioned, one collect), not N sequential
+    * driver round-trips. */
   def freshnessReport(frames: Map[String, DataFrame],
       policies: Map[String, FreshnessPolicy],
       asOf: Option[Column] = None): Seq[(String, Double, String)] = {
@@ -115,58 +116,95 @@ object Expectations {
       .partition { case (d, _) => frames.contains(d) }
     val evaluated =
       if (present.isEmpty) Seq.empty
-      else present.map { case (domain, p) =>
-        freshnessStatus(frames(domain), p, asOf)
-          .select(lit(domain).as("domain"),
-            col("hours_since_load"), col("status"))
-      }.reduce(_ unionByName _)
-        .collect().toSeq
-        .map(r => (r.getString(0),
-          if (r.isNullAt(1)) Double.NaN else r.getDouble(1),
-          r.getString(2)))
+      else present.zip(gate(present.map { case (d, p) =>
+        (frames(d), Suite(d, None, Seq.empty, Some(p)), Seq.empty)
+      }, asOf)).map { case ((d, _), v) =>
+        val (status, hours) = v.freshness.get
+        (d, hours, status)
+      }
     (evaluated ++ missing.map { case (d, _) => (d, Double.NaN, "error") })
       .sortBy(_._1)
   }
 
-  /** Fail-fast wrapper matching the reference's abort-on-violation
-    * semantics (local_runner.py:76-102). A declared freshness policy
-    * follows dbt semantics: `error` aborts, `warn` does not (it is
-    * surfaced to the caller via the returned status).
-    *
-    * The whole gate — every check's violation count AND the freshness
-    * aggregate — is ONE `agg` over the frame, hence one Spark job and
-    * one scan; the schema check is driver-side metadata. (The reference
-    * runs one pandas pass per expectation plus a separate freshness
-    * command.) */
-  def validateOrThrow(df: DataFrame, suite: Suite): Option[String] = {
-    val checkCols = suite.checks.map(c => c.violations.as(c.name))
-    val freshCols = suite.freshness.toSeq.flatMap { p =>
-      val (hours, status) = freshnessAggCols(p, asOf = None)
-      Seq(hours.as("__fresh_hours"), status.as("__fresh_status"))
-    }
-    val row = df.agg(count(lit(1)).as("__row_count"),
-      (checkCols ++ freshCols): _*).collect()(0)
-    val schemaFailed = suite.columnsOrdered.exists(c => df.columns.toSeq != c.expected)
-    val failed =
-      (if (schemaFailed) Seq("columns_ordered=1") else Seq.empty) ++
-        suite.checks.zipWithIndex.collect {
-          case (c, i) if row.getLong(i + 1) > 0 => s"${c.name}=${row.getLong(i + 1)}"
-        }
-    if (failed.nonEmpty)
-      throw new IllegalStateException(
-        s"Expectation suite '${suite.name}' failed: ${failed.mkString(", ")}")
-    suite.freshness.map { p =>
-      val status = row.getString(row.fieldIndex("__fresh_status"))
-      val hours =
-        if (row.isNullAt(row.fieldIndex("__fresh_hours"))) Double.NaN
-        else row.getDouble(row.fieldIndex("__fresh_hours"))
-      if (status == "error")
-        throw new IllegalStateException(
-          s"Source freshness for '${suite.name}': $hours h since load " +
-            s"exceeds error bound ${p.errorAfterHours.get} h")
-      status
+  /** One frame's gate outcome: the suite's failed checks as
+    * `name=count` (schema check first), its freshness `(status, hours)`
+    * when the suite declares a policy, and the caller's extra
+    * aggregates, in the order given. */
+  private[graft] final case class Verdict(failed: Seq[String],
+      freshness: Option[(String, Double)], extra: Seq[Long])
+
+  /** The one evaluator behind every gate. Each (frame, suite, extra)
+    * compiles to ONE single-row aggregate — every check's violation
+    * count, the freshness aggregate, and `extra` long-valued aggregate
+    * columns a caller folds into the same pass (TableLog's CHECK
+    * constraints). The rows are unioned and collected in ONE Spark
+    * action, so AQE runs the frames' scan stages concurrently instead
+    * of one driver round-trip per frame. The schema check is
+    * driver-side metadata. (The reference runs one pandas pass per
+    * expectation plus a separate freshness command.) */
+  private[graft] def gate(items: Seq[(DataFrame, Suite, Seq[Column])],
+      asOf: Option[Column] = None): Seq[Verdict] = {
+    require(items.nonEmpty, "nothing to validate")
+    val rows = items.zipWithIndex.map { case ((df, suite, extra), i) =>
+      val (hours, status) = suite.freshness
+        .map(freshnessAggCols(_, asOf))
+        .getOrElse((lit(null), lit(null)))
+      // dummy count keeps the agg valid when the suite has no checks
+      df.agg(count(lit(1)).as("__row_count"),
+          array(suite.checks.map(_.violations) ++ extra: _*)
+            .cast("array<bigint>").as("counts"),
+          hours.cast("double").as("fresh_hours"),
+          status.cast("string").as("fresh_status"))
+        .select(lit(i).as("i"), col("counts"), col("fresh_hours"),
+          col("fresh_status"))
+    }.reduce(_ union _).collect().sortBy(_.getInt(0))
+    items.zip(rows).map { case ((df, suite, _), row) =>
+      val counts = row.getSeq[java.lang.Long](1).map(c => if (c == null) 0L else c.longValue)
+      val (checked, extra) = counts.splitAt(suite.checks.size)
+      val schemaFailed =
+        suite.columnsOrdered.exists(c => df.columns.toSeq != c.expected)
+      Verdict(
+        (if (schemaFailed) Seq("columns_ordered=1") else Seq.empty) ++
+          suite.checks.zip(checked).collect {
+            case (c, n) if n > 0 => s"${c.name}=$n"
+          },
+        suite.freshness.map(_ => (row.getString(3),
+          if (row.isNullAt(2)) Double.NaN else row.getDouble(2))),
+        extra)
     }
   }
+
+  /** Throws ONE IllegalStateException naming every refused suite, in
+    * the order given: failed checks first, else a freshness `error`. */
+  private[graft] def throwIfRefused(checked: Seq[(Suite, Verdict)]): Unit = {
+    val refusals = checked.flatMap { case (suite, v) =>
+      if (v.failed.nonEmpty)
+        Some(s"Expectation suite '${suite.name}' failed: ${v.failed.mkString(", ")}")
+      else v.freshness.collect { case ("error", hours) =>
+        s"Source freshness for '${suite.name}': $hours h since load " +
+          suite.freshness.flatMap(_.errorAfterHours)
+            .fold("(no load time)")(b => s"exceeds error bound $b h")
+      }
+    }
+    if (refusals.nonEmpty) throw new IllegalStateException(refusals.mkString("; "))
+  }
+
+  /** Fail-fast gate over several frames, matching the reference's
+    * abort-on-violation semantics (local_runner.py:76-102), in ONE Spark
+    * action ([[gate]]). A declared freshness policy follows dbt
+    * semantics: `error` aborts, `warn` does not (it is surfaced to the
+    * caller via the returned statuses, one per frame). */
+  def validateAllOrThrow(frames: Seq[(DataFrame, Suite)]): Seq[Option[String]] = {
+    val verdicts = gate(frames.map { case (df, suite) => (df, suite, Seq.empty) })
+    throwIfRefused(frames.map(_._2).zip(verdicts))
+    verdicts.map(_.freshness.map(_._1))
+  }
+
+  /** [[validateAllOrThrow]] for one frame: the whole gate — every
+    * check's violation count AND the freshness aggregate — is one `agg`
+    * and one scan. */
+  def validateOrThrow(df: DataFrame, suite: Suite): Option[String] =
+    validateAllOrThrow(Seq(df -> suite)).head
 
   /** dbt's `relationships` (referential-integrity) test: rows of
     * `child` whose `childCol` is non-null and absent from `parent`'s
@@ -201,7 +239,7 @@ object Expectations {
 
   /** The freshness check as a pair of aggregate Columns
     * (hours_since_load, status) so callers can fold it into a wider
-    * single-pass agg ([[validateOrThrow]] does). */
+    * single-pass agg ([[gate]] does). */
   private[quality] def freshnessAggCols(policy: FreshnessPolicy,
       asOf: Option[Column]): (Column, Column) = {
     val now = asOf.getOrElse(current_timestamp())

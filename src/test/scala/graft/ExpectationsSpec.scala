@@ -152,6 +152,45 @@ class ExpectationsSpec extends AnyFunSuite {
       Some(FreshnessPolicy("dt", Some(12.0), Some(24.0))))
     // one collect = one query execution = one scan of the frame (the
     // pre-fold shape ran TWO: the suite agg and the freshness agg)
+    val executions = countExecutions {
+      assert(Expectations.validateOrThrow(frame, suite) == Some("pass"))
+    }
+    assert(executions == 1,
+      s"expected the suite + freshness gate to be one action, got $executions")
+  }
+
+  test("validateAllOrThrow gates several frames in ONE action") {
+    val orders = Seq((1L, 5.0), (2L, 7.0)).toDF("id", "amount")
+    val emails = Seq("a@x.com", "b@y.org").toDF("email")
+    val ids = Seq(Some(1L), Some(2L)).toDF("id")
+    val frames = Seq(
+      orders -> Suite("orders", Some(ColumnsOrdered(Seq("id", "amount"))),
+        Seq(NotNull("id"), MinBound("amount", 0.0))),
+      emails -> Suite("emails", None, Seq(RegexMatch("email", ".+@.+\\..+"))),
+      ids -> Suite("ids", None, Seq(NotNull("id"), Unique("id"))))
+    val executions = countExecutions {
+      assert(Expectations.validateAllOrThrow(frames) == Seq(None, None, None))
+    }
+    assert(executions == 1,
+      s"expected three suites to be checked in one action, got $executions")
+  }
+
+  test("validateAllOrThrow names every failing suite, in the order given") {
+    val bad = Seq((None: Option[Long], -1.0)).toDF("id", "amount")
+    val good = Seq((Some(1L), 1.0)).toDF("id", "amount")
+    val e = intercept[IllegalStateException] {
+      Expectations.validateAllOrThrow(Seq(
+        bad -> Suite("second_bad", None, Seq(MinBound("amount", 0.0))),
+        good -> Suite("good", None, Seq(NotNull("id"))),
+        bad -> Suite("first_bad", None, Seq(NotNull("id")))))
+    }
+    assert(e.getMessage ==
+      "Expectation suite 'second_bad' failed: amount_min=1; " +
+        "Expectation suite 'first_bad' failed: id_not_null=1")
+  }
+
+  /** SQL executions `body` runs, from a QueryExecutionListener. */
+  private def countExecutions(body: => Unit): Int = {
     val executions = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
@@ -163,7 +202,7 @@ class ExpectationsSpec extends AnyFunSuite {
     }
     spark.listenerManager.register(listener)
     try {
-      assert(Expectations.validateOrThrow(frame, suite) == Some("pass"))
+      body
       // listener events are posted async; wait for the count to settle
       var last = -1
       var spins = 0
@@ -171,7 +210,6 @@ class ExpectationsSpec extends AnyFunSuite {
         last = executions.get(); Thread.sleep(50); spins += 1
       }
     } finally spark.listenerManager.unregister(listener)
-    assert(executions.get() == 1,
-      s"expected the suite + freshness gate to be one action, got ${executions.get()}")
+    executions.get()
   }
 }

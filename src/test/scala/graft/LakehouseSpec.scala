@@ -62,6 +62,28 @@ class LakehouseSpec extends AnyFunSuite {
     assert(e.getMessage.contains("crm_leads"))
   }
 
+  test("a bad raw feed refuses the whole run and leaves the lake fact at its prior version") {
+    import graft.lake.TableLog
+    val root = Files.createTempDirectory("graft_lake_bad").toString
+    val lake = s"$root/${Lakehouse.FactTable}"
+    Lakehouse.run(spark, rawDir, lakeDir = Some(root))
+    assert(TableLog.latestVersion(spark, lake) == Some(1))
+    val dataDirs = Files.list(Paths.get(lake, "data")).count()
+    val badDir = graft.pipeline.SampleData.writeTo(
+      Files.createTempDirectory("graft_bad_web").toString)
+    Files.writeString(Paths.get(badDir, "web_events.json"),
+      graft.pipeline.SampleData.webEventsJson +
+        """{"event_id":null,"visitor_id":"V400","store_id":"store_01","dt":"2024-06-04","page":"/home","event_type":"page_view","metadata":{}}""" + "\n")
+    val e = intercept[IllegalStateException] {
+      Lakehouse.run(spark, badDir, lakeDir = Some(root))
+    }
+    assert(e.getMessage.contains("web_events"))
+    assert(e.getMessage.contains("event_id_not_null=1"))
+    assert(TableLog.latestVersion(spark, lake) == Some(1))
+    assert(Files.list(Paths.get(lake, "data")).count() == dataDirs)
+    assert(TableLog.read(spark, lake).count() == 5)
+  }
+
   test("incremental window filters the fact to the last N days") {
     // fixture dates are 2024-06; a 7-day window from today must be empty
     val fact = Lakehouse.run(spark, rawDir, incrementalDays = Some(7))
@@ -103,12 +125,15 @@ class LakehouseSpec extends AnyFunSuite {
       col("dt") === lit("2024-06-02").cast("date"))
       .select("revenue").collect()(0).getDecimal(0).doubleValue() == 999.99)
     // a merge violating the fact suite is rejected and the table
-    // stays at its prior version — validate-before-publish
+    // stays at its prior version, with no new data directory —
+    // checked on the written files, before the manifest publish
+    val dataDirs = Files.list(Paths.get(lake, "data")).count()
     val bad = TableLog.read(spark, lake).limit(1)
       .withColumn("revenue", lit(-5.0).cast("decimal(12,2)"))
     intercept[IllegalStateException] {
       Lakehouse.publishFactToLake(spark, bad, lake)
     }
     assert(TableLog.latestVersion(spark, lake) == Some(2))
+    assert(Files.list(Paths.get(lake, "data")).count() == dataDirs)
   }
 }

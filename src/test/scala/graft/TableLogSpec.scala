@@ -14,6 +14,14 @@ class TableLogSpec extends AnyFunSuite {
   private def freshPath() =
     Files.createTempDirectory("graft_tablelog").resolve("t").toString
 
+  /** Every `data/c*` directory on disk, referenced by a manifest or not. */
+  private def dataDirsOnDisk(path: String): Set[String] = {
+    val d = java.nio.file.Paths.get(path, "data")
+    if (!Files.exists(d)) Set.empty
+    else Files.list(d).iterator().asScala.map(p => "data/" + p.getFileName)
+      .filter(_.startsWith("data/c")).toSet
+  }
+
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
     df.as[(Long, String)].collect().toSet
 
@@ -172,7 +180,7 @@ class TableLogSpec extends AnyFunSuite {
       (2L, "changed"), (3L, "removed"), (4L, "added"), (5L, "changed")))
   }
 
-  test("expectation-gated merge refuses a contract-breaking commit pre-write") {
+  test("expectation-gated merge refuses a contract-breaking commit pre-publish") {
     import graft.quality.Expectations
     val path = freshPath()
     val suite = Expectations.Suite("orders_contract", None,
@@ -187,8 +195,41 @@ class TableLogSpec extends AnyFunSuite {
       TableLog.commitMergeValidated(spark, path,
         Seq((2L, null.asInstanceOf[String])).toDF("id", "v"), Seq("id"), suite)
     }
+    // the suite-gated overwrite refuses the same way
+    intercept[IllegalStateException] {
+      TableLog.commitOverwrite(spark, path,
+        Seq((-3L, "x")).toDF("id", "v"), suite = Some(suite))
+    }
     assert(TableLog.latestVersion(spark, path).contains(1))
     assert(TableLog.history(spark, path).flatMap(_.dirs).toSet == dirsBefore)
+    // the refused merge's data was written, checked, then removed: no
+    // orphan directory stays on disk
+    assert(dataDirsOnDisk(path) == dirsBefore)
+    assert(rows(TableLog.read(spark, path)) == Set((1L, "a")))
+  }
+
+  test("suite and constraints gate a merge together: a constraint breach is refused pre-publish") {
+    import graft.quality.Expectations
+    val path = freshPath()
+    val suite = Expectations.Suite("orders_contract", None,
+      Seq(Expectations.NotNull("v")))
+    TableLog.commitMergeValidated(spark, path,
+      Seq((1L, "a")).toDF("id", "v"), Seq("id"), suite)
+    TableLog.addConstraint(spark, path, "id_positive", "id > 0")
+    val dirsBefore = dataDirsOnDisk(path)
+    // passes the suite, breaks the constraint
+    val e = intercept[TableLog.ConstraintViolationException] {
+      TableLog.commitMergeValidated(spark, path,
+        Seq((-1L, "b")).toDF("id", "v"), Seq("id"), suite)
+    }
+    assert(e.byConstraint == Seq("id_positive" -> 1L))
+    // breaks both: the suite is reported first
+    intercept[IllegalStateException] {
+      TableLog.commitMergeValidated(spark, path,
+        Seq((-2L, null.asInstanceOf[String])).toDF("id", "v"), Seq("id"), suite)
+    }
+    assert(TableLog.latestVersion(spark, path).contains(2))
+    assert(dataDirsOnDisk(path) == dirsBefore)
     assert(rows(TableLog.read(spark, path)) == Set((1L, "a")))
   }
 
