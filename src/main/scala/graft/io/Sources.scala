@@ -140,14 +140,6 @@ object Sources {
       }
     }
 
-  /** Register every testdata table as a temp view (S4/S9: catalog +
-    * view publication — temp views inline into the logical plan, so
-    * downstream filters still push to the parquet scan). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    tableNames.foreach { t =>
-      table(spark, dir, t).createOrReplaceTempView(t)
-    }
-
   /** Header CSV scan with enforced schema (S1; reference
     * `local_runner.py:52`). `mode=FAILFAST` makes malformed rows loud,
     * matching the reference's fail-on-violation posture. */
