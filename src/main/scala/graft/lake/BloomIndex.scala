@@ -1,10 +1,6 @@
 package graft.lake
 
-import java.io.{DataInputStream, DataOutputStream}
-
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, input_file_name}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-file bloom-filter index for point-lookup file skipping — the
@@ -20,22 +16,15 @@ import org.apache.spark.util.sketch.BloomFilter
   * `util.sketch.BloomFilter` (mergeable, fixed hash family — the
   * build and probe sides can never disagree on hashing).
   *
-  * Layout: one `_bloom.idx` sidecar INSIDE each immutable data
-  * directory. The underscore prefix makes parquet scans ignore it; it
-  * travels with the directory through every append that carries the
-  * dir forward (no per-commit rewrite), and [[TableLog.vacuum]]
-  * deletes it with its dir. Readers consult sidecars lazily — only an
-  * equality-pruned read ([[TableLog.readWhereEq]]) ever opens one.
-  *
-  * Build cost is one column-pruned pass over the indexed directory
-  * (O(new data) when run per commit, never O(table)); partial blooms
-  * shuffle as #files × #cols sketches, and the driver streams the
-  * merged results to the sidecar one bloom at a time.
+  * Layout: one `_bloom.idx` sidecar per data directory, in the
+  * [[BloomSidecar]] format, built in one column-pruned pass over the
+  * directory (O(new data) when run per commit, never O(table)).
+  * Readers consult sidecars lazily — only an equality-pruned read
+  * ([[TableLog.readWhereEq]]) ever opens one.
   */
 object BloomIndex {
 
-  private val SidecarName = "_bloom.idx"
-  private val Magic = 0x47424c4d // "GBLM"
+  private val sidecar = new BloomSidecar("_bloom.idx", 0x47424c4d) // "GBLM"
 
   /** Columns must be integral or string — the key types a point
     * lookup probes. (Doubles canonicalize badly, and range types
@@ -61,131 +50,22 @@ object BloomIndex {
       s"bloom index supports integral/string probes, got ${other.getClass}")
   }
 
-  /** Build the sidecar for one data directory of `path`. `rowsByFile`
-    * sizes each file's bloom exactly (taken from the manifest's file
-    * stats when present — zero extra counting); files absent from the
-    * map fall back to `defaultRows`. Idempotent: rebuilding replaces
-    * the sidecar atomically (write temp + rename), and concurrent
-    * readers of the old sidecar are unaffected (worst case they keep
-    * the old pruning, which is only ever conservative-or-equal). */
-  def index(spark: SparkSession, path: String, dirRel: String,
-      cols: Seq[String], rowsByFile: Map[String, Long],
-      fpp: Double = 0.01, defaultRows: Long = 1000000L): Unit = {
-    require(cols.nonEmpty, "need at least one column to index")
-    val absDir = s"$path/$dirRel"
-    val df = spark.read.parquet(absDir)
-      .select(input_file_name().as("__file") +: cols.map(col): _*)
-    val colArr = cols.toArray
-    // (fileName, colIdx) -> partial bloom per partition, merged by key.
-    // Shuffle volume is #files × #cols sketches, never data rows.
-    val partials = df.rdd.mapPartitions { it =>
-      val acc = scala.collection.mutable.HashMap
-        .empty[(String, Int), BloomFilter]
-      it.foreach { row =>
-        val file = fileName(row.getString(0))
-        var i = 0
-        while (i < colArr.length) {
-          val v = row.get(i + 1)
-          if (v != null) {
-            val b = acc.getOrElseUpdate((file, i), BloomFilter.create(
-              math.max(1L, rowsByFile.getOrElse(file, defaultRows)), fpp))
-            put(b, v)
-          }
-          i += 1
-        }
-      }
-      acc.iterator
-    }.reduceByKey((a, b) => a.mergeInPlace(b))
-    val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(absDir,
-      s".tmp-bloom-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = new DataOutputStream(f.create(tmp, true))
-    try {
-      out.writeInt(Magic)
-      out.writeDouble(fpp)
-      // stream one merged bloom at a time — driver memory is one
-      // sketch, not the commit's worth of them
-      partials.toLocalIterator.foreach { case ((file, ci), bloom) =>
-        out.writeUTF(file)
-        out.writeUTF(colArr(ci))
-        val bytes = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(bytes)
-        out.writeInt(bytes.size())
-        out.write(bytes.toByteArray)
-      }
-    } finally out.close()
-    val dest = new Path(absDir, SidecarName)
-    f.delete(dest, false)
-    if (!f.rename(tmp, dest))
-      throw new IllegalStateException(s"could not publish $dest")
-  }
-
   /** Index every data dir of the LATEST snapshot that lacks a sidecar
-    * — the backfill form (CREATE BLOOMFILTER INDEX on an existing
-    * table). Incremental by construction: dirs already indexed are
-    * skipped, so steady-state cost after each append is O(the new
-    * dir). Returns the dirs indexed. */
+    * ([[BloomSidecar.ensure]]). Each file's bloom is sized exactly from
+    * its manifest row count — zero extra counting; a file the stats do
+    * not cover is sized for a million rows. Returns the dirs indexed. */
   def ensure(spark: SparkSession, path: String, cols: Seq[String],
-      fpp: Double = 0.01): Seq[String] = {
-    val commit = TableLog.history(spark, path).lastOption
-      .getOrElse(throw new IllegalArgumentException(s"no commits at $path"))
-    val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val rowsByFile = commit.stats
-      .map(s => fileName(s.file) -> s.rows).toMap
-    val todo = commit.dirs.filterNot(d =>
-      f.exists(new Path(s"$path/$d", SidecarName)))
-    todo.foreach(d => index(spark, path, d, cols, rowsByFile, fpp))
-    todo
-  }
+      fpp: Double = 0.01): Seq[String] =
+    sidecar.ensure(spark, path, cols, fpp, put) { commit =>
+      val rowsByFile = commit.stats
+        .map(s => BloomSidecar.fileName(s.file) -> s.rows).toMap
+      file => math.max(1L, rowsByFile.getOrElse(file, 1000000L))
+    }
 
-  private def fileName(p: String): String =
-    p.substring(p.lastIndexOf('/') + 1)
-
-  /** Sidecar entries for one data dir: file name -> col -> bloom.
-    * `None` when the dir has no sidecar (then nothing can be pruned
-    * by bloom there — conservative). */
-  def load(spark: SparkSession, path: String,
-      dirRel: String): Option[Map[String, Map[String, BloomFilter]]] = {
-    val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(s"$path/$dirRel", SidecarName)
-    if (!f.exists(p)) return None
-    val in = new DataInputStream(f.open(p))
-    try {
-      require(in.readInt() == Magic, s"$p is not a bloom sidecar")
-      in.readDouble() // fpp, informational
-      val acc = scala.collection.mutable.HashMap
-        .empty[String, Map[String, BloomFilter]]
-      while (in.available() > 0) {
-        val file = in.readUTF()
-        val c = in.readUTF()
-        val n = in.readInt()
-        val bytes = new Array[Byte](n)
-        in.readFully(bytes)
-        val bloom = BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-        acc(file) = acc.getOrElse(file, Map.empty) + (c -> bloom)
-      }
-      Some(acc.toMap)
-    } finally in.close()
-  }
-
-  /** Would file `file` (manifest-relative, `dir/part-...parquet`)
-    * possibly contain `value` in `colName`? True when no bloom covers
-    * the file/column (pruning is only ever conservative). */
-  private[lake] def fileMightContain(
-      loaded: Map[String, Option[Map[String, Map[String, BloomFilter]]]],
-      file: String, colName: String, value: Any): Boolean = {
-    val dir = file.substring(0, file.lastIndexOf('/'))
-    loaded.getOrElse(dir, None)
-      .flatMap(_.get(fileName(file)))
-      .flatMap(_.get(colName))
-      .forall(mightContain(_, value))
-  }
-
-  /** Load the sidecars of every dir in `commit` once (keyed by dir)
-    * for repeated [[fileMightContain]] probes. */
-  private[lake] def loadAll(spark: SparkSession, path: String,
-      commit: TableLog.Commit)
-      : Map[String, Option[Map[String, Map[String, BloomFilter]]]] =
-    commit.dirs.map(d => d -> load(spark, path, d)).toMap
+  /** Keep predicate for [[TableLog.readWhereEq]]: could the file hold
+    * `value` in `colName`? True when no bloom covers the file/column. */
+  private[lake] def keep(spark: SparkSession, path: String,
+      commit: TableLog.Commit, colName: String,
+      value: Any): TableStats.FileStats => Boolean =
+    sidecar.keep(spark, path, commit, colName)(mightContain(_, value))
 }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.types._
   * `count(*)` / `count(col)` / `min(col)` / `max(col)` / range counts
   * from the manifest's file statistics, opening only the data files the
   * stats cannot vouch for. This is the aggregate analogue of
-  * [[TableLog.readWhere]]'s data skipping, and the same design as
+  * [[TableLog.readWhere]]'s data skipping over the same scan set
+  * ([[TableLog.scanPaths]]), and the same design as
   * Iceberg/Delta metadata queries (reference behavior: Athena resolving
   * `count(*)` from Glue partition metadata, `athena/ddl.sql`): at
   * 100 TB a profile that scans is a table-length job; resolved from the
@@ -82,20 +83,20 @@ object StatsAgg {
   def profileColumn(spark: SparkSession, path: String, colName: String,
       version: Option[Int] = None): ColProfile = {
     val commit = TableLog.resolve(spark, path, version)
-    val (meta, scan) =
-      commit.stats.partition(resolvable(_, colName, needBounds = true))
+    val vouched: TableStats.FileStats => Boolean =
+      resolvable(_, colName, needBounds = true)
+    val meta = commit.stats.filter(vouched)
     val metaCnt = meta.map(f => f.rows - f.cols(colName).nulls).sum
     val metaBounds = meta.flatMap { f =>
       val cs = f.cols(colName)
       for { mn <- cs.min; mx <- cs.max } yield (cs.typ, mn, mx)
     }
     // files the manifest doesn't cover at all join the scan set
-    val scanPaths = scan.map(f => s"$path/${f.file}") ++
-      TableLog.untrackedDirPaths(commit, path)
+    val scanPaths = TableLog.scanPaths(commit, path, f => !vouched(f))
     val (scanCnt, scanMin, scanMax): (Long, Option[Any], Option[Any]) =
       if (scanPaths.isEmpty) (0L, None, None)
       else {
-        val r = TableLog.readDirsAligned(spark, commit, path, scanPaths)
+        val r = TableLog.readKept(spark, path, commit, scanPaths)
           .agg(count(col(colName)), min(col(colName)), max(col(colName)))
           .head()
         (r.getLong(0), Option(r.get(1)), Option(r.get(2)))
@@ -155,11 +156,9 @@ object StatsAgg {
   def countWhere(spark: SparkSession, path: String, colName: String,
       lo: Any, hi: Any, version: Option[Int] = None): Long = {
     val commit = TableLog.resolve(spark, path, version)
-    val residual = col(colName).between(lit(lo), lit(hi))
-    if (commit.stats.isEmpty)
-      return TableLog.read(spark, path, version).where(residual).count()
-    val kept = commit.stats.filter(TableStats.mightMatch(_, colName, lo, hi))
-    val (contained, boundary) = kept.partition { f =>
+    val kept: TableStats.FileStats => Boolean =
+      TableStats.mightMatch(_, colName, lo, hi)
+    def contained(f: TableStats.FileStats): Boolean =
       f.cols.get(colName) match {
         case Some(cs) if cs.nulls >= 0L && cs.typ != "double" =>
           (for {
@@ -170,14 +169,16 @@ object StatsAgg {
             TableStats.cmp(cs.typ, mx, h) <= 0).getOrElse(false)
         case _ => false
       }
-    }
-    val metaCnt = contained.map(f => f.rows - f.cols(colName).nulls).sum
-    val scanPaths = boundary.map(f => s"$path/${f.file}") ++
-      TableLog.untrackedDirPaths(commit, path)
+    val metaCnt = commit.stats.filter(f => kept(f) && contained(f))
+      .map(f => f.rows - f.cols(colName).nulls).sum
+    // boundary files, and (stats-less or stats-partial snapshots) the
+    // untracked dirs, are scanned with the residual filter
+    val scanPaths =
+      TableLog.scanPaths(commit, path, f => kept(f) && !contained(f))
     val scanCnt =
       if (scanPaths.isEmpty) 0L
-      else TableLog.readDirsAligned(spark, commit, path, scanPaths)
-        .where(residual).count()
+      else TableLog.readKept(spark, path, commit, scanPaths)
+        .where(col(colName).between(lit(lo), lit(hi))).count()
     metaCnt + scanCnt
   }
 

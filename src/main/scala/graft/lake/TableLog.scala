@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
 
 import graft.quality.Expectations
@@ -312,32 +313,6 @@ object TableLog {
     case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
   }
 
-  /** Fallback-path form of [[readDirs]] for PRUNED reads of
-    * pre-schema-tracking manifests: footer-merge over the kept files
-    * can miss a column present only in pruned files, so align to the
-    * full snapshot's inferred schema with null-backfill. Manifests
-    * with a recorded schema never take this path — the parquet reader
-    * null-backfills against the recorded schema directly. */
-  private[lake] def readDirsAligned(spark: SparkSession, commit: Commit,
-      path: String, kept: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    commit.schema match {
-      case Some(_) => readDirs(spark, commit, kept)
-      case None =>
-        val snapshot = readDirs(spark, commit,
-          commit.dirs.map(d => s"$path/$d")).schema
-        val pruned = spark.read.option("mergeSchema", "true").parquet(kept: _*)
-        val present = pruned.columns.toSet
-        pruned.select(snapshot.fields.map { fld =>
-          if (present(fld.name)) col(fld.name)
-          else lit(null).cast(fld.dataType).as(fld.name)
-        }.toIndexedSeq: _*)
-    }
-  }
-
-  /** Metadata-only row count from manifest stats — `SELECT count(*)`
-    * without opening a single data file. `None` when the snapshot
-    * predates stats collection (then count the ordinary way). */
   /** Rows carried by `commit`'s dirs that are NOT in `prevDirs`,
     * resolved from manifest file stats alone — lets a foreachBatch
     * sink report "rows appended this commit" without re-evaluating
@@ -351,6 +326,9 @@ object TableLog {
     if (counted.isEmpty) None else Some(counted.map(_.rows).sum)
   }
 
+  /** Metadata-only row count from manifest stats — `SELECT count(*)`
+    * without opening a single data file. `None` when the snapshot
+    * predates stats collection (then count the ordinary way). */
   def countRows(spark: SparkSession, path: String,
       version: Option[Int] = None): Option[Long] = {
     val commit = resolve(spark, path, version)
@@ -360,13 +338,6 @@ object TableLog {
     else Some(commit.stats.map(_.rows).sum)
   }
 
-  /** Data-skipping scan: `read(...).filter(col BETWEEN lo AND hi)`, but
-    * files whose manifest [min, max] bounds exclude the interval are
-    * never OPENED — at 100 TB with range-clustered layout (ingestion
-    * time, [[commitOptimize]] Z-order) this is the difference between
-    * scanning a day and scanning the table. The residual filter is
-    * still applied, so results are exact regardless of stats quality;
-    * snapshots without stats degrade to an ordinary filtered scan. */
   /** Dirs of this snapshot with NO stats coverage at all (carried
     * forward from a pre-stats manifest). A pruned read must always
     * keep them: they have no bounds to prune on, and keying the scan
@@ -380,27 +351,76 @@ object TableLog {
       .map(d => s"$path/$d")
   }
 
-  def readWhere(spark: SparkSession, path: String, colName: String,
-      lo: Any, hi: Any, version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val commit = resolve(spark, path, version)
-    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
-    val residual = col(colName).between(lit(lo), lit(hi))
-    if (commit.stats.isEmpty)
-      return read(spark, path, version).where(residual)
-    val kept = commit.stats
-      .filter(TableStats.mightMatch(_, colName, lo, hi))
-      .map(f => s"$path/${f.file}") ++ untrackedDirPaths(commit, path)
-    if (kept.isEmpty) read(spark, path, version).where(lit(false))
+  // ---- data skipping: one scan set, one pruned read ----
+
+  /** The paths a pruned scan of `commit` opens: every stats-tracked file
+    * `keep` admits, plus every dir without stats ([[untrackedDirPaths]];
+    * for a stats-less snapshot, all of them). The one place a probe's
+    * files are chosen: the pruned reads, their reports and [[StatsAgg]]
+    * all take their scan set from here. */
+  private[lake] def scanPaths(commit: Commit, path: String,
+      keep: TableStats.FileStats => Boolean): Seq[String] =
+    commit.stats.filter(keep).map(f => s"$path/${f.file}") ++
+      untrackedDirPaths(commit, path)
+
+  /** The rows of `kept`, a [[scanPaths]] list of `commit`, under the
+    * same union-schema contract as [[read]]: the kept files may span a
+    * schema evolution, and a column present only in PRUNED files must
+    * still appear (null-backfilled), or a pruned read would differ from
+    * `read().filter()`. With a recorded snapshot schema the parquet
+    * reader null-backfills itself; only pruned reads of pre-schema
+    * manifests pay a footer-merge and align to the full snapshot's
+    * inferred schema. An empty list reads as no rows. Uses the resolved
+    * commit only — never lists the log again. */
+  private[lake] def readKept(spark: SparkSession, path: String,
+      commit: Commit, kept: Seq[String]): DataFrame =
+    if (kept.isEmpty) readCommit(spark, path, commit).where(lit(false))
+    // a stats-less snapshot keeps every dir: nothing was pruned away
+    else if (commit.schema.nonEmpty || commit.stats.isEmpty)
+      readDirs(spark, commit, kept)
     else {
-      // same union-schema contract as read(): the kept files may span a
-      // schema evolution, and a column present only in PRUNED files must
-      // still appear (null-backfilled) or readWhere != read().filter().
-      // With a recorded snapshot schema the parquet reader does the
-      // null-backfill itself; only pre-schema manifests pay footer-merge.
-      readDirsAligned(spark, commit, path, kept).where(residual)
+      val snapshot = readCommit(spark, path, commit).schema
+      val pruned = spark.read.option("mergeSchema", "true").parquet(kept: _*)
+      val present = pruned.columns.toSet
+      pruned.select(snapshot.fields.map { fld =>
+        if (present(fld.name)) col(fld.name)
+        else lit(null).cast(fld.dataType).as(fld.name)
+      }.toIndexedSeq: _*)
     }
+
+  /** A data-skipping read: resolve the snapshot once, open only the
+    * [[scanPaths]] that `keep` (built from the resolved commit) admits,
+    * and filter by `residual`, so results are exact whatever the stats
+    * and sidecars say. */
+  private def prunedRead(spark: SparkSession, path: String,
+      version: Option[Int], residual: Column)(
+      keep: Commit => TableStats.FileStats => Boolean): DataFrame = {
+    val commit = resolve(spark, path, version)
+    readKept(spark, path, commit, scanPaths(commit, path, keep(commit)))
+      .where(residual)
   }
+
+  /** (files kept, files total) of a pruned scan: both counted from the
+    * [[scanPaths]] list its read opens, total with nothing pruned. */
+  private def pruneCounts(spark: SparkSession, path: String,
+      version: Option[Int])(
+      keep: Commit => TableStats.FileStats => Boolean): (Int, Int) = {
+    val commit = resolve(spark, path, version)
+    (scanPaths(commit, path, keep(commit)).size,
+      scanPaths(commit, path, _ => true).size)
+  }
+
+  /** Data-skipping scan: `read(...).filter(col BETWEEN lo AND hi)`, but
+    * files whose manifest [min, max] bounds exclude the interval are
+    * never OPENED — at 100 TB with range-clustered layout (ingestion
+    * time, [[commitOptimize]] Z-order) this is the difference between
+    * scanning a day and scanning the table. The residual filter is
+    * still applied, so results are exact regardless of stats quality;
+    * snapshots without stats degrade to an ordinary filtered scan. */
+  def readWhere(spark: SparkSession, path: String, colName: String,
+      lo: Any, hi: Any, version: Option[Int] = None): DataFrame =
+    prunedRead(spark, path, version, col(colName).between(lit(lo), lit(hi)))(
+      _ => TableStats.mightMatch(_, colName, lo, hi))
 
   /** Set-valued data skipping: `read(...).filter(col IN values)`, but a
     * file is OPENED only when its [min, max] bounds admit at least one
@@ -410,19 +430,14 @@ object TableLog {
     * exactness as [[readWhere]]. */
   def readWhereIn(spark: SparkSession, path: String, colName: String,
       values: Seq[Any], version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(values.nonEmpty, "readWhereIn needs at least one value")
-    val commit = resolve(spark, path, version)
-    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
-    val residual = col(colName).isin(values: _*)
-    if (commit.stats.isEmpty)
-      return read(spark, path, version).where(residual)
-    val kept = commit.stats
-      .filter(f => values.exists(v => TableStats.mightMatch(f, colName, v, v)))
-      .map(f => s"$path/${f.file}") ++ untrackedDirPaths(commit, path)
-    if (kept.isEmpty) read(spark, path, version).where(lit(false))
-    else readDirsAligned(spark, commit, path, kept).where(residual)
+    prunedRead(spark, path, version, col(colName).isin(values: _*))(
+      _ => anyMightMatch(colName, values))
   }
+
+  private def anyMightMatch(colName: String, values: Seq[Any])(
+      f: TableStats.FileStats): Boolean =
+    values.exists(v => TableStats.mightMatch(f, colName, v, v))
 
   /** Point-lookup scan with two pruning tiers: a file is OPENED only
     * when its manifest [min, max] bounds admit `value` AND its bloom
@@ -435,20 +450,15 @@ object TableLog {
     * dirs without sidecars prune conservatively (min/max only). */
   def readWhereEq(spark: SparkSession, path: String, colName: String,
       value: Any, version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(value != null, "equality probe value must be non-null")
-    val commit = resolve(spark, path, version)
-    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
-    val residual = col(colName) === lit(value)
-    if (commit.stats.isEmpty)
-      return read(spark, path, version).where(residual)
-    val blooms = BloomIndex.loadAll(spark, path, commit)
-    val kept = commit.stats
-      .filter(f => TableStats.mightMatch(f, colName, value, value) &&
-        BloomIndex.fileMightContain(blooms, f.file, colName, value))
-      .map(f => s"$path/${f.file}") ++ untrackedDirPaths(commit, path)
-    if (kept.isEmpty) read(spark, path, version).where(lit(false))
-    else readDirsAligned(spark, commit, path, kept).where(residual)
+    prunedRead(spark, path, version, col(colName) === lit(value))(
+      eqKeep(spark, path, colName, value))
+  }
+
+  private def eqKeep(spark: SparkSession, path: String, colName: String,
+      value: Any)(commit: Commit): TableStats.FileStats => Boolean = {
+    val bloom = BloomIndex.keep(spark, path, commit, colName, value)
+    f => TableStats.mightMatch(f, colName, value, value) && bloom(f)
   }
 
   /** Substring-search scan (`LIKE '%needle%'`) with trigram-bloom file
@@ -461,32 +471,18 @@ object TableLog {
     * regardless. */
   def readWhereContains(spark: SparkSession, path: String, colName: String,
       needle: String, version: Option[Int] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{col, lit}
     require(needle != null && needle.nonEmpty, "needle must be non-empty")
-    val commit = resolve(spark, path, version)
-    require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
-    val residual = col(colName).contains(needle)
-    if (commit.stats.isEmpty || needle.length < TextIndex.MinNeedleLength)
-      return read(spark, path, version).where(residual)
-    val tris = TextIndex.loadAll(spark, path, commit)
-    val kept = commit.stats
-      .filter(f => TextIndex.fileMightContainNeedle(tris, f.file, colName, needle))
-      .map(f => s"$path/${f.file}") ++ untrackedDirPaths(commit, path)
-    if (kept.isEmpty) read(spark, path, version).where(lit(false))
-    else readDirsAligned(spark, commit, path, kept).where(residual)
+    prunedRead(spark, path, version, col(colName).contains(needle))(
+      TextIndex.keep(spark, path, _, colName, needle))
   }
 
   /** (files kept, files total) a [[readWhereContains]] probe would
     * open — the observability hook the trigram-pruning spec asserts. */
   def pruneReportContains(spark: SparkSession, path: String,
       colName: String, needle: String,
-      version: Option[Int] = None): (Int, Int) = {
-    val commit = resolve(spark, path, version)
-    val tris = TextIndex.loadAll(spark, path, commit)
-    (commit.stats.count(f =>
-      TextIndex.fileMightContainNeedle(tris, f.file, colName, needle)),
-      commit.stats.size)
-  }
+      version: Option[Int] = None): (Int, Int) =
+    pruneCounts(spark, path, version)(
+      TextIndex.keep(spark, path, _, colName, needle))
 
   /** (files kept by min/max only, files kept by min/max + bloom,
     * files total) that a [[readWhereEq]] probe would consider — the
@@ -494,32 +490,23 @@ object TableLog {
   def pruneReportEq(spark: SparkSession, path: String, colName: String,
       value: Any, version: Option[Int] = None): (Int, Int, Int) = {
     val commit = resolve(spark, path, version)
-    val ranged = commit.stats
-      .filter(TableStats.mightMatch(_, colName, value, value))
-    val blooms = BloomIndex.loadAll(spark, path, commit)
-    (ranged.size,
-      ranged.count(f =>
-        BloomIndex.fileMightContain(blooms, f.file, colName, value)),
-      commit.stats.size)
+    def kept(keep: TableStats.FileStats => Boolean) =
+      scanPaths(commit, path, keep).size
+    (kept(TableStats.mightMatch(_, colName, value, value)),
+      kept(eqKeep(spark, path, colName, value)(commit)), kept(_ => true))
   }
 
   /** (files kept, files total) that [[readWhereIn]] would open. */
   def pruneReportIn(spark: SparkSession, path: String, colName: String,
-      values: Seq[Any], version: Option[Int] = None): (Int, Int) = {
-    val commit = resolve(spark, path, version)
-    (commit.stats.count(f =>
-      values.exists(v => TableStats.mightMatch(f, colName, v, v))),
-      commit.stats.size)
-  }
+      values: Seq[Any], version: Option[Int] = None): (Int, Int) =
+    pruneCounts(spark, path, version)(_ => anyMightMatch(colName, values))
 
   /** (files kept, files total) that [[readWhere]] would open — the
     * observability hook the pruning spec asserts on. */
   def pruneReport(spark: SparkSession, path: String, colName: String,
-      lo: Any, hi: Any, version: Option[Int] = None): (Int, Int) = {
-    val commit = resolve(spark, path, version)
-    val total = commit.stats.size
-    (commit.stats.count(TableStats.mightMatch(_, colName, lo, hi)), total)
-  }
+      lo: Any, hi: Any, version: Option[Int] = None): (Int, Int) =
+    pruneCounts(spark, path, version)(
+      _ => TableStats.mightMatch(_, colName, lo, hi))
 
   /** Optimize-write: right-size the output file count from the
     * optimizer's size estimate BEFORE writing — no extra Spark job, no
@@ -972,10 +959,13 @@ object TableLog {
       .getOrElse(throw new IllegalArgumentException(s"version $v not found"))
     var attempts = 0
     while (attempts < MaxCommitAttempts) {
-      val next = latestVersion(spark, path).get + 1
+      // one log read per attempt: the version and the clamped timestamp
+      // come from the same latest commit
+      val last = resolve(spark, path, None)
+      val next = last.version + 1
       // metadata rolls back with the data: the restored snapshot's
       // constraint set (and schema) is what validated its rows
-      val ts = monotonicNow(history(spark, path).lastOption)
+      val ts = monotonicNow(Some(last))
       if (writeManifest(spark, path, next, "rollback", target.dirs,
           target.stats, target.schemaJson, target.constraints, ts))
         return Commit(next, "rollback", target.dirs, target.stats,

@@ -1,11 +1,6 @@
 package graft.lake
 
-import java.io.{DataInputStream, DataOutputStream}
-
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.{col, input_file_name}
-import org.apache.spark.util.sketch.BloomFilter
 
 /** Per-file TRIGRAM bloom index for substring-search file skipping —
   * the pruning tier for `LIKE '%needle%'`, where both min/max stats
@@ -20,16 +15,13 @@ import org.apache.spark.util.sketch.BloomFilter
   * skipping test. False positives only ever cost an extra file read —
   * the residual `contains` filter keeps results exact.
   *
-  * Same layout contract as [[BloomIndex]]: one `_trigram.idx` sidecar
-  * inside each immutable data directory (underscore-ignored by
-  * parquet scans, travels with carried-forward dirs, vacuumed with its
-  * dir), built in one column-pruned pass over the directory, partial
-  * blooms shuffled as #files × #cols sketches — never data rows.
+  * Same sidecar format as [[BloomIndex]] ([[BloomSidecar]]): one
+  * `_trigram.idx` per data directory, built in one column-pruned pass
+  * over the directory.
   */
 object TextIndex {
 
-  private val SidecarName = "_trigram.idx"
-  private val Magic = 0x47545249 // "GTRI"
+  private val sidecar = new BloomSidecar("_trigram.idx", 0x47545249) // "GTRI"
 
   /** Probes shorter than a trigram can't use the index (they have no
     * trigram to test) and fall back to a full scan. */
@@ -40,120 +32,28 @@ object TextIndex {
     if (s == null || s.length < 3) Iterator.empty
     else (0 to s.length - 3).iterator.map(i => s.substring(i, i + 3))
 
-  /** Build the sidecar for one data directory of `path`. Bloom
-    * capacity is the expected DISTINCT trigram count per file — for
-    * natural text this saturates around tens of thousands regardless
-    * of row count (trigram space, not corpus size). Idempotent:
-    * rebuild replaces the sidecar atomically. */
-  def index(spark: SparkSession, path: String, dirRel: String,
-      cols: Seq[String], fpp: Double = 0.01,
-      expectedTrigrams: Long = 200000L): Unit = {
-    require(cols.nonEmpty, "need at least one column to index")
-    val absDir = s"$path/$dirRel"
-    val df = spark.read.parquet(absDir)
-      .select(input_file_name().as("__file") +: cols.map(col): _*)
-    val colArr = cols.toArray
-    val partials = df.rdd.mapPartitions { it =>
-      val acc = scala.collection.mutable.HashMap
-        .empty[(String, Int), BloomFilter]
-      it.foreach { row =>
-        val file = fileName(row.getString(0))
-        var i = 0
-        while (i < colArr.length) {
-          val v = row.get(i + 1)
-          if (v != null) {
-            val b = acc.getOrElseUpdate((file, i),
-              BloomFilter.create(expectedTrigrams, fpp))
-            trigrams(v.toString).foreach(b.putString)
-          }
-          i += 1
-        }
-      }
-      acc.iterator
-    }.reduceByKey((a, b) => a.mergeInPlace(b))
-    val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new Path(absDir,
-      s".tmp-trigram-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = new DataOutputStream(f.create(tmp, true))
-    try {
-      out.writeInt(Magic)
-      out.writeDouble(fpp)
-      partials.toLocalIterator.foreach { case ((file, ci), bloom) =>
-        out.writeUTF(file)
-        out.writeUTF(colArr(ci))
-        val bytes = new java.io.ByteArrayOutputStream()
-        bloom.writeTo(bytes)
-        out.writeInt(bytes.size())
-        out.write(bytes.toByteArray)
-      }
-    } finally out.close()
-    val dest = new Path(absDir, SidecarName)
-    f.delete(dest, false)
-    if (!f.rename(tmp, dest))
-      throw new IllegalStateException(s"could not publish $dest")
-  }
+  /** Bloom capacity per file: the expected DISTINCT trigram count, which
+    * for natural text saturates around tens of thousands regardless of
+    * row count (trigram space, not corpus size). */
+  private val ExpectedTrigrams = 200000L
 
   /** Index every data dir of the LATEST snapshot that lacks a sidecar
-    * (backfill form; steady-state cost after each append is O(the new
-    * dir)). Returns the dirs indexed. */
+    * ([[BloomSidecar.ensure]]; steady-state cost after each append is
+    * O(the new dir)). Returns the dirs indexed. */
   def ensure(spark: SparkSession, path: String, cols: Seq[String],
-      fpp: Double = 0.01): Seq[String] = {
-    val commit = TableLog.history(spark, path).lastOption
-      .getOrElse(throw new IllegalArgumentException(s"no commits at $path"))
-    val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val todo = commit.dirs.filterNot(d =>
-      f.exists(new Path(s"$path/$d", SidecarName)))
-    todo.foreach(d => index(spark, path, d, cols, fpp))
-    todo
-  }
+      fpp: Double = 0.01): Seq[String] =
+    sidecar.ensure(spark, path, cols, fpp,
+      (b, v) => trigrams(v.toString).foreach(b.putString))(
+      _ => _ => ExpectedTrigrams)
 
-  private def fileName(p: String): String =
-    p.substring(p.lastIndexOf('/') + 1)
-
-  /** Sidecar entries for one data dir: file -> col -> trigram bloom.
-    * None when the dir has no sidecar (conservative: no pruning). */
-  def load(spark: SparkSession, path: String,
-      dirRel: String): Option[Map[String, Map[String, BloomFilter]]] = {
-    val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val p = new Path(s"$path/$dirRel", SidecarName)
-    if (!f.exists(p)) return None
-    val in = new DataInputStream(f.open(p))
-    try {
-      require(in.readInt() == Magic, s"$p is not a trigram sidecar")
-      in.readDouble() // fpp, informational
-      val acc = scala.collection.mutable.HashMap
-        .empty[String, Map[String, BloomFilter]]
-      while (in.available() > 0) {
-        val file = in.readUTF()
-        val c = in.readUTF()
-        val n = in.readInt()
-        val bytes = new Array[Byte](n)
-        in.readFully(bytes)
-        val bloom = BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bytes))
-        acc(file) = acc.getOrElse(file, Map.empty) + (c -> bloom)
-      }
-      Some(acc.toMap)
-    } finally in.close()
-  }
-
-  /** Could file `file` possibly hold a value of `colName` containing
-    * `needle`? False only when the sidecar PROVES some needle trigram
-    * is absent; missing sidecars answer true (conservative). */
-  private[lake] def fileMightContainNeedle(
-      loaded: Map[String, Option[Map[String, Map[String, BloomFilter]]]],
-      file: String, colName: String, needle: String): Boolean = {
-    val dir = file.substring(0, file.lastIndexOf('/'))
-    loaded.getOrElse(dir, None)
-      .flatMap(_.get(fileName(file)))
-      .flatMap(_.get(colName))
-      .forall(b => trigrams(needle).forall(b.mightContainString))
-  }
-
-  /** Load the sidecars of every dir in `commit` once for repeated
-    * [[fileMightContainNeedle]] probes. */
-  private[lake] def loadAll(spark: SparkSession, path: String,
-      commit: TableLog.Commit)
-      : Map[String, Option[Map[String, Map[String, BloomFilter]]]] =
-    commit.dirs.map(d => d -> load(spark, path, d)).toMap
+  /** Keep predicate for [[TableLog.readWhereContains]]: could the file
+    * hold a value of `colName` containing `needle`? False only when the
+    * sidecar PROVES some needle trigram is absent; needles shorter than
+    * a trigram and files without a sidecar are always kept. */
+  private[lake] def keep(spark: SparkSession, path: String,
+      commit: TableLog.Commit, colName: String,
+      needle: String): TableStats.FileStats => Boolean =
+    if (needle.length < MinNeedleLength) _ => true
+    else sidecar.keep(spark, path, commit, colName)(b =>
+      trigrams(needle).forall(b.mightContainString))
 }

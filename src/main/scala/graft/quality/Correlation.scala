@@ -51,6 +51,9 @@ object Correlation {
       .map(_.toLong).getOrElse(256L << 20)
     val twoPhase =
       df.queryExecution.optimizedPlan.stats.sizeInBytes >= twoPhaseMinBytes
+    // frames the two-phase path persists; released once the single
+    // result row is on the driver
+    var cached = Seq.empty[DataFrame]
     if (twoPhase) {
       // ONE tagged value-frequency union for all profiled columns
       // (ranks over NON-NULL values only; attached below with a LEFT
@@ -79,6 +82,7 @@ object Correlation {
       val local = parted
         .withColumn("__lc", coalesce(sum("__c").over(wLoc), lit(0L)))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      cached = Seq(freqAll, local)
       val ptot = local.groupBy("__pid", "__tag").agg(sum("__c").as("__pt"))
         .collect()
         .map(r => (r.getString(1), r.getInt(0)) -> r.getLong(2)).toMap
@@ -124,7 +128,8 @@ object Correlation {
       corr(col(a), col(b)).as(s"__p_${a}__$b"),
       corr(col(s"__r_$a"), col(s"__r_$b")).as(s"__s_${a}__$b"))
     }
-    val one = d.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val one = try d.agg(aggs.head, aggs.tail: _*).collect()(0)
+      finally cached.foreach(_.unpersist())
     pairs.map { case (a, b) =>
       (a, b,
         round6(one.getAs[Double](s"__p_${a}__$b")),

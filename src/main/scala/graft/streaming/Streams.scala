@@ -55,11 +55,12 @@ object Streams {
     * into — or races with — concurrent batch work on the parent
     * session (mutating the shared conf around `start()` would, under
     * the concurrent-domain orchestration this engine runs). */
-  private[streaming] def streamSession(spark: SparkSession,
-      shufflePartitions: Int = StreamShufflePartitions): SparkSession = {
+  private[streaming] def streamSession(spark: SparkSession): SparkSession = {
     val ss = spark.newSession()
-    val n = spark.conf.getOption("graft.stream.statePartitions")
-      .map(_.trim.toInt).getOrElse(shufflePartitions)
+    val n = spark.conf.getOption("graft.stream.statePartitions").map { v =>
+      v.trim.toIntOption.getOrElse(throw new IllegalArgumentException(
+        s"graft.stream.statePartitions must be an integer, got '$v'"))
+    }.getOrElse(StreamShufflePartitions)
     require(n >= 1, s"graft.stream.statePartitions must be >= 1, got $n")
     ss.conf.set("spark.sql.shuffle.partitions", n.toString)
     ss
@@ -132,7 +133,7 @@ object Streams {
     * streaming shuffle-partition setting — isolated from the caller's. */
   def runToTable(spark: SparkSession, outputMode: String)(
       build: SparkSession => DataFrame): DataFrame = {
-    val ss = streamSession(spark, StreamShufflePartitions)
+    val ss = streamSession(spark)
     val sinkName = s"graft_stream_${counter.incrementAndGet()}"
     val q = build(ss).writeStream
       .outputMode(outputMode)
@@ -288,7 +289,7 @@ object Streams {
       targetPath: String, checkpointDir: String,
       glob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = streamSession(spark, StreamShufflePartitions)
+    val ss = streamSession(spark)
     val stream = eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
       .withColumn("dt", to_date(col("ts")))
     val q = stream.writeStream
@@ -318,7 +319,7 @@ object Streams {
       tablePath: String, checkpointDir: String,
       glob: String = "events.parquet",
       maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = streamSession(spark, StreamShufflePartitions)
+    val ss = streamSession(spark)
     val stream = eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
       .withColumn("dt", to_date(col("ts")))
     val q = stream.writeStream

@@ -53,10 +53,13 @@ class CorrelationSpec extends AnyFunSuite {
     val small = Correlation.correlationMatrix(df, Seq("x", "y")).collect()
     spark.conf.set("graft.rank.twoPhaseMinBytes", "0")
     try {
+      spark.catalog.clearCache()
       val twoPhase = Correlation.correlationMatrix(df, Seq("x", "y"))
         .collect()
       assert(twoPhase.toSeq == small.toSeq,
         s"paths disagree: $small vs $twoPhase")
+      // the two-phase path releases the frames it persisted
+      assert(spark.sharedState.cacheManager.isEmpty)
     } finally spark.conf.unset("graft.rank.twoPhaseMinBytes")
   }
 

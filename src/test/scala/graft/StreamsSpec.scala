@@ -189,4 +189,15 @@ class StreamsSpec extends AnyFunSuite {
     assert(afterReplay.count() == distinctIds)
     assert(afterReplay.select("event_id").distinct().count() == distinctIds)
   }
+
+  test("a non-numeric graft.stream.statePartitions fails naming the key") {
+    spark.conf.set("graft.stream.statePartitions", "four")
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Streams.runToTable(spark, "append")(_ => fail("stream session built"))
+      }
+      assert(e.getMessage.contains("graft.stream.statePartitions") &&
+        e.getMessage.contains("'four'"), e.getMessage)
+    } finally spark.conf.unset("graft.stream.statePartitions")
+  }
 }
