@@ -566,9 +566,9 @@ object TableLog {
     (rel, stats)
   }
 
-  /** Append a manifest for `dirs`; an atomic create-if-absent publish
-    * enforces one winner per version (losers retry on the next version
-    * number via [[commit]]).
+  /** Publish `c` as manifest version `c.version`; an atomic
+    * create-if-absent publish enforces one winner per version (losers
+    * retry on the next version number via [[publish]]).
     *
     * Publish is scheme-aware because POSIX `rename` OVERWRITES an
     * existing destination — an exists-then-rename check is a TOCTOU
@@ -585,28 +585,23 @@ object TableLog {
     * store's If-None-Match check (which may surface at create or at
     * close) picks exactly one winner. TableLogStressSpec's mock-S3
     * shim pins this contract under an injected concurrent committer. */
-  private def writeManifest(spark: SparkSession, path: String, v: Int,
-      action: String, dirs: Seq[String],
-      stats: Seq[TableStats.FileStats] = Seq.empty,
-      schemaJson: Option[String] = None,
-      constraints: Seq[Constraint] = Seq.empty,
-      tsMs: Long = System.currentTimeMillis(),
-      inputs: Seq[InputRef] = Seq.empty): Boolean = {
+  private def writeManifest(spark: SparkSession, path: String,
+      c: Commit): Boolean = {
     val f = fs(spark, path)
     f.mkdirs(logDir(path))
-    val bytes = ((action +: dirs) ++
-        Seq("#t\t" + tsMs) ++
-        activeRunId.value.map(r =>
+    val bytes = ((c.action +: c.dirs) ++
+        c.timestampMs.map("#t\t" + _).toSeq ++
+        c.runId.map(r =>
           "#r\t" + java.net.URLEncoder.encode(r, "UTF-8")).toSeq ++
-        inputs.map(i => "#i\t" +
+        c.inputs.map(i => "#i\t" +
           java.net.URLEncoder.encode(i.table, "UTF-8") + "\t" +
           i.version.map(_.toString).getOrElse("-")) ++
-        schemaJson.map("#s\t" + _).toSeq ++
-        constraints.map(k => "#k\t" + k.name + "\t" +
+        c.schemaJson.map("#s\t" + _).toSeq ++
+        c.constraints.map(k => "#k\t" + k.name + "\t" +
           java.net.URLEncoder.encode(k.expr, "UTF-8")) ++
-        TableStats.toLines(stats))
+        TableStats.toLines(c.stats))
       .mkString("\n").getBytes("UTF-8")
-    val dest = manifestPath(path, v)
+    val dest = manifestPath(path, c.version)
     if (conditionalPutSchemes(f.getScheme)) {
       // Object store: no tmp — one conditional full-object put. A
       // failed conditional put leaves nothing behind, and the check
@@ -665,52 +660,83 @@ object TableLog {
     math.max(System.currentTimeMillis(),
       prev.flatMap(_.timestampMs).getOrElse(0L) + 1L)
 
-  /** Optimistic-concurrency commit loop. Each attempt RE-DERIVES the
-    * snapshot via `mkDf` from the attempt's base — the latest commit,
-    * exactly the version its manifest replaces — so a merge that loses
+  /** What one commit attempt hands [[publish]]: the new snapshot's
+    * dirs, stats, schema, constraints and lineage inputs, and the data
+    * dir the attempt wrote, if any (deleted when the publish loses). */
+  private final case class Staged(dirs: Seq[String],
+      stats: Seq[TableStats.FileStats], schemaJson: Option[String],
+      constraints: Seq[Constraint], inputs: Seq[InputRef] = Seq.empty,
+      written: Option[String] = None)
+
+  /** The optimistic-concurrency commit loop every write goes through.
+    * Each attempt lists the log once, pins `prev` — the latest commit,
+    * exactly the version its manifest replaces — and passes it to
+    * `attempt` with the version it would publish. The attempt
+    * RE-DERIVES the new snapshot from `prev`, so a commit that loses
     * the race is recomputed on top of the winner's snapshot, never over
-    * it (lost update). The data is written, then checked
-    * ([[checkWritten]]), then published; a refused or losing attempt's
-    * data directory is deleted, so neither leaks files. */
-  private def commit(spark: SparkSession, path: String, action: String,
-      carryPrevious: Boolean, inputs: Seq[InputRef] = Seq.empty,
-      suite: Option[Expectations.Suite] = None)
-      (mkDf: Option[Commit] => DataFrame): Commit = {
+    * it (lost update); `Left` means nothing to publish, and returns
+    * that commit. Only this loop stamps the version, the clamped
+    * timestamp and the run id, publishes, and deletes a losing
+    * attempt's data dir (a refused one was deleted by
+    * [[checkWritten]]), so no attempt leaks files. */
+  private def publish(spark: SparkSession, path: String, action: String)(
+      attempt: (Option[Commit], Int) => Either[Commit, Staged]): Commit = {
     var attempts = 0
     while (attempts < MaxCommitAttempts) {
-      val prev = history(spark, path)
-      val v = prev.lastOption.map(_.version + 1).getOrElse(1)
-      val df = mkDf(prev.lastOption)
-      val (dir, dirStats) = writeData(spark, path, df, v)
-      val carried = if (carryPrevious) prev.lastOption else None
-      val dirs = Seq(dir) ++ carried.map(_.dirs).getOrElse(Seq.empty)
-      // append carries the previous snapshot's stats forward verbatim —
-      // file paths are table-root-relative and files are immutable
-      val stats = dirStats ++ carried.map(_.stats).getOrElse(Seq.empty)
-      // snapshot schema = previous schema ∪ new data's schema, merged
-      // in memory at commit time (never inferred from footers at read)
-      val schema = Some(unionSchemaJson(
-        carried.flatMap(_.schemaJson), df))
-      // constraints are TABLE properties: they survive overwrite/merge
-      // (which replace data, not metadata), so they come from the
-      // previous commit regardless of carryPrevious
-      val cons = prev.lastOption.map(_.constraints).getOrElse(Seq.empty)
-      checkWritten(spark, path, dir, action,
-        DataType.fromJson(schema.get).asInstanceOf[StructType], suite,
-        // "optimize" is pure layout — same rows, spec-asserted — and
-        // skips the re-validation scan (at 100 TB revalidating a full
-        // rewrite doubles its read cost)
-        if (action == "optimize") Seq.empty else cons)
-      val ts = monotonicNow(prev.lastOption)
-      if (writeManifest(spark, path, v, action, dirs, stats, schema, cons, ts,
-          inputs))
-        return Commit(v, action, dirs, stats, schema, cons, Some(ts), inputs,
-          activeRunId.value)
-      fs(spark, path).delete(new Path(path, dir), true)
+      val prev = history(spark, path).lastOption
+      val v = prev.map(_.version + 1).getOrElse(1)
+      attempt(prev, v) match {
+        case Left(unchanged) => return unchanged
+        case Right(s) =>
+          val c = Commit(v, action, s.dirs, s.stats, s.schemaJson,
+            s.constraints, Some(monotonicNow(prev)), s.inputs,
+            activeRunId.value)
+          if (writeManifest(spark, path, c)) return c
+          s.written.foreach(d => fs(spark, path).delete(new Path(path, d), true))
+      }
       attempts += 1
     }
     throw new IllegalStateException(
-      s"lost the commit race $MaxCommitAttempts times at $path — writer contention")
+      s"lost the $action race $MaxCommitAttempts times at $path — writer contention")
+  }
+
+  /** The latest commit of an attempt that needs an existing table. */
+  private def existing(prev: Option[Commit], path: String): Commit = {
+    require(prev.nonEmpty, s"no commits at $path")
+    prev.get
+  }
+
+  /** A metadata-only attempt: `c`'s dirs, stats and schema verbatim
+    * under `constraints`. */
+  private def carrying(c: Commit,
+      constraints: Seq[Constraint]): Either[Commit, Staged] =
+    Right(Staged(c.dirs, c.stats, c.schemaJson, constraints))
+
+  /** The attempt every data commit shares: write `df` as version `v`'s
+    * new dir on top of `onto`'s dirs — the previous snapshot for an
+    * append, none for a replace — then check it ([[checkWritten]]). */
+  private def writeAttempt(spark: SparkSession, path: String,
+      action: String, inputs: Seq[InputRef],
+      suite: Option[Expectations.Suite], prev: Option[Commit], v: Int,
+      df: DataFrame, onto: Option[Commit]): Either[Commit, Staged] = {
+    val (dir, dirStats) = writeData(spark, path, df, v)
+    // append carries the previous snapshot's stats forward verbatim —
+    // file paths are table-root-relative and files are immutable
+    val stats = dirStats ++ onto.map(_.stats).getOrElse(Seq.empty)
+    // snapshot schema = previous schema ∪ new data's schema, merged
+    // in memory at commit time (never inferred from footers at read)
+    val schema = unionSchemaJson(onto.flatMap(_.schemaJson), df)
+    // constraints are TABLE properties: they survive overwrite/merge
+    // (which replace data, not metadata), so they come from `prev`
+    val cons = prev.map(_.constraints).getOrElse(Seq.empty)
+    checkWritten(spark, path, dir, action,
+      DataType.fromJson(schema).asInstanceOf[StructType], suite,
+      // "optimize" is pure layout — same rows, spec-asserted — and
+      // skips the re-validation scan (at 100 TB revalidating a full
+      // rewrite doubles its read cost)
+      if (action == "optimize") Seq.empty else cons)
+    Right(Staged(dir +: onto.map(_.dirs).getOrElse(Seq.empty), stats,
+      Some(schema), cons, inputs, Some(dir)))
   }
 
   /** Write, then check, then publish: the expectation suite and the
@@ -754,38 +780,29 @@ object TableLog {
       version: Option[Int] = None): Seq[Constraint] =
     resolve(spark, path, version).constraints
 
-  /** Persist a CHECK constraint: validates the EXISTING snapshot (one
-    * aggregate pass — a violating table refuses the constraint), then
-    * commits a metadata-only version carrying data/stats/schema forward
-    * verbatim. Every later commit validates its incoming data against
-    * the constraint set and is rejected atomically on violation —
-    * the enforced-at-write contract of Delta's ADD CONSTRAINT, vs the
-    * one-shot gate of [[commitMergeValidated]]. */
+  /** Persist a CHECK constraint: validates the snapshot the new
+    * manifest will carry (one aggregate pass — a violating table
+    * refuses the constraint), then commits a metadata-only version
+    * carrying data/stats/schema forward verbatim. Every later commit
+    * validates its incoming data against the constraint set and is
+    * rejected atomically on violation — the enforced-at-write contract
+    * of Delta's ADD CONSTRAINT, vs the one-shot gate of a suite-gated
+    * [[commitMerge]]. */
   def addConstraint(spark: SparkSession, path: String, name: String,
       checkExpr: String): Commit = {
     require(name.nonEmpty && !name.contains("\t"), s"bad constraint name '$name'")
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      val last = resolve(spark, path, None)
+    publish(spark, path, "constraint") { (prev, _) =>
+      val last = existing(prev, path)
       require(!last.constraints.exists(_.name == name),
         s"constraint '$name' already exists")
-      val n = Expectations.gate(Seq((read(spark, path),
+      val n = Expectations.gate(Seq((readCommit(spark, path, last),
         Expectations.Suite(s"constraint $name", None, Seq.empty),
         Seq(violationCount(Constraint(name, checkExpr)))))).head.extra.head
       if (n > 0L)
         throw new ConstraintViolationException(Seq(name -> n),
           s"existing data at $path (constraint not added)")
-      val v = last.version + 1
-      val cons = last.constraints :+ Constraint(name, checkExpr)
-      val ts = monotonicNow(Some(last))
-      if (writeManifest(spark, path, v, "constraint", last.dirs, last.stats,
-          last.schemaJson, cons, ts))
-        return Commit(v, "constraint", last.dirs, last.stats,
-          last.schemaJson, cons, Some(ts), runId = activeRunId.value)
-      attempts += 1
+      carrying(last, last.constraints :+ Constraint(name, checkExpr))
     }
-    throw new IllegalStateException(
-      s"lost the constraint race $MaxCommitAttempts times at $path")
   }
 
   /** `NOT NULL` as the standard CHECK form. */
@@ -794,24 +811,13 @@ object TableLog {
 
   /** Remove a constraint by name (metadata-only commit). */
   def dropConstraint(spark: SparkSession, path: String,
-      name: String): Commit = {
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      val last = resolve(spark, path, None)
+      name: String): Commit =
+    publish(spark, path, "constraint") { (prev, _) =>
+      val last = existing(prev, path)
       require(last.constraints.exists(_.name == name),
         s"no constraint named '$name'")
-      val v = last.version + 1
-      val cons = last.constraints.filterNot(_.name == name)
-      val ts = monotonicNow(Some(last))
-      if (writeManifest(spark, path, v, "constraint", last.dirs, last.stats,
-          last.schemaJson, cons, ts))
-        return Commit(v, "constraint", last.dirs, last.stats,
-          last.schemaJson, cons, Some(ts), runId = activeRunId.value)
-      attempts += 1
+      carrying(last, last.constraints.filterNot(_.name == name))
     }
-    throw new IllegalStateException(
-      s"lost the constraint race $MaxCommitAttempts times at $path")
-  }
 
   /** Add `df`'s rows to the table (new snapshot = previous dirs + one
     * new dir; no data rewrite at all). `action` labels the manifest —
@@ -819,32 +825,24 @@ object TableLog {
     * batch id and skip the commit when history already carries it. */
   def commitAppend(spark: SparkSession, path: String, df: DataFrame,
       action: String = "append", inputs: Seq[InputRef] = Seq.empty): Commit =
-    commit(spark, path, action, carryPrevious = true, inputs)(_ => df)
-
-  private def commitReplace(spark: SparkSession, path: String, df: DataFrame,
-      action: String, inputs: Seq[InputRef] = Seq.empty,
-      suite: Option[Expectations.Suite] = None): Commit =
-    commit(spark, path, action, carryPrevious = false, inputs, suite)(_ => df)
+    publish(spark, path, action)((prev, v) =>
+      writeAttempt(spark, path, action, inputs, None, prev, v, df, onto = prev))
 
   /** Replace the table contents with `df`. Old versions remain
     * readable until vacuumed. A `suite` gates the commit on the
     * written files before the manifest publish ([[checkWritten]]): a
     * failed contract throws and leaves the table at its prior version
-    * with no new files. */
-  def commitOverwrite(spark: SparkSession, path: String, df: DataFrame,
-      inputs: Seq[InputRef] = Seq.empty,
-      suite: Option[Expectations.Suite] = None): Commit =
-    commitReplace(spark, path, df, "overwrite", inputs, suite)
-
-  /** [[commitOverwrite]] with a caller-supplied action tag — the
+    * with no new files. A caller-supplied `action` tag is the
     * replay-safe form for foreachBatch sinks: tag the commit with a
     * batch-derived action and skip the batch when `history` already
     * records it (the [[graft.streaming.DriftMonitor]] idempotence
     * pattern, for replace-shaped sinks). */
-  def commitOverwriteTagged(spark: SparkSession, path: String,
-      df: DataFrame, action: String,
-      inputs: Seq[InputRef] = Seq.empty): Commit =
-    commitReplace(spark, path, df, action, inputs)
+  def commitOverwrite(spark: SparkSession, path: String, df: DataFrame,
+      inputs: Seq[InputRef] = Seq.empty,
+      suite: Option[Expectations.Suite] = None,
+      action: String = "overwrite"): Commit =
+    publish(spark, path, action)((prev, v) =>
+      writeAttempt(spark, path, action, inputs, suite, prev, v, df, onto = None))
 
   /** The upsert of `updates` onto `base` — the attempt's pinned merge
     * base, read without re-listing the log. */
@@ -861,13 +859,9 @@ object TableLog {
     * snapshot — all-or-nothing at the manifest rename (unlike dynamic
     * partition overwrite, which commits partition-by-partition). The
     * merge recomputes inside the commit loop, so losing a race means
-    * merging onto the winner's snapshot, never over it. */
-  def commitMerge(spark: SparkSession, path: String, updates: DataFrame,
-      keys: Seq[String], inputs: Seq[InputRef] = Seq.empty): Commit =
-    commit(spark, path, "merge", carryPrevious = false, inputs)(
-      mergeOnto(spark, path, updates, keys))
-
-  /** Expectation-gated MERGE: the merged snapshot is written once,
+    * merging onto the winner's snapshot, never over it.
+    *
+    * A `suite` gates the merge: the merged snapshot is written once,
     * then the data-quality suite is checked on the written files before
     * the manifest publish ([[checkWritten]]) — the merged plan runs
     * once, never once to validate and again to write. A failed contract
@@ -875,12 +869,12 @@ object TableLog {
     * version (the table-format form of the reference's
     * validate-before-publish gate). The check re-runs per attempt
     * against that attempt's merged snapshot. */
-  def commitMergeValidated(spark: SparkSession, path: String,
-      updates: DataFrame, keys: Seq[String],
-      suite: Expectations.Suite,
-      inputs: Seq[InputRef] = Seq.empty): Commit =
-    commit(spark, path, "merge", carryPrevious = false, inputs, Some(suite))(
-      mergeOnto(spark, path, updates, keys))
+  def commitMerge(spark: SparkSession, path: String, updates: DataFrame,
+      keys: Seq[String], inputs: Seq[InputRef] = Seq.empty,
+      suite: Option[Expectations.Suite] = None): Commit =
+    publish(spark, path, "merge")((prev, v) =>
+      writeAttempt(spark, path, "merge", inputs, suite, prev, v,
+        mergeOnto(spark, path, updates, keys)(prev), onto = None))
 
   /** OPTIMIZE as a log commit: rewrite the latest snapshot into
     * `numFiles` Z-ordered files ([[ZOrder.cluster]]) and commit the
@@ -889,13 +883,14 @@ object TableLog {
     * spec asserts. This is the table-format pairing of
     * [[Compaction]]: compaction targets file COUNT under overwrite
     * semantics, optimize targets file count + clustering under
-    * snapshot semantics. */
+    * snapshot semantics. Like every commit, a lost race re-clusters
+    * the winner's snapshot. */
   def commitOptimize(spark: SparkSession, path: String,
-      zorderCols: (String, String), numFiles: Int): Commit = {
-    val clustered = ZOrder.cluster(
-      read(spark, path), zorderCols._1, zorderCols._2, numFiles)
-    commitReplace(spark, path, clustered, "optimize")
-  }
+      zorderCols: (String, String), numFiles: Int): Commit =
+    publish(spark, path, "optimize")((prev, v) =>
+      writeAttempt(spark, path, "optimize", Seq.empty, None, prev, v,
+        ZOrder.cluster(readCommit(spark, path, existing(prev, path)),
+          zorderCols._1, zorderCols._2, numFiles), onto = None))
 
   /** DELETE as a log commit with data skipping: rows where
     * `colName BETWEEN lo AND hi` are removed, but a data directory whose
@@ -910,12 +905,10 @@ object TableLog {
     * always kept. Like every commit, a lost race recomputes against the
     * winner's snapshot. Old versions stay readable until vacuumed. */
   def commitDelete(spark: SparkSession, path: String, colName: String,
-      lo: Any, hi: Any): Commit = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      val last = resolve(spark, path, None)
-      val v = last.version + 1
+      lo: Any, hi: Any): Commit =
+    publish(spark, path, "delete") { (prev, v) =>
+      import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+      val last = existing(prev, path)
       val statsByDir = last.stats.groupBy(f =>
         last.dirs.find(d => f.file.startsWith(d + "/")).getOrElse(""))
       val (touched, carried) = last.dirs.partition { d =>
@@ -923,58 +916,35 @@ object TableLog {
         fileStats.isEmpty ||
           fileStats.exists(TableStats.mightMatch(_, colName, lo, hi))
       }
-      if (touched.isEmpty)
-        return last // stats prove nothing matches: delete is a no-op
-      val carriedStats = last.stats.filter(f =>
-        carried.exists(d => f.file.startsWith(d + "/")))
-      // snapshot schema on the rewrite read: touched dirs can span a
-      // schema evolution (appends carry pre-evolution dirs forward),
-      // and inferring one file's footer schema here would silently
-      // DROP evolved columns from the rewritten rows — permanent loss
-      // in the post-delete snapshot. A delete never changes the
-      // schema, so the new manifest carries it forward verbatim.
-      val remaining = readDirs(spark, last, touched.map(d => s"$path/$d"))
-        .where(not(coalesce(col(colName).between(lit(lo), lit(hi)), lit(false))))
-      val (dir, dirStats) = writeData(spark, path, remaining, v)
-      val dirs = Seq(dir) ++ carried
-      // delete rewrites a subset of already-validated rows: constraints
-      // carry forward without a re-validation scan
-      val ts = monotonicNow(Some(last))
-      if (writeManifest(spark, path, v, "delete", dirs,
-          dirStats ++ carriedStats, last.schemaJson, last.constraints, ts))
-        return Commit(v, "delete", dirs, dirStats ++ carriedStats,
-          last.schemaJson, last.constraints, Some(ts),
-          runId = activeRunId.value)
-      fs(spark, path).delete(new Path(path, dir), true)
-      attempts += 1
+      if (touched.isEmpty) Left(last) // stats prove nothing matches: a no-op
+      else {
+        val carriedStats = last.stats.filter(f =>
+          carried.exists(d => f.file.startsWith(d + "/")))
+        // snapshot schema on the rewrite read: touched dirs can span a
+        // schema evolution (appends carry pre-evolution dirs forward),
+        // and inferring one file's footer schema here would silently
+        // DROP evolved columns from the rewritten rows — permanent loss
+        // in the post-delete snapshot. A delete never changes the
+        // schema, so the new manifest carries it forward verbatim.
+        val remaining = readDirs(spark, last, touched.map(d => s"$path/$d"))
+          .where(not(coalesce(col(colName).between(lit(lo), lit(hi)), lit(false))))
+        val (dir, dirStats) = writeData(spark, path, remaining, v)
+        // delete rewrites a subset of already-validated rows: constraints
+        // carry forward without a re-validation scan
+        Right(Staged(dir +: carried, dirStats ++ carriedStats,
+          last.schemaJson, last.constraints, written = Some(dir)))
+      }
     }
-    throw new IllegalStateException(
-      s"lost the delete race $MaxCommitAttempts times at $path — writer contention")
-  }
 
   /** Append a version that restores snapshot `v` (history stays
-    * intact; nothing is deleted). */
+    * intact; nothing is deleted). Metadata rolls back with the data:
+    * the restored snapshot's constraint set (and schema) is what
+    * validated its rows. */
   def rollback(spark: SparkSession, path: String, v: Int): Commit = {
     val target = history(spark, path).find(_.version == v)
       .getOrElse(throw new IllegalArgumentException(s"version $v not found"))
-    var attempts = 0
-    while (attempts < MaxCommitAttempts) {
-      // one log read per attempt: the version and the clamped timestamp
-      // come from the same latest commit
-      val last = resolve(spark, path, None)
-      val next = last.version + 1
-      // metadata rolls back with the data: the restored snapshot's
-      // constraint set (and schema) is what validated its rows
-      val ts = monotonicNow(Some(last))
-      if (writeManifest(spark, path, next, "rollback", target.dirs,
-          target.stats, target.schemaJson, target.constraints, ts))
-        return Commit(next, "rollback", target.dirs, target.stats,
-          target.schemaJson, target.constraints, Some(ts),
-          runId = activeRunId.value)
-      attempts += 1
-    }
-    throw new IllegalStateException(
-      s"lost the rollback race $MaxCommitAttempts times")
+    publish(spark, path, "rollback")((_, _) =>
+      carrying(target, target.constraints))
   }
 
   /** Destructive retention: keep the newest `retain` manifests, delete

@@ -28,8 +28,11 @@ object ZOrder {
   private def widthBin(c: Column, min: Double, max: Double, bits: Int): Column = {
     val buckets = 1 << bits
     val hi = if (max > min) max else min + 1.0d
-    (width_bucket(c.cast("double"), lit(min), lit(hi), lit(buckets)) - 1)
-      .cast("long")
+    // width_bucket puts v == hi in overflow bucket buckets + 1: clamp it
+    // into the top bin, or the interleave (which reads only the low
+    // `bits` bits) would sort every column maximum with the minimum
+    least(width_bucket(c.cast("double"), lit(min), lit(hi), lit(buckets)) - 1,
+      lit(buckets - 1L)).cast("long")
   }
 
   /** Interleave the low `bits` bits of two non-negative long columns:

@@ -68,9 +68,14 @@ object Pca {
     * rows where both elements exist and are non-null — a deliberate
     * correction of the old zip_with form, whose count(lit(1)) also
     * counted the null-padded rows of ragged vectors (null-inflated
-    * denominators), and exactly the covar_pop null semantics of the
-    * DuckDB oracle. Elements are read as Number (any numeric array
-    * type works, not just float), nulls skipped per element. */
+    * denominators), the same rows the DuckDB oracle's covar_pop
+    * counts. The products, though, are centered on the global
+    * per-dimension means μ, not on the pair's covering-row means
+    * (x̄, ȳ) that covar_pop uses: on dense vectors the two agree, but
+    * on ragged or null-holed vectors each off-diagonal entry differs
+    * from covar_pop by (x̄ − μᵢ)(ȳ − μⱼ). Elements are read as Number
+    * (any numeric array type works, not just float), nulls skipped per
+    * element. */
   private def covMoments(emb: DataFrame, vecCol: String,
       mu: Array[Double]): Seq[(Long, Long, Double)] = {
     val spark = emb.sparkSession

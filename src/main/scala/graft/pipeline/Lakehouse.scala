@@ -224,8 +224,8 @@ object Lakehouse {
     * table at its prior version. */
   def publishFactToLake(spark: SparkSession, fact: DataFrame,
       lakePath: String): graft.lake.TableLog.Commit =
-    graft.lake.TableLog.commitMergeValidated(
-      spark, lakePath, fact, Seq("store_id", "dt"), factSuite, factInputs)
+    graft.lake.TableLog.commitMerge(spark, lakePath, fact,
+      Seq("store_id", "dt"), factInputs, Some(factSuite))
 
   /** The fact's table name under a lake root, the catalog's, and the
     * lineage edge table's. */

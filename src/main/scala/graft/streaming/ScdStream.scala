@@ -38,8 +38,8 @@ object ScdStream {
       if (hist.isEmpty) Scd.scd2Build(batch, keyCol, attrCol)
       else Scd.scd2Merge(TableLog.read(spark, dimPath), batch,
         keyCol, attrCol)
-    TableLog.commitOverwriteTagged(spark, dimPath, merged,
-      act(batchId)).version
+    TableLog.commitOverwrite(spark, dimPath, merged,
+      action = act(batchId)).version
   }
 
   /** Watch a parquet stream of profile events; each micro-batch's

@@ -3,7 +3,7 @@ package graft
 import java.io.{ByteArrayOutputStream, OutputStream}
 import java.net.URI
 
-import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.util.Progressable
 
@@ -29,6 +29,17 @@ import org.apache.hadoop.util.Progressable
 class MockS3FileSystem extends RawLocalFileSystem {
   override def getUri: URI = URI.create("s3a://mockbucket/")
   override def getScheme: String = "s3a"
+
+  // RawLocalFileSystem's statuses load their permissions lazily from a
+  // java.io.File built from the path URI, which fails for s3a: paths —
+  // so a Spark read listing one data dir threw. Statuses are handed out
+  // with their fields copied and default permissions instead.
+  override def getFileStatus(p: Path): FileStatus = plain(super.getFileStatus(p))
+  override def listStatus(p: Path): Array[FileStatus] =
+    super.listStatus(p).map(plain)
+  private def plain(s: FileStatus): FileStatus = new FileStatus(s.getLen,
+    s.isDirectory, s.getReplication, s.getBlockSize, s.getModificationTime,
+    s.getPath)
 
   override def rename(src: Path, dst: Path): Boolean = {
     val s = pathToFile(src)

@@ -185,15 +185,16 @@ class TableLogSpec extends AnyFunSuite {
     val path = freshPath()
     val suite = Expectations.Suite("orders_contract", None,
       Seq(Expectations.NotNull("v"), Expectations.MinBound("id", 0.0)))
-    TableLog.commitMergeValidated(spark, path,
-      Seq((1L, "a")).toDF("id", "v"), Seq("id"), suite)
+    TableLog.commitMerge(spark, path,
+      Seq((1L, "a")).toDF("id", "v"), Seq("id"), suite = Some(suite))
     assert(TableLog.latestVersion(spark, path).contains(1))
     // a batch with a null payload breaks the contract: no new version,
     // no new data directories
     val dirsBefore = TableLog.history(spark, path).flatMap(_.dirs).toSet
     intercept[IllegalStateException] {
-      TableLog.commitMergeValidated(spark, path,
-        Seq((2L, null.asInstanceOf[String])).toDF("id", "v"), Seq("id"), suite)
+      TableLog.commitMerge(spark, path,
+        Seq((2L, null.asInstanceOf[String])).toDF("id", "v"),
+        Seq("id"), suite = Some(suite))
     }
     // the suite-gated overwrite refuses the same way
     intercept[IllegalStateException] {
@@ -213,20 +214,21 @@ class TableLogSpec extends AnyFunSuite {
     val path = freshPath()
     val suite = Expectations.Suite("orders_contract", None,
       Seq(Expectations.NotNull("v")))
-    TableLog.commitMergeValidated(spark, path,
-      Seq((1L, "a")).toDF("id", "v"), Seq("id"), suite)
+    TableLog.commitMerge(spark, path,
+      Seq((1L, "a")).toDF("id", "v"), Seq("id"), suite = Some(suite))
     TableLog.addConstraint(spark, path, "id_positive", "id > 0")
     val dirsBefore = dataDirsOnDisk(path)
     // passes the suite, breaks the constraint
     val e = intercept[TableLog.ConstraintViolationException] {
-      TableLog.commitMergeValidated(spark, path,
-        Seq((-1L, "b")).toDF("id", "v"), Seq("id"), suite)
+      TableLog.commitMerge(spark, path,
+        Seq((-1L, "b")).toDF("id", "v"), Seq("id"), suite = Some(suite))
     }
     assert(e.byConstraint == Seq("id_positive" -> 1L))
     // breaks both: the suite is reported first
     intercept[IllegalStateException] {
-      TableLog.commitMergeValidated(spark, path,
-        Seq((-2L, null.asInstanceOf[String])).toDF("id", "v"), Seq("id"), suite)
+      TableLog.commitMerge(spark, path,
+        Seq((-2L, null.asInstanceOf[String])).toDF("id", "v"),
+        Seq("id"), suite = Some(suite))
     }
     assert(TableLog.latestVersion(spark, path).contains(2))
     assert(dataDirsOnDisk(path) == dirsBefore)

@@ -25,8 +25,12 @@ class TableLogStressSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, String)] =
     df.as[(Long, String)].collect().toSet
 
+  /** The local directory behind a table path, plain or mock-S3. */
+  private def localDir(path: String): String =
+    new org.apache.hadoop.fs.Path(path).toUri.getPath
+
   private def orphanCheck(path: String): Unit = {
-    val dataDirs = new java.io.File(s"$path/data")
+    val dataDirs = new java.io.File(s"${localDir(path)}/data")
       .listFiles().map(_.getName).toSet
     val referenced = TableLog.history(spark, path)
       .flatMap(_.dirs).map(_.stripPrefix("data/")).toSet
@@ -301,5 +305,129 @@ class TableLogStressSpec extends AnyFunSuite {
       .flatMap(_.dirs).map(_.stripPrefix("data/")).toSet
     assert(dataDirs == referenced,
       s"orphaned dirs: ${dataDirs.diff(referenced)}")
+  }
+
+  /** A fresh table path on the mock-S3 store, whose manifest publish is
+    * the conditional put [[MockS3FileSystem.conditionalPutHook]] can
+    * race. */
+  private def mockS3Table(): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.s3a.impl", "graft.MockS3FileSystem")
+    "s3a://mockbucket" +
+      Files.createTempDirectory("graft_mocks3").resolve("t").toString
+  }
+
+  /** Runs `loser` with `winner` committed inside its first manifest
+    * put, so the loser's first publish loses the race. */
+  private def losingTo[T](winner: => Unit)(loser: => T): T = {
+    @volatile var fired = false
+    MockS3FileSystem.conditionalPutHook = _ =>
+      if (!fired) { fired = true; winner }
+    val result =
+      try loser finally MockS3FileSystem.conditionalPutHook = _ => ()
+    assert(fired, "hook must have injected the concurrent committer")
+    result
+  }
+
+  /** After a lost race: exactly one manifest per version, nothing else
+    * in the log, and no data dir that no manifest references. */
+  private def cleanAfterRace(path: String): Unit = {
+    val logFiles = new java.io.File(s"${localDir(path)}/_graft_log")
+      .listFiles().map(_.getName).toSet
+    assert(logFiles == TableLog.history(spark, path)
+      .map(c => f"v${c.version}%08d.manifest").toSet,
+      s"stray log files: $logFiles")
+    orphanCheck(path)
+  }
+
+  test("lost race: a delete that loses to an append of an in-range row " +
+    "deletes that row too, at winner+1") {
+    val path = mockS3Table()
+    TableLog.commitAppend(spark, path,
+      (1L to 5L).map(i => (i, s"r$i")).toDF("id", "v"))
+    val c = losingTo(TableLog.commitAppend(spark, path,
+        Seq((2L, "late")).toDF("id", "v"))) {
+      TableLog.commitDelete(spark, path, "id", 2L, 3L)
+    }
+    assert(c.version == 3 && c.action == "delete")
+    assert(rows(TableLog.read(spark, path, Some(2))).contains((2L, "late")))
+    assert(rows(TableLog.read(spark, path)) ==
+      Set((1L, "r1"), (4L, "r4"), (5L, "r5")))
+    cleanAfterRace(path)
+  }
+
+  test("lost race: addConstraint that loses to an append of a violating " +
+    "row refuses and leaves the table at the winner's version") {
+    val path = mockS3Table()
+    TableLog.commitAppend(spark, path,
+      (1L to 3L).map(i => (i, s"r$i")).toDF("id", "v"))
+    intercept[TableLog.ConstraintViolationException] {
+      losingTo(TableLog.commitAppend(spark, path,
+          Seq((500L, "big")).toDF("id", "v"))) {
+        TableLog.addConstraint(spark, path, "id_small", "id < 100")
+      }
+    }
+    assert(TableLog.latestVersion(spark, path).contains(2))
+    assert(TableLog.constraints(spark, path).isEmpty)
+    assert(rows(TableLog.read(spark, path)).contains((500L, "big")))
+    cleanAfterRace(path)
+  }
+
+  test("lost race: dropConstraint that loses to addConstraint of a second " +
+    "constraint keeps the second one, at winner+1") {
+    val path = mockS3Table()
+    TableLog.commitAppend(spark, path, Seq((1L, "a")).toDF("id", "v"))
+    TableLog.addConstraint(spark, path, "id_positive", "id > 0")
+    val c = losingTo(TableLog.addNotNull(spark, path, "v")) {
+      TableLog.dropConstraint(spark, path, "id_positive")
+    }
+    assert(c.version == 4)
+    assert(TableLog.constraints(spark, path, Some(3)).map(_.name) ==
+      Seq("id_positive", "v_not_null"))
+    assert(TableLog.constraints(spark, path) ==
+      Seq(TableLog.Constraint("v_not_null", "v IS NOT NULL")))
+    assert(TableLog.history(spark, path).last.dirs ==
+      TableLog.history(spark, path)(2).dirs)
+    cleanAfterRace(path)
+  }
+
+  test("lost race: a rollback that loses to an append publishes the " +
+    "target's dirs, schema and constraints at winner+1") {
+    val path = mockS3Table()
+    TableLog.commitAppend(spark, path, Seq((1L, "a")).toDF("id", "v"))
+    TableLog.addConstraint(spark, path, "id_positive", "id > 0")
+    TableLog.commitAppend(spark, path,
+      Seq((2L, "b", 2.0)).toDF("id", "v", "w"))
+    TableLog.dropConstraint(spark, path, "id_positive")
+    val target = TableLog.history(spark, path)(1)
+    val c = losingTo(TableLog.commitAppend(spark, path,
+        Seq((3L, "c")).toDF("id", "v"))) {
+      TableLog.rollback(spark, path, 2)
+    }
+    assert(c.version == 6 && c.action == "rollback")
+    val last = TableLog.history(spark, path).last
+    assert(last.version == 6)
+    assert(last.dirs == target.dirs)
+    assert(last.schemaJson == target.schemaJson)
+    assert(last.constraints == target.constraints &&
+      target.constraints.map(_.name) == Seq("id_positive"))
+    assert(TableLog.read(spark, path).columns.toSeq == Seq("id", "v"))
+    assert(rows(TableLog.read(spark, path)) == Set((1L, "a")))
+    cleanAfterRace(path)
+  }
+
+  test("lost race: an optimize that loses to an append re-clusters the " +
+    "winner's snapshot, at winner+1") {
+    val path = mockS3Table()
+    val base = (0 until 200).map(i => (i.toLong, (i * 7 % 50).toLong))
+    TableLog.commitAppend(spark, path, base.toDF("a", "b").repartition(4))
+    val c = losingTo(TableLog.commitAppend(spark, path,
+        Seq((1000L, 1000L)).toDF("a", "b"))) {
+      TableLog.commitOptimize(spark, path, ("a", "b"), numFiles = 2)
+    }
+    assert(c.version == 3 && c.action == "optimize")
+    assert(TableLog.read(spark, path).as[(Long, Long)].collect().toSet ==
+      (base :+ ((1000L, 1000L))).toSet)
+    cleanAfterRace(path)
   }
 }

@@ -51,15 +51,16 @@ class ValidatedCommitSpec extends AnyFunSuite {
     val path = s"$root/t"
     val src = s"$root/updates"
     val suite = Suite("contract", None, Seq(NotNull("v"), MinBound("id", 0.0)))
-    TableLog.commitMergeValidated(spark, path,
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"), suite)
+    TableLog.commitMerge(spark, path,
+      Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"), suite = Some(suite))
     TableLog.addConstraint(spark, path, "id_below_100", "id < 100")
     Seq((2L, "B"), (3L, "c")).toDF("id", "v").write.parquet(src)
     val updates = spark.read.parquet(src)
 
     var commit: TableLog.Commit = null
     val scans = executionScans {
-      commit = TableLog.commitMergeValidated(spark, path, updates, Seq("id"), suite)
+      commit = TableLog.commitMerge(spark, path, updates, Seq("id"),
+        suite = Some(suite))
     }
     val newDir = s"$path/${commit.dirs.head}"
     val sourceScans = scans.count(_.exists(_.endsWith("/updates")))
