@@ -289,8 +289,9 @@ object ScaleProbe {
           lens.where(col("h")).select("v"),
           lens.where(!col("h")).select("v"), "v", Some(8.0)).count()
       },
-      // two-phase prefix sum: bucket count grows ×N but stays a tiny
-      // broadcast table; the per-bucket windows are the linear stage
+      // PrefixSum over the doc-id table: the bucket count grows with the
+      // input size estimate (one bucket while it fits one task) but stays
+      // a tiny broadcast table; the per-bucket windows are the linear stage
       "sequence_pack" -> (d =>
         graft.operators.SequencePack.packCoords(d, 512).count()),
       // per-bucket FFD in flatMapGroups over (id, count) pairs only

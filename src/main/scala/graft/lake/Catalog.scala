@@ -75,7 +75,7 @@ object Catalog {
       TableLog.history(spark, path).lastOption.map { c =>
         val schema = c.schema
         val nColumns: Option[Int] = schema.map(_.fields.length)
-        val rowCount: Option[Long] = TableLog.countRows(spark, path)
+        val rowCount: Option[Long] = TableLog.statsRowCount(c, path)
         val fresh: Option[Double] = freshness.flatMap(spec =>
           spec.colFor.get(name)
             .flatMap(statsMaxMs(c, path, _))

@@ -94,10 +94,12 @@ object MaterializedAgg {
   def refresh(spark: SparkSession, srcPath: String, mvPath: String,
       spec: AggSpec, srcName: Option[String] = None): RefreshReport = {
     val srcCommit = TableLog.history(spark, srcPath).lastOption
-    val srcDirs = srcCommit.map(_.dirs).getOrElse(Seq.empty)
-    require(srcDirs.nonEmpty, s"source table at $srcPath has no snapshot")
+    require(srcCommit.exists(_.dirs.nonEmpty),
+      s"source table at $srcPath has no snapshot")
+    val srcDirs = srcCommit.get.dirs
+    val mvCommit = TableLog.history(spark, mvPath).lastOption
     val existing: Option[DataFrame] =
-      TableLog.latestVersion(spark, mvPath).map(_ => TableLog.read(spark, mvPath))
+      mvCommit.map(TableLog.readCommit(spark, mvPath, _))
     // covered dirs: bounded by the source's file-commit count, not data
     val covered: Set[String] = existing
       .map(_.select("__src_dir").distinct()
@@ -107,12 +109,13 @@ object MaterializedAgg {
     val staleDirs = (covered -- srcDirs.toSet).toSeq.sorted
     val reused = srcDirs.filter(covered).sorted
     if (newDirs.isEmpty && staleDirs.isEmpty)
-      return RefreshReport(TableLog.latestVersion(spark, mvPath).get,
-        Seq.empty, Seq.empty, reused)
+      return RefreshReport(mvCommit.get.version, Seq.empty, Seq.empty, reused)
 
     val aggs = partialAggs(spec)
+    // each new dir is read under the SNAPSHOT schema, so a column added
+    // by schema evolution reads as NULL in dirs written before it
     val newPartials = newDirs.map { d =>
-      spark.read.parquet(s"$srcPath/$d")
+      TableLog.readKept(spark, srcPath, srcCommit.get, Seq(s"$srcPath/$d"))
         .groupBy(spec.groupCols.map(col): _*)
         .agg(aggs.head, aggs.tail: _*)
         .withColumn("__src_dir", lit(d))

@@ -275,7 +275,7 @@ object TableLog {
     readCommit(spark, path, resolve(spark, path, version))
 
   /** [[read]] of an already-resolved commit (no log listing). */
-  private def readCommit(spark: SparkSession, path: String,
+  private[lake] def readCommit(spark: SparkSession, path: String,
       commit: Commit): DataFrame = {
     require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
     readDirs(spark, commit, commit.dirs.map(d => s"$path/$d"))
@@ -330,13 +330,15 @@ object TableLog {
     * without opening a single data file. `None` when the snapshot
     * predates stats collection (then count the ordinary way). */
   def countRows(spark: SparkSession, path: String,
-      version: Option[Int] = None): Option[Long] = {
-    val commit = resolve(spark, path, version)
+      version: Option[Int] = None): Option[Long] =
+    statsRowCount(resolve(spark, path, version), path)
+
+  /** [[countRows]] of an already-resolved commit (no log listing). */
+  private[lake] def statsRowCount(commit: Commit, path: String): Option[Long] =
     // stats must cover EVERY dir: a stats-partial snapshot (append onto
     // a pre-stats table) would otherwise report only the tracked rows
     if (commit.stats.isEmpty || untrackedDirPaths(commit, path).nonEmpty) None
     else Some(commit.stats.map(_.rows).sum)
-  }
 
   /** Dirs of this snapshot with NO stats coverage at all (carried
     * forward from a pre-stats manifest). A pruned read must always

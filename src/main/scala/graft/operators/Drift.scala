@@ -753,23 +753,15 @@ object Drift {
     * `(n_a, n_b, a2)`; under H₀, E[A²] ≈ 1 — values ≫ 1 reject.
     *
     * Dataflow: the pooled value-FREQUENCY table (value-cardinality,
-    * the mannWhitneyU recipe) with cumulative half-weight counts via
-    * ordered windows; the (n_a, n_b, N) totals are a 1-row broadcast
-    * stat factor. */
+    * [[TwoSampleRank.pooledFreq]]) with cumulative half-weight counts
+    * from its running sums; the (n_a, n_b, N) totals are a 1-row
+    * broadcast stat factor. */
   def adTwoSample(df: DataFrame, inB: Column, metric: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val f = df.select(inB.as("__b"), metric.cast("double").as("__m"))
-      .where(col("__b").isNotNull && col("__m").isNotNull)
-      .groupBy("__m")
-      .agg(sum(when(!col("__b"), 1L).otherwise(0L)).as("__la"),
-        sum(when(col("__b"), 1L).otherwise(0L)).as("__lb"))
-      .withColumn("__l", col("__la") + col("__lb"))
-    val wCum = Window.orderBy("__m")
-      .rowsBetween(Window.unboundedPreceding, 0)
+    val f = TwoSampleRank.pooledFreq(df, inB, metric)
     val cum = f
-      .withColumn("__Ba", sum("__l").over(wCum) - col("__l") / 2.0)
-      .withColumn("__Ma", sum("__la").over(wCum) - col("__la") / 2.0)
-      .withColumn("__Mb", sum("__lb").over(wCum) - col("__lb") / 2.0)
+      .withColumn("__Ba", col("__l_cum") - col("__l") / 2.0)
+      .withColumn("__Ma", col("__la_cum") - col("__la") / 2.0)
+      .withColumn("__Mb", col("__lb_cum") - col("__lb") / 2.0)
     val tot = f.agg(sum("__la").as("__na"), sum("__lb").as("__nb"),
       sum("__l").as("__N"))
     val j = cum.crossJoin(broadcast(tot))   // 1-row stat factor
@@ -842,21 +834,13 @@ object Drift {
     * 5% critical value 0.461 (the ω² limit distribution).
     *
     * Dataflow: the same pooled value-FREQUENCY table as
-    * [[adTwoSample]] (value-cardinality, one shuffle) with plain
-    * cumulative ECDF windows; one row `(n_a, n_b, t_stat, sig_95)`. */
+    * [[adTwoSample]] (value-cardinality, one shuffle) whose running
+    * cohort counts are the two ECDFs; one row
+    * `(n_a, n_b, t_stat, sig_95)`. */
   def cvmTwoSample(df: DataFrame, inB: Column, metric: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val f = df.select(inB.as("__b"), metric.cast("double").as("__m"))
-      .where(col("__b").isNotNull && col("__m").isNotNull)
-      .groupBy("__m")
-      .agg(sum(when(!col("__b"), 1L).otherwise(0L)).as("__la"),
-        sum(when(col("__b"), 1L).otherwise(0L)).as("__lb"))
-      .withColumn("__l", col("__la") + col("__lb"))
-    val wCum = Window.orderBy("__m")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = f
-      .withColumn("__A", sum("__la").over(wCum))
-      .withColumn("__B", sum("__lb").over(wCum))
+    val f = TwoSampleRank.pooledFreq(df, inB, metric)
+    val cum = f.withColumnRenamed("__la_cum", "__A")
+      .withColumnRenamed("__lb_cum", "__B")
     val tot = f.agg(sum("__la").as("__na"), sum("__lb").as("__nb"),
       sum("__l").as("__N"))
     val naD = col("__na").cast("double")

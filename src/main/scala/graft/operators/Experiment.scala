@@ -59,30 +59,21 @@ object Experiment {
     *
     * Scale shape: ranks come from the pooled VALUE-FREQUENCY table
     * (the [[graft.quality.Correlation]] trick) — one groupBy(value)
-    * with per-variant counts, one ordered window over that value-
-    * cardinality frame, one closing agg. No row-level rank window. */
+    * with per-variant counts, one [[graft.util.PrefixSum]] over that
+    * value-cardinality frame, one closing agg. No row-level rank
+    * window. */
   def mannWhitneyU(units: DataFrame, variant: Column,
       metric: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val freq = units
-      .select(variant.as("__b"), metric.cast("double").as("__m"))
-      .where(col("__b").isNotNull && col("__m").isNotNull)
-      .groupBy("__m")
-      .agg(sum(when(!col("__b"), 1L).otherwise(0L)).as("__ca"),
-        sum(when(col("__b"), 1L).otherwise(0L)).as("__cb"))
-      .withColumn("__t", col("__ca") + col("__cb"))
-    val wCum = Window.orderBy("__m")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = freq.withColumn("__rank",
-      coalesce(sum("__t").over(wCum), lit(0L)) + (col("__t") + 1.0) / 2.0)
+    val ranked = TwoSampleRank.pooledFreq(units, variant, metric)
+      .withColumn("__rank", col("__l_cum") - (col("__l") - 1.0) / 2.0)
     val g = ranked.agg(
-      sum("__ca").as("n_a"),
-      sum("__cb").as("n_b"),
-      sum(col("__rank") * col("__ca")).as("__ra"),
+      sum("__la").as("n_a"),
+      sum("__lb").as("n_b"),
+      sum(col("__rank") * col("__la")).as("__ra"),
       // t as DOUBLE before cubing: a long t³ overflows ANSI arithmetic
       // on corpus-scale tie runs
-      sum(col("__t").cast("double") * col("__t") * col("__t") -
-        col("__t")).as("__ties"))
+      sum(col("__l").cast("double") * col("__l") * col("__l") -
+        col("__l")).as("__ties"))
     val na = col("n_a").cast("double")
     val nb = col("n_b").cast("double")
     val n = na + nb
@@ -1084,15 +1075,12 @@ object Experiment {
     * (group, value)-cardinality join, one 1-row stat factor. */
   def kruskalWallis(df: DataFrame, group: Column,
       metric: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val gv = df.select(group.as("__g"), metric.cast("double").as("__m"))
       .where(col("__g").isNotNull && col("__m").isNotNull)
     val cnt = gv.groupBy("__g", "__m").agg(count(lit(1)).as("__c"))
     val vt = cnt.groupBy("__m").agg(sum("__c").as("__t"))
-    val wCum = Window.orderBy("__m")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = vt.withColumn("__rank",
-      coalesce(sum("__t").over(wCum), lit(0L)) + (col("__t") + 1.0) / 2.0)
+    val ranked = graft.util.PrefixSum.running(vt, "__m", Seq("__t"))
+      .withColumn("__rank", col("__t_cum") - (col("__t") - 1.0) / 2.0)
     val byGroup = cnt.join(ranked.select("__m", "__rank"), "__m")
       .groupBy("__g")
       .agg(sum(col("__rank") * col("__c")).as("__r"),

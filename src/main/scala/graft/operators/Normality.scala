@@ -178,41 +178,56 @@ object Normality {
         sum(col("x") * col("x")).as("__s2"),
         sum(col("x") * col("x") * col("x")).as("__s3"),
         sum(col("x") * col("x") * col("x") * col("x")).as("__s4"))
+    // every intermediate is its own column: inlined into one projection
+    // the transforms repeat mu..m4 so often that the generated method
+    // outgrows what Janino compiles (codegen then falls back). Past m2
+    // each stage is guarded by `ok`, as the inlined form was by the
+    // output's `when(ok, ...)` (ANSI division by zero otherwise throws)
     val n = col("n").cast("double")
-    val mu = col("__s1") / n
-    val m2 = col("__s2") / n - mu * mu
-    val m3 = col("__s3") / n - mu * (col("__s2") / n) * 3.0 +
-      mu * mu * mu * 2.0
-    val m4 = col("__s4") / n - mu * (col("__s3") / n) * 4.0 +
-      mu * mu * (col("__s2") / n) * 6.0 - mu * mu * mu * mu * 3.0
-    val g1 = m3 / pow(m2, 1.5)
-    val b2 = m4 / (m2 * m2)
-    // skewness z (Johnson SU, D'Agostino 1970)
-    val y = g1 * sqrt((n + 1.0) * (n + 3.0) / ((n - 2.0) * 6.0))
+    val Seq(mu, m2, m3, m4, g1, b2, y, w2, z1, xx, aa, z2) =
+      Seq("mu", "m2", "m3", "m4", "g1", "b2", "y", "w2", "z1", "xx", "aa",
+        "z2").map(c => col(s"__$c"))
     val beta2 = lit(3.0) * (n * n + n * 27.0 - 70.0) * (n + 1.0) *
       (n + 3.0) / ((n - 2.0) * (n + 5.0) * (n + 7.0) * (n + 9.0))
-    val w2 = sqrt((beta2 - 1.0) * 2.0) - 1.0
-    val dlt = lit(1.0) / sqrt(log(sqrt(w2)))
-    val alp = sqrt(lit(2.0) / (w2 - 1.0))
-    val z1 = dlt * log(y / alp + sqrt((y / alp) * (y / alp) + 1.0))
-    // kurtosis z (Anscombe–Glynn 1983)
     val eb2 = lit(3.0) * (n - 1.0) / (n + 1.0)
     val vb2 = lit(24.0) * n * (n - 2.0) * (n - 3.0) /
       ((n + 1.0) * (n + 1.0) * (n + 3.0) * (n + 5.0))
-    val xx = (b2 - eb2) / sqrt(vb2)
     val sb1 = lit(6.0) * (n * n - n * 5.0 + 2.0) /
       ((n + 7.0) * (n + 9.0)) *
       sqrt(lit(6.0) * (n + 3.0) * (n + 5.0) /
         (n * (n - 2.0) * (n - 3.0)))
-    val aa = lit(6.0) + lit(8.0) / sb1 *
-      (lit(2.0) / sb1 + sqrt(lit(1.0) + lit(4.0) / (sb1 * sb1)))
-    val z2 = ((lit(1.0) - lit(2.0) / (aa * 9.0)) -
-      cbrt((lit(1.0) - lit(2.0) / aa) /
-        (lit(1.0) + xx * sqrt(lit(2.0) / (aa - 4.0))))) /
-      sqrt(lit(2.0) / (aa * 9.0))
-    val ok = m2 > 0.0 && col("n") > 8
+    val ok = col("__ok")
+    val staged = Seq(
+      "__m3" -> (col("__s3") / n - mu * (col("__s2") / n) * 3.0 +
+        mu * mu * mu * 2.0),
+      "__m4" -> (col("__s4") / n - mu * (col("__s3") / n) * 4.0 +
+        mu * mu * (col("__s2") / n) * 6.0 - mu * mu * mu * mu * 3.0),
+      "__g1" -> m3 / pow(m2, 1.5),
+      "__b2" -> m4 / (m2 * m2),
+      // skewness z (Johnson SU, D'Agostino 1970)
+      "__y" -> g1 * sqrt((n + 1.0) * (n + 3.0) / ((n - 2.0) * 6.0)),
+      "__w2" -> (sqrt((beta2 - 1.0) * 2.0) - 1.0),
+      "__z1" -> {
+        val dlt = lit(1.0) / sqrt(log(sqrt(w2)))
+        val alp = sqrt(lit(2.0) / (w2 - 1.0))
+        dlt * log(y / alp + sqrt((y / alp) * (y / alp) + 1.0))
+      },
+      // kurtosis z (Anscombe–Glynn 1983)
+      "__xx" -> (b2 - eb2) / sqrt(vb2),
+      "__aa" -> (lit(6.0) + lit(8.0) / sb1 *
+        (lit(2.0) / sb1 + sqrt(lit(1.0) + lit(4.0) / (sb1 * sb1)))),
+      "__z2" -> ((lit(1.0) - lit(2.0) / (aa * 9.0)) -
+        cbrt((lit(1.0) - lit(2.0) / aa) /
+          (lit(1.0) + xx * sqrt(lit(2.0) / (aa - 4.0))))) /
+        sqrt(lit(2.0) / (aa * 9.0))
+    ).foldLeft(g
+      .withColumn("__mu", col("__s1") / n)
+      .withColumn("__m2", col("__s2") / n - mu * mu)
+      .withColumn("__ok", m2 > 0.0 && col("n") > 8)) {
+      case (d, (c, e)) => d.withColumn(c, when(ok, e))
+    }
     val k2 = z1 * z1 + z2 * z2
-    g.select(
+    staged.select(
       col("n"),
       round(when(ok, g1), 6).as("skewness"),
       round(when(ok, b2), 6).as("kurtosis"),

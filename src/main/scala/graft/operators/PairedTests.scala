@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Paired-difference tests over the same units measured twice — the
@@ -59,11 +58,8 @@ object PairedTests {
       .groupBy(abs(col("d")).as("__v"))
       .agg(count(lit(1)).as("__c"),
         sum(when(col("d") > 0L, 1L).otherwise(0L)).as("__cp"))
-    val wCum = Window.orderBy("__v")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = freq.withColumn("__rank",
-      coalesce(sum("__c").over(wCum), lit(0L)) +
-        (col("__c") + 1.0) / 2.0)
+    val ranked = graft.util.PrefixSum.running(freq, "__v", Seq("__c"))
+      .withColumn("__rank", col("__c_cum") - (col("__c") - 1.0) / 2.0)
     val stats = ranked.agg(
       sum(col("__rank") * col("__cp")).as("__wp"),
       sum(col("__c") * col("__c") * col("__c") - col("__c"))

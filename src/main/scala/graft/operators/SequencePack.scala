@@ -2,9 +2,9 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 import graft.functions.TextFunctions
+import graft.util.PrefixSum
 
 /** Sequence packing audit — what happens to documents when the corpus
   * is concatenated and chunked into fixed-length training sequences
@@ -22,16 +22,10 @@ import graft.functions.TextFunctions
   * partition clause is a SINGLE-TASK window: every row flows through
   * one reducer, which is the textbook scale-killer this engine bans
   * (same reasoning as the RFM/curriculum approx split, q128/q129).
-  * The classic two-phase distributed prefix sum fixes it:
-  *   1. bucket docs deterministically (`doc_id div bucketSize` —
-  *      doc ids are the stable corpus key), ONE grouped agg to a
-  *      bucket-subtotal table (|buckets| rows, thousands at 100 TB);
-  *   2. cumulative-sum THAT tiny table with a window (driver-scale
-  *      work), broadcast-join the bucket base offsets back;
-  *   3. within-bucket running sum via a window PARTITIONED by bucket
-  *      — parallel across buckets, bounded per task by bucketSize.
-  * The result is bit-identical to the single-task global window (the
-  * oracle states it that way), but every stage is parallel.
+  * The offset is therefore [[graft.util.PrefixSum]] over the doc-id
+  * table: bucketed by doc id (the stable corpus key) once the corpus
+  * outgrows one task, bit-identical to the global window (the oracle
+  * states it that way) at every bucket count.
   */
 object SequencePack {
 
@@ -42,33 +36,15 @@ object SequencePack {
     * docs occupy no span: they land in the sequence at their offset
     * and never cross. */
   def packCoords(docs: DataFrame, seqLen: Int,
-      textCol: String = "text", bucketSize: Int = 4096,
-      carryCols: Seq[String] = Nil): DataFrame = {
+      textCol: String = "text", carryCols: Seq[String] = Nil): DataFrame = {
     require(seqLen >= 1, "seqLen must be positive")
-    require(bucketSize >= 1, "bucketSize must be positive")
     val nTok = size(filter(TextFunctions.tokens(col(textCol)),
       w => w =!= "")).cast("long")
     val base = docs.select(col("doc_id") +: nTok.as("n_tokens") +:
-      (col("doc_id") / bucketSize).cast("long").as("__bucket") +:
       carryCols.map(col): _*)
-
-    // phase 1+2: bucket subtotals, cumulative over the tiny table
-    val bucketTotals = base.groupBy("__bucket")
-      .agg(sum("n_tokens").as("__btok"))
-    val wB = Window.orderBy("__bucket")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bucketBase = bucketTotals
-      .withColumn("__base", coalesce(sum("__btok").over(wB), lit(0L)))
-      .select("__bucket", "__base")
-
-    // phase 3: within-bucket running sum, parallel across buckets
-    val wIn = Window.partitionBy("__bucket").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, -1)
     val lastTok = col("off") + greatest(col("n_tokens") - 1L, lit(0L))
-    base
-      .join(broadcast(bucketBase), "__bucket")
-      .withColumn("off",
-        col("__base") + coalesce(sum("n_tokens").over(wIn), lit(0L)))
+    PrefixSum.running(base, "doc_id", Seq("n_tokens"))
+      .withColumn("off", col("n_tokens_cum") - col("n_tokens"))
       .withColumn("first_seq", (col("off") / seqLen).cast("long"))
       .withColumn("last_seq", (lastTok / seqLen).cast("long"))
       .withColumn("crosses", col("last_seq") > col("first_seq"))

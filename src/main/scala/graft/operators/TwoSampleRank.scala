@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
+import graft.util.PrefixSum
+
 /** Rank-based two-sample tests beyond location: the LOCATION-SCALE
   * and pure-SCALE members of the two-sample shelf. Mann-Whitney
   * (q34) reads a location shift, Ansari-Bradley-style scale tests
@@ -14,7 +16,7 @@ import org.apache.spark.sql.expressions.Window
   *
   * All three tests share one dataflow: the pooled value-FREQUENCY
   * table (one shuffle at value-cardinality, the mannWhitneyU
-  * recipe), cumulative midranks via an ordered window over the
+  * recipe), cumulative midranks from [[PrefixSum]] over the
   * frequency rows, and EXACT finite-sampling moments — drawing
   * n_b of N fixed scores without replacement gives
   * E[T] = n_b·s̄ and Var[T] = n_b·(N−n_b)/(N−1)·σ²_s for ANY score
@@ -25,24 +27,29 @@ import org.apache.spark.sql.expressions.Window
   */
 object TwoSampleRank {
 
-  /** Pooled frequency table with midranks: one row per distinct
-    * metric value `m` with counts (la, lb, l), pooled midrank `r`
-    * (= cum − (l−1)/2 — the average of the l tied rank positions). */
+  /** The pooled two-sample value-FREQUENCY table every rank and ECDF
+    * two-sample test starts from: one row per distinct non-null metric
+    * value `__m` with the cohort counts `__la` (inB false), `__lb`
+    * (inB true) and `__l` (both), plus their inclusive running sums in
+    * value order `__la_cum`, `__lb_cum`, `__l_cum` ([[PrefixSum]]).
+    * Rows with a null cohort flag or metric drop. */
+  private[operators] def pooledFreq(df: DataFrame, inB: Column,
+      metric: Column): DataFrame =
+    PrefixSum.running(
+      df.select(inB.as("__b"), metric.cast("double").as("__m"))
+        .where(col("__b").isNotNull && col("__m").isNotNull)
+        .groupBy("__m")
+        .agg(sum(when(!col("__b"), 1L).otherwise(0L)).as("__la"),
+          sum(when(col("__b"), 1L).otherwise(0L)).as("__lb"))
+        .withColumn("__l", col("__la") + col("__lb")),
+      "__m", Seq("__la", "__lb", "__l"))
+
+  /** [[pooledFreq]] plus the pooled midrank `__r` (= cum − (l−1)/2 —
+    * the average of the l tied rank positions). */
   private def freqWithMidranks(df: DataFrame, inB: Column,
-      metric: Column): DataFrame = {
-    val f = df.select(inB.as("__b"), metric.cast("double").as("__m"))
-      .where(col("__b").isNotNull && col("__m").isNotNull)
-      .groupBy("__m")
-      .agg(sum(when(!col("__b"), 1L).otherwise(0L)).as("__la"),
-        sum(when(col("__b"), 1L).otherwise(0L)).as("__lb"))
-      .withColumn("__l", col("__la") + col("__lb"))
-    val wCum = Window.orderBy("__m")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    f.withColumn("__cum", sum("__l").over(wCum))
-      .withColumn("__r",
-        col("__cum").cast("double") -
-          (col("__l").cast("double") - 1.0) / 2.0)
-  }
+      metric: Column): DataFrame =
+    pooledFreq(df, inB, metric).withColumn("__r",
+      col("__l_cum").cast("double") - (col("__l").cast("double") - 1.0) / 2.0)
 
   /** Exact finite-sampling moments of T = Σ_B s over a frequency
     * table carrying per-value score `s` and counts: returns the

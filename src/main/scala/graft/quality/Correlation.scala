@@ -1,8 +1,9 @@
 package graft.quality
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.util.PrefixSum
 
 /** Pairwise correlation profiling — Pearson r (linear association)
   * beside Spearman ρ (monotone association, outlier-robust) for every
@@ -15,18 +16,12 @@ import org.apache.spark.sql.functions._
   * Scale shape: Spearman needs ranks, and a global row-level rank
   * window is a single-partition scale-killer — so ranks come from the
   * VALUE-FREQUENCY table instead (groupBy value → cumulative count →
-  * average rank per tie group, the standard Spearman tie convention).
-  * The cumulative count is computed by an INPUT-SIZE-ADAPTIVE plan
-  * (guide §2 — partitioning derived from input size, not a constant):
-  * above `graft.rank.twoPhaseMinBytes` (default 256 MB of estimated
-  * input) it is a TWO-PHASE prefix sum — range-partition the tagged
-  * value-frequency union, exclusive cumsum per partition under a
-  * PARTITIONED window, add back the collected per-partition offsets (a
-  * bounded partitions×columns-long driver round-trip) — so no single
-  * task ever sorts a corpus-scale distinct-value frame; below it the
-  * frame fits one task trivially and the classic ordered window is the
-  * cheaper single-stage plan. Both paths produce identical exact
-  * integer ranks. The correlations themselves are ONE aggregate pass
+  * average rank per tie group, the standard Spearman tie convention),
+  * and the cumulative count is [[graft.util.PrefixSum]]: bucket
+  * boundaries for every column come from one quantile job (none while
+  * the input fits one task), so no single task sorts a corpus-scale
+  * distinct-value frame and the ranks are exact integers + n/2 whatever
+  * the boundaries. The correlations themselves are ONE aggregate pass
   * (p² `corr` aggregates); the collected result is a single row. */
 object Correlation {
 
@@ -37,89 +32,18 @@ object Correlation {
     require(cols.size >= 2, "need at least two columns")
     val spark = df.sparkSession
     import spark.implicits._
-    var d = df.select(cols.map(c => col(c).cast("double").as(c)): _*)
-    // STRATEGY IS SCALE-ADAPTIVE, derived from the optimizer's input-
-    // size estimate (parquet footer bytes — driver-side, no job), not a
-    // constant tuned for either local mode or a cluster: below the
-    // threshold the distinct-value frame is small and the classic
-    // ordered window over it is one cheap stage; above it that window
-    // is a single-task scale-killer and the two-phase prefix sum takes
-    // over. Both paths compute IDENTICAL exact integer ranks
-    // (CorrelationSpec pins them equal on tied data).
-    val twoPhaseMinBytes = spark.conf
-      .getOption("graft.rank.twoPhaseMinBytes")
-      .map(_.toLong).getOrElse(256L << 20)
-    val twoPhase =
-      df.queryExecution.optimizedPlan.stats.sizeInBytes >= twoPhaseMinBytes
-    // frames the two-phase path persists; released once the single
-    // result row is on the driver
-    var cached = Seq.empty[DataFrame]
-    if (twoPhase) {
-      // ONE tagged value-frequency union for all profiled columns
-      // (ranks over NON-NULL values only; attached below with a LEFT
-      // join so a row that is null in column c keeps its other columns
-      // and gets a null rank — `corr` then excludes it from exactly the
-      // pairs involving c). Persisted BEFORE the range exchange: the
-      // range partitioner runs a sampling pass over its child, which
-      // would otherwise recompute every per-column corpus aggregate.
-      val freqAll = cols.map { c =>
-        d.filter(col(c).isNotNull).groupBy(col(c).as("__v"))
-          .agg(count(lit(1)).as("__c"))
-          .select(lit(c).as("__tag"), col("__v"), col("__c"))
-      }.reduce(_.unionByName(_))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // two-phase exclusive prefix sum (see scaladoc): range-partition
-      // on (tag, value), local cumsum per (partition, tag) under a
-      // PARTITIONED window, per-(partition, tag) totals to the driver
-      // (bounded: partitions × columns longs), offsets added back via a
-      // literal map. The `local` persist is load-bearing, not a cache
-      // bet: range boundaries are SAMPLED per job, so the offsets job
-      // and the final joins must read the SAME materialized assignment.
-      val parted = freqAll.repartitionByRange(col("__tag"), col("__v"))
-        .withColumn("__pid", spark_partition_id())
-      val wLoc = Window.partitionBy("__pid", "__tag").orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val local = parted
-        .withColumn("__lc", coalesce(sum("__c").over(wLoc), lit(0L)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cached = Seq(freqAll, local)
-      val ptot = local.groupBy("__pid", "__tag").agg(sum("__c").as("__pt"))
-        .collect()
-        .map(r => (r.getString(1), r.getInt(0)) -> r.getLong(2)).toMap
-      // per tag, ascending pid = ascending value range (the range
-      // exchange orders partitions lexicographically by (tag, value))
-      val offMap: Map[String, Long] = cols.flatMap { c =>
-        val pids = ptot.keys.collect { case (t, p) if t == c => p }.toSeq.sorted
-        pids.zip(pids.scanLeft(0L)((acc, p) => acc + ptot((c, p))).init)
-          .map { case (p, off) => s"$c#$p" -> off }
-      }.toMap
-      cols.foreach { c =>
-        val rk = local
-          .where(col("__tag") === c)
-          .withColumn("__rank",
-            coalesce(element_at(typedLit(offMap),
-              concat(col("__tag"), lit("#"), col("__pid"))), lit(0L)) +
-              col("__lc") +
-              (col("__c") + 1.0) / 2.0)   // average rank over the tie run
-          .select(col("__v").as(c), col("__rank").as(s"__r_$c"))
-        d = d.join(rk, Seq(c), "left")
-      }
-    } else cols.foreach { c =>
-      // small input: the distinct-value frame fits one task trivially —
-      // the classic ordered window is one stage with no extra jobs
-      // (measured at sf0.1 in the r15a close: 3.03 s this path vs
-      // 4.66 s two-phase, whose extra passes/caches only pay off once
-      // the value frame is big enough to need distribution)
-      val freq = d.filter(col(c).isNotNull).groupBy(col(c).as("__v"))
-        .agg(count(lit(1)).as("__c"))
-      val wCum = Window.orderBy("__v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val rk = freq
-        .withColumn("__rank",
-          coalesce(sum("__c").over(wCum), lit(0L)) +
-            (col("__c") + 1.0) / 2.0)   // average rank over the tie run
-        .select(col("__v").as(c), col("__rank").as(s"__r_$c"))
-      d = d.join(rk, Seq(c), "left")
+    val base = df.select(cols.map(c => col(c).cast("double").as(c)): _*)
+    // ranks over NON-NULL values only (PrefixSum drops the null key),
+    // attached with a LEFT join so a row that is null in column c keeps
+    // its other columns and gets a null rank — `corr` then excludes it
+    // from exactly the pairs involving c
+    val d = cols.zip(PrefixSum.boundaries(base, cols)).foldLeft(base) {
+      case (acc, (c, bounds)) =>
+        val freq = base.groupBy(col(c).as("__v")).agg(count(lit(1)).as("__c"))
+        val rk = PrefixSum.running(freq, "__v", Seq("__c"), bounds)
+          .select(col("__v").as(c),   // average rank over the tie run
+            (col("__c_cum") - (col("__c") - 1.0) / 2.0).as(s"__r_$c"))
+        acc.join(rk, Seq(c), "left")
     }
     val pairs = for {
       (a, i) <- cols.zipWithIndex; b <- cols.drop(i + 1)
@@ -128,8 +52,7 @@ object Correlation {
       corr(col(a), col(b)).as(s"__p_${a}__$b"),
       corr(col(s"__r_$a"), col(s"__r_$b")).as(s"__s_${a}__$b"))
     }
-    val one = try d.agg(aggs.head, aggs.tail: _*).collect()(0)
-      finally cached.foreach(_.unpersist())
+    val one = d.agg(aggs.head, aggs.tail: _*).collect()(0)
     pairs.map { case (a, b) =>
       (a, b,
         round6(one.getAs[Double](s"__p_${a}__$b")),

@@ -41,26 +41,29 @@ class CorrelationSpec extends AnyFunSuite {
     assert(r == 0.948683, s"avg-rank spearman expected 0.948683, got $r")
   }
 
-  test("correlation: the two-phase rank path equals the small-input path") {
+  test("correlation: bucketed ranks are identical at 1 and 4 shuffle partitions and cache nothing") {
     // tied values + a null + anti-monotone pair: every rank edge case.
-    // Forcing twoPhaseMinBytes=0 routes the SAME data through the
-    // range-partitioned prefix-sum path; both paths must agree exactly
-    // (the ranks are exact integers + n/2, so equality is bitwise).
+    // A 1-byte advisory partition size asks PrefixSum for one bucket
+    // per shuffle partition, so 4 partitions rank through 4 quantile
+    // buckets and 1 partition through the single window; the ranks are
+    // exact integers + n/2, so equality is bitwise.
     val df = Seq[(java.lang.Double, java.lang.Double)](
       (1.0, 8.0), (2.0, 7.0), (2.0, 7.0), (3.0, 5.0), (3.0, null),
       (4.0, 2.0), (5.0, 2.0), (5.0, 1.0), (6.0, 0.5))
       .toDF("x", "y")
-    val small = Correlation.correlationMatrix(df, Seq("x", "y")).collect()
-    spark.conf.set("graft.rank.twoPhaseMinBytes", "0")
-    try {
+    val single = Correlation.correlationMatrix(df, Seq("x", "y")).collect()
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(advisory, "1")
+    try Seq(1, 4).foreach { parts =>
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
       spark.catalog.clearCache()
-      val twoPhase = Correlation.correlationMatrix(df, Seq("x", "y"))
-        .collect()
-      assert(twoPhase.toSeq == small.toSeq,
-        s"paths disagree: $small vs $twoPhase")
-      // the two-phase path releases the frames it persisted
+      val got = Correlation.correlationMatrix(df, Seq("x", "y")).collect()
+      assert(got.toSeq == single.toSeq, s"$parts partitions: $single vs $got")
       assert(spark.sharedState.cacheManager.isEmpty)
-    } finally spark.conf.unset("graft.rank.twoPhaseMinBytes")
+    } finally {
+      spark.conf.unset(advisory)
+      spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
   }
 
   test("anova: separated classes score huge F; shuffled labels score ~0") {

@@ -46,6 +46,20 @@ class MaterializedAggSpec extends AnyFunSuite {
       Set(("a", 3L, 8L, 1L, 5L), ("b", 1L, 10L, 10L, 10L), ("c", 1L, 7L, 7L, 7L)))
   }
 
+  test("a column added by schema evolution aggregates as NULL over the dirs written before it") {
+    val src = fresh("src"); val mv = fresh("mv")
+    TableLog.commitAppend(spark, src, Seq(("a", 1L), ("b", 2L)).toDF("k", "v"))
+    // the append carries the pre-evolution dir forward under a snapshot
+    // schema that now has `w`
+    TableLog.commitAppend(spark, src,
+      Seq(("a", 3L, 10L), ("c", 4L, 20L)).toDF("k", "v", "w"))
+    val wSpec = AggSpec(Seq("k"), sumCols = Seq("w"))
+    assert(MaterializedAgg.refresh(spark, src, mv, wSpec).processedDirs.size == 2)
+    val got = MaterializedAgg.read(spark, mv, wSpec).select("k", "cnt", "sum_w")
+      .as[(String, Long, Option[Long])].collect().toSet
+    assert(got == Set(("a", 2L, Some(10L)), ("b", 1L, None), ("c", 1L, Some(20L))))
+  }
+
   test("HLL approx-distinct partials union across incremental refreshes") {
     val src = fresh("src"); val mv = fresh("mv")
     val hllSpec = AggSpec(Seq("k"), approxDistinctCols = Seq("u"))

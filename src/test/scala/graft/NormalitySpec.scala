@@ -158,6 +158,16 @@ class NormalitySpec extends AnyFunSuite {
     assert(flat.isNullAt(5) && !flat.getBoolean(6))
   }
 
+  test("dagostino k2 compiles under whole-stage codegen with no interpreted fallback") {
+    val xs = (0 until 60).map(i => math.pow(1.0 + i % 12, 1.7))
+    val reference = Normality.dagostinoK2(xs.toDF("x"), col("x")).collect().head
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try {
+      val got = Normality.dagostinoK2(xs.toDF("x"), col("x")).collect().head
+      assert(got == reference)
+    } finally spark.conf.unset("spark.sql.codegen.fallback")
+  }
+
   test("page trend: monotone blocks give the exact maximal L") {
     // 3 blocks, 5 levels, strictly increasing metric in level order:
     // every within-block rank equals the level index → L = b·Σj²

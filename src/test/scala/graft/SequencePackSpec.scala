@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.operators.SequencePack
+import graft.util.PrefixSum
 
 class SequencePackSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -25,20 +26,37 @@ class SequencePackSpec extends AnyFunSuite {
     assert(got(3) == ((3L, 8L, 12L, 1L, 1L, false)))  // [12,20) in seq 1
   }
 
-  test("two-phase prefix sum is bit-identical across bucket sizes") {
+  test("offsets stay the global running sum when the doc table is split into buckets") {
     val docs = (0L until 200L).map(i => doc(i, (i % 17).toInt + 1))
       .toDF("doc_id", "text", "source")
-    val a = SequencePack.packCoords(docs, 32, bucketSize = 3)
-      .orderBy("doc_id").collect()
-    val b = SequencePack.packCoords(docs, 32, bucketSize = 100000)
-      .orderBy("doc_id").collect()
-    assert(a.sameElements(b))
+    val single = SequencePack.packCoords(docs, 32).orderBy("doc_id").collect()
+    // a 1-byte advisory partition size: one doc-id bucket per shuffle
+    // partition
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(advisory, "1")
+    val bucketed = try SequencePack.packCoords(docs, 32).orderBy("doc_id")
+      finally spark.conf.unset(advisory)
+    assert(bucketed.queryExecution.optimizedPlan.toString.contains("__pfx_bkt"))
+    assert(bucketed.collect().sameElements(single))
+    single.map(r => (r.getLong(1), r.getLong(2))).foldLeft(0L) {
+      case (expect, (n, off)) => assert(off == expect); expect + n
+    }
+  }
+
+  test("two-phase prefix sum is bit-identical across bucket sizes") {
+    // the doc-id running sum packCoords takes its offsets from, under
+    // forced bucket widths
+    val docs = (0L until 200L).map(i => (i, (i % 17) + 1)).toDF("doc_id", "n_tokens")
+    def offsets(width: Int) =
+      PrefixSum.running(docs, "doc_id", Seq("n_tokens"),
+        (width until 200 by width).map(_.toDouble))
+        .orderBy("doc_id").select("doc_id", "n_tokens", "n_tokens_cum")
+        .as[(Long, Long, Long)].collect().toSeq
+    val a = offsets(3)
+    assert(a == offsets(100000))
     // and the offsets really are the global running sum
-    val offs = SequencePack.packCoords(docs, 32, bucketSize = 7)
-      .orderBy("doc_id").select("n_tokens", "off")
-      .as[(Long, Long)].collect()
-    offs.foldLeft(0L) { case (expect, (n, off)) =>
-      assert(off == expect); expect + n
+    offsets(7).foldLeft(0L) { case (before, (_, n, cum)) =>
+      assert(cum == before + n); cum
     }
   }
 
