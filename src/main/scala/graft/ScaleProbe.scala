@@ -25,7 +25,9 @@ import org.apache.spark.sql.functions._
   * ≫ N is a superlinearity — the thing that kills a 100 TB run (e.g.
   * the round-1 IVF centroid scheme would have shown ~N² here).
   *
-  * Usage: runMain graft.ScaleProbe [factor] [sfDir]
+  * Usage: runMain graft.ScaleProbe [factor] [sfDir] [op,op,...]
+  * (only the inputs the selected ops read are built; the embedding
+  * ops cap the factor at the embedding dimension)
   */
 object ScaleProbe {
 
@@ -56,12 +58,17 @@ object ScaleProbe {
     val spark: SparkSession = GraftSession.local(
       sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    val base = graft.io.Sources.table(spark, sfDir, "documents")
+    // each input family is built (read, amplified, persisted, counted)
+    // only when a selected op reads it
+    lazy val base = graft.io.Sources.table(spark, sfDir, "documents")
       .select("doc_id", "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val big = amplify(base, factor)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    println(f"[scale] factor=$factor base=${base.count()} big=${big.count()} rows")
+    lazy val big = {
+      val b = amplify(base, factor)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      println(f"[scale] factor=$factor base=${base.count()} big=${b.count()} rows")
+      b
+    }
 
     val ops: Seq[(String, DataFrame => Long)] = Seq(
       "exact_dedup" -> (d => graft.operators.Dedup.exact(d).count()),
@@ -407,26 +414,29 @@ object ScaleProbe {
     // decorrelated (cos ≈ 0), so copies add corpus volume without
     // adding artifactual near-dup pairs, the same disjointness rule as
     // the token-suffix trick above ----
-    val embBase = graft.io.Sources.table(spark, sfDir, "embeddings")
+    lazy val embBase = graft.io.Sources.table(spark, sfDir, "embeddings")
       .select("vec_id", "embedding", "label")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val embDim = embBase.select(size(col("embedding"))).first().getInt(0)
-    val embShift = embBase.agg(max("vec_id")).collect()(0).getLong(0) + 1L
-    // the rotation cycle repeats at embDim copies — beyond that, later
-    // generations would be EXACT duplicates of earlier ones, creating
-    // the artifactual near-dup pairs the disjointness rule excludes
-    require(factor <= embDim,
-      s"embedding amplification factor $factor exceeds embDim $embDim — " +
-        "rotation would cycle and generations would collide")
-    val embBig = (0 until factor).map { i =>
-      val rot = i % embDim
-      embBase.select((col("vec_id") + lit(i * embShift)).as("vec_id"),
-        concat(slice(col("embedding"), rot + 1, embDim - rot),
-          slice(col("embedding"), 1, rot)).as("embedding"),
-        col("label"))
-    }.reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    embBig.count()
+    lazy val embBig = {
+      val embDim = embBase.select(size(col("embedding"))).first().getInt(0)
+      val embShift = embBase.agg(max("vec_id")).collect()(0).getLong(0) + 1L
+      // the rotation cycle repeats at embDim copies — beyond that, later
+      // generations would be EXACT duplicates of earlier ones, creating
+      // the artifactual near-dup pairs the disjointness rule excludes
+      require(factor <= embDim,
+        s"embedding amplification factor $factor exceeds embDim $embDim — " +
+          "rotation would cycle and generations would collide")
+      val b = (0 until factor).map { i =>
+        val rot = i % embDim
+        embBase.select((col("vec_id") + lit(i * embShift)).as("vec_id"),
+          concat(slice(col("embedding"), rot + 1, embDim - rot),
+            slice(col("embedding"), 1, rot)).as("embedding"),
+          col("label"))
+      }.reduce(_ unionByName _)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      b.count()
+      b
+    }
     // which amplification does this shape carry? (for ops whose scale
     // contract is a sampling knob ∝ N — buckets, probeMod)
     def factorOf(d: DataFrame): Int = if (d eq embBig) factor else 1
@@ -507,19 +517,22 @@ object ScaleProbe {
     // per copy — copies are DISJOINT users, so per-user sequence
     // lengths (the window/state unit) stay fixed while user count
     // scales, the linear direction these operators must absorb ----
-    val evBase = graft.io.Sources.table(spark, sfDir, "events")
+    lazy val evBase = graft.io.Sources.table(spark, sfDir, "events")
       .select("event_id", "user_id", "ts", "event_type", "value", "props")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val evUserShift = evBase.agg(max("user_id")).collect()(0).getLong(0) + 1L
-    val evIdShift = evBase.agg(max("event_id")).collect()(0).getLong(0) + 1L
-    val evBig = (0 until factor).map { i =>
-      evBase.select(
-        (col("event_id") + lit(i * evIdShift)).as("event_id"),
-        (col("user_id") + lit(i * evUserShift)).as("user_id"),
-        col("ts"), col("event_type"), col("value"), col("props"))
-    }.reduce(_ unionByName _)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    evBig.count()
+    lazy val evBig = {
+      val evUserShift = evBase.agg(max("user_id")).collect()(0).getLong(0) + 1L
+      val evIdShift = evBase.agg(max("event_id")).collect()(0).getLong(0) + 1L
+      val b = (0 until factor).map { i =>
+        evBase.select(
+          (col("event_id") + lit(i * evIdShift)).as("event_id"),
+          (col("user_id") + lit(i * evUserShift)).as("user_id"),
+          col("ts"), col("event_type"), col("value"), col("props"))
+      }.reduce(_ unionByName _)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      b.count()
+      b
+    }
 
     val evOps: Seq[(String, DataFrame => Long)] = Seq(
       // one filtered (user, min ts) agg per step; disjoint users keep
@@ -829,12 +842,15 @@ object ScaleProbe {
       // quantile chain is pure scalar arithmetic
       "grubbs" -> (d => graft.operators.Outliers.grubbs(d).count()))
 
-    (ops.map(o => (o._1, o._2, base, big)) ++
-      embOps.map(o => (o._1, o._2, embBase, embBig)) ++
-      evOps.map(o => (o._1, o._2, evBase, evBig)))
-      .filter { case (name, _, _, _) => only.forall(_.contains(name)) }
-      .foreach {
-      case (name, f, in1, inN) =>
+    // build the selected families' inputs up front (the embedding cap
+    // fails here, before any timing), then time the selected ops
+    val selected = Seq[(Seq[(String, DataFrame => Long)],
+        () => (DataFrame, DataFrame))](
+        (ops, () => (base, big)), (embOps, () => (embBase, embBig)),
+        (evOps, () => (evBase, evBig)))
+      .map { case (fam, in) => (fam.filter(o => only.forall(_.contains(o._1))), in) }
+      .collect { case (fam, in) if fam.nonEmpty => (fam, in()) }
+    for ((fam, (in1, inN)) <- selected; (name, f) <- fam) {
       // pin THIS op's inputs (the trailing clearCache dropped them),
       // so the timed region covers the operator, not input generation
       in1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK).count()

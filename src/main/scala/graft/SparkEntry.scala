@@ -2245,9 +2245,8 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"),
           to_date(col("ts")).as("dt"), col("value"))
       val d = dayofmonth(col("dt"))
-      graft.lake.TableLog.commitAppend(s, tbl, ev.where(d <= 10), "append")
-      graft.lake.TableLog.commitAppend(s, tbl, ev.where(d > 10 && d <= 20),
-        "append")
+      graft.lake.TableLog.commitAppend(s, tbl, ev.where(d <= 10))
+      graft.lake.TableLog.commitAppend(s, tbl, ev.where(d > 10 && d <= 20))
       graft.lake.TableLog.commitMerge(s, tbl, ev.where(d > 20),
         Seq("event_id"))
       graft.lake.TableLog.commitDelete(s, tbl, "user_id", 0L, 9L)
@@ -4161,7 +4160,7 @@ object SparkEntry {
           TableLog.inputRef(s, p("ord"), "ord")))
       // ord v2: an ingest append from an unversioned external feed
       TableLog.commitAppend(s, p("ord"),
-        ord.filter(col("o_orderkey") % 2 === 0), "append",
+        ord.filter(col("o_orderkey") % 2 === 0),
         Seq(TableLog.InputRef("raw/orders_feed", None)))
       // mart v2 re-merged on the new ord snapshot: cust@1 + ord@2
       TableLog.commitMerge(s, p("mart"),
@@ -4254,7 +4253,7 @@ object SparkEntry {
         Seq(TableLog.inputRef(s, p("cust"), "cust"),
           TableLog.inputRef(s, p("ord"), "ord")))
       TableLog.commitAppend(s, p("ord"),
-        ord.filter(col("o_orderkey") % 2 === 0), "append",
+        ord.filter(col("o_orderkey") % 2 === 0),
         Seq(TableLog.InputRef("raw/orders_feed", None)))
       TableLog.commitMerge(s, p("mart"),
         mart(TableLog.read(s, p("ord"))), Seq("o_orderkey"),
@@ -4265,7 +4264,7 @@ object SparkEntry {
       // ord v3: a CLEAN append — the feed's rows persist in the v3
       // snapshot, so forward carry must keep v3 in the closure
       TableLog.commitAppend(s, p("ord"),
-        ord.filter(col("o_orderkey") % 3 === 0), "append",
+        ord.filter(col("o_orderkey") % 3 === 0),
         Seq(TableLog.InputRef("raw/orders_clean", None)))
       val tables = Map("cust" -> p("cust"), "ord" -> p("ord"),
         "mart" -> p("mart"), "mv" -> p("mv"))

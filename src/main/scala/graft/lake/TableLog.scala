@@ -275,7 +275,7 @@ object TableLog {
     readCommit(spark, path, resolve(spark, path, version))
 
   /** [[read]] of an already-resolved commit (no log listing). */
-  private[lake] def readCommit(spark: SparkSession, path: String,
+  private[graft] def readCommit(spark: SparkSession, path: String,
       commit: Commit): DataFrame = {
     require(commit.dirs.nonEmpty, s"version ${commit.version} is an empty snapshot")
     readDirs(spark, commit, commit.dirs.map(d => s"$path/$d"))
@@ -311,19 +311,6 @@ object TableLog {
       paths: Seq[String]): DataFrame = commit.schema match {
     case Some(s) => spark.read.schema(s).parquet(paths: _*)
     case None => spark.read.option("mergeSchema", "true").parquet(paths: _*)
-  }
-
-  /** Rows carried by `commit`'s dirs that are NOT in `prevDirs`,
-    * resolved from manifest file stats alone — lets a foreachBatch
-    * sink report "rows appended this commit" without re-evaluating
-    * the frame it just wrote (the second evaluation re-runs the whole
-    * admission/report pipeline per micro-batch). None when stats
-    * don't cover the new dirs (pre-stats writers). */
-  def newDirRows(commit: Commit, prevDirs: Set[String]): Option[Long] = {
-    val nd = commit.dirs.filterNot(prevDirs)
-    if (nd.isEmpty) return Some(0L)
-    val counted = commit.stats.filter(f => nd.exists(f.file.startsWith))
-    if (counted.isEmpty) None else Some(counted.map(_.rows).sum)
   }
 
   /** Metadata-only row count from manifest stats — `SELECT count(*)`
@@ -524,29 +511,29 @@ object TableLog {
     * sizes; only genuinely tiny plans — local relations, global
     * aggregates — estimate small), so an estimate under the threshold
     * is a safe signal to merge. Estimates at or above
-    * `graft.write.smallBytes` (default 64 MiB) leave the frame
-    * untouched; so does a frame whose plan carries an explicit
-    * repartition/coalesce — the caller chose that layout on purpose
-    * (z-order range files, pruning demos), and collapsing it would
-    * undo the file-skipping structure the partitioning exists to
-    * create. Set the conf to 0 to disable. */
-  private def optimizeWrite(spark: SparkSession, df: DataFrame): DataFrame = {
+    * [[SmallWriteBytes]] leave the frame untouched; so does a frame
+    * whose plan carries an explicit repartition/coalesce — the caller
+    * chose that layout on purpose (z-order range files, pruning demos),
+    * and collapsing it would undo the file-skipping structure the
+    * partitioning exists to create. */
+  private def optimizeWrite(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
-    val small = spark.conf.getOption("graft.write.smallBytes")
-      .map(_.toLong).getOrElse(64L * 1024 * 1024)
-    val target = spark.conf.getOption("graft.write.targetFileBytes")
-      .map(_.toLong).getOrElse(32L * 1024 * 1024)
     val userPartitioned = df.queryExecution.analyzed
       .collectFirst { case r: RepartitionOperation => r }.isDefined
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    // either conf non-positive disables (same semantics for both knobs)
-    if (small <= 0 || target <= 0 || userPartitioned || est >= small) df
-    else df.coalesce(math.max(1, (est.toLong + target - 1) / target).toInt)
+    if (userPartitioned || est >= SmallWriteBytes) df
+    else df.coalesce(math.max(1,
+      (est.toLong + TargetFileBytes - 1) / TargetFileBytes).toInt)
   }
+
+  /** Optimize-write thresholds: a commit whose plan estimate is under
+    * `SmallWriteBytes` is coalesced to ~`TargetFileBytes` files. */
+  private val SmallWriteBytes = 64L * 1024 * 1024
+  private val TargetFileBytes = 32L * 1024 * 1024
 
   private def writeData(spark: SparkSession, path: String, df0: DataFrame,
       v: Int): (String, Seq[TableStats.FileStats]) = {
-    val df = optimizeWrite(spark, df0)
+    val df = optimizeWrite(df0)
     val rel = f"data/c$v%08d-${java.util.UUID.randomUUID().toString.take(8)}"
     // table data is written as INT64-micros timestamps, never INT96:
     // INT96 (Spark's legacy session default) carries NO footer
@@ -680,20 +667,29 @@ object TableLog {
     * that commit. Only this loop stamps the version, the clamped
     * timestamp and the run id, publishes, and deletes a losing
     * attempt's data dir (a refused one was deleted by
-    * [[checkWritten]]), so no attempt leaks files. */
-  private def publish(spark: SparkSession, path: String, action: String)(
-      attempt: (Option[Commit], Int) => Either[Commit, Staged]): Commit = {
+    * [[checkWritten]]), so no attempt leaks files.
+    *
+    * A `tagged` commit publishes at most once per `action`: each
+    * attempt checks the log it just listed and returns None, writing
+    * nothing, when a commit already carries the action — a replayed
+    * batch, or a lost race to a winner with the same tag. Untagged
+    * commits always return a commit. */
+  private def publish(spark: SparkSession, path: String, action: String,
+      tagged: Boolean = false)(
+      attempt: (Option[Commit], Int) => Either[Commit, Staged]): Option[Commit] = {
     var attempts = 0
     while (attempts < MaxCommitAttempts) {
-      val prev = history(spark, path).lastOption
+      val log = history(spark, path)
+      if (tagged && log.exists(_.action == action)) return None
+      val prev = log.lastOption
       val v = prev.map(_.version + 1).getOrElse(1)
       attempt(prev, v) match {
-        case Left(unchanged) => return unchanged
+        case Left(unchanged) => return Some(unchanged)
         case Right(s) =>
           val c = Commit(v, action, s.dirs, s.stats, s.schemaJson,
             s.constraints, Some(monotonicNow(prev)), s.inputs,
             activeRunId.value)
-          if (writeManifest(spark, path, c)) return c
+          if (writeManifest(spark, path, c)) return Some(c)
           s.written.foreach(d => fs(spark, path).delete(new Path(path, d), true))
       }
       attempts += 1
@@ -804,7 +800,7 @@ object TableLog {
         throw new ConstraintViolationException(Seq(name -> n),
           s"existing data at $path (constraint not added)")
       carrying(last, last.constraints :+ Constraint(name, checkExpr))
-    }
+    }.get
   }
 
   /** `NOT NULL` as the standard CHECK form. */
@@ -819,32 +815,46 @@ object TableLog {
       require(last.constraints.exists(_.name == name),
         s"no constraint named '$name'")
       carrying(last, last.constraints.filterNot(_.name == name))
-    }
+    }.get
 
   /** Add `df`'s rows to the table (new snapshot = previous dirs + one
-    * new dir; no data rewrite at all). `action` labels the manifest —
-    * idempotent writers (streaming foreachBatch) tag it with their
-    * batch id and skip the commit when history already carries it. */
+    * new dir; no data rewrite at all). */
   def commitAppend(spark: SparkSession, path: String, df: DataFrame,
-      action: String = "append", inputs: Seq[InputRef] = Seq.empty): Commit =
-    publish(spark, path, action)((prev, v) =>
-      writeAttempt(spark, path, action, inputs, None, prev, v, df, onto = prev))
+      inputs: Seq[InputRef] = Seq.empty): Commit =
+    publish(spark, path, "append")((prev, v) => writeAttempt(spark, path,
+      "append", inputs, None, prev, v, df, onto = prev)).get
 
   /** Replace the table contents with `df`. Old versions remain
     * readable until vacuumed. A `suite` gates the commit on the
     * written files before the manifest publish ([[checkWritten]]): a
     * failed contract throws and leaves the table at its prior version
-    * with no new files. A caller-supplied `action` tag is the
-    * replay-safe form for foreachBatch sinks: tag the commit with a
-    * batch-derived action and skip the batch when `history` already
-    * records it (the [[graft.streaming.DriftMonitor]] idempotence
-    * pattern, for replace-shaped sinks). */
+    * with no new files. */
   def commitOverwrite(spark: SparkSession, path: String, df: DataFrame,
       inputs: Seq[InputRef] = Seq.empty,
-      suite: Option[Expectations.Suite] = None,
-      action: String = "overwrite"): Commit =
-    publish(spark, path, action)((prev, v) =>
-      writeAttempt(spark, path, action, inputs, suite, prev, v, df, onto = None))
+      suite: Option[Expectations.Suite] = None): Commit =
+    publish(spark, path, "overwrite")((prev, v) => writeAttempt(spark, path,
+      "overwrite", inputs, suite, prev, v, df, onto = None)).get
+
+  /** The replay-safe data commit of micro-batch sinks: the manifest is
+    * labelled `tag` (a batch-derived id), and [[publish]] writes
+    * nothing and returns None when a commit already carries it — the
+    * check runs on the log each attempt lists, so neither a replayed
+    * batch nor a second writer holding the same tag publishes twice
+    * (Delta's transaction identifiers make the same check inside the
+    * log commit). `build` gets the attempt's pinned snapshot, so a lost
+    * race rebuilds on top of the winner and a replay never builds its
+    * output. The new snapshot is the built rows on top of that snapshot
+    * or, with `replace`, only them. Returns the commit and the rows in
+    * its own new files, summed from their footer stats. */
+  def commitTagged(spark: SparkSession, path: String, tag: String,
+      replace: Boolean = false)(
+      build: Option[Commit] => DataFrame): Option[(Commit, Long)] =
+    publish(spark, path, tag, tagged = true)((prev, v) =>
+      writeAttempt(spark, path, tag, Seq.empty, None, prev, v, build(prev),
+        onto = if (replace) None else prev))
+      // writeAttempt lists the attempt's new dir first
+      .map(c => (c, c.stats.filter(_.file.startsWith(c.dirs.head + "/"))
+        .map(_.rows).sum))
 
   /** The upsert of `updates` onto `base` — the attempt's pinned merge
     * base, read without re-listing the log. */
@@ -876,7 +886,7 @@ object TableLog {
       suite: Option[Expectations.Suite] = None): Commit =
     publish(spark, path, "merge")((prev, v) =>
       writeAttempt(spark, path, "merge", inputs, suite, prev, v,
-        mergeOnto(spark, path, updates, keys)(prev), onto = None))
+        mergeOnto(spark, path, updates, keys)(prev), onto = None)).get
 
   /** OPTIMIZE as a log commit: rewrite the latest snapshot into
     * `numFiles` Z-ordered files ([[ZOrder.cluster]]) and commit the
@@ -892,7 +902,7 @@ object TableLog {
     publish(spark, path, "optimize")((prev, v) =>
       writeAttempt(spark, path, "optimize", Seq.empty, None, prev, v,
         ZOrder.cluster(readCommit(spark, path, existing(prev, path)),
-          zorderCols._1, zorderCols._2, numFiles), onto = None))
+          zorderCols._1, zorderCols._2, numFiles), onto = None)).get
 
   /** DELETE as a log commit with data skipping: rows where
     * `colName BETWEEN lo AND hi` are removed, but a data directory whose
@@ -936,7 +946,7 @@ object TableLog {
         Right(Staged(dir +: carried, dirStats ++ carriedStats,
           last.schemaJson, last.constraints, written = Some(dir)))
       }
-    }
+    }.get
 
   /** Append a version that restores snapshot `v` (history stays
     * intact; nothing is deleted). Metadata rolls back with the data:
@@ -946,7 +956,7 @@ object TableLog {
     val target = history(spark, path).find(_.version == v)
       .getOrElse(throw new IllegalArgumentException(s"version $v not found"))
     publish(spark, path, "rollback")((_, _) =>
-      carrying(target, target.constraints))
+      carrying(target, target.constraints)).get
   }
 
   /** Destructive retention: keep the newest `retain` manifests, delete

@@ -164,7 +164,8 @@ object AllPairsJoin {
     // append and the consumer's own commit re-runs this call with the
     // batch ALREADY indexed — pair math stays correct (the id_a≠id_b
     // guard drops self-matches against the stored copy, distinct
-    // merges the doubled candidates) and the append is skipped
+    // merges the doubled candidates), and each index append is a
+    // commit tagged `action`, which the replay skips
     val alreadyIndexed = TableLog
       .history(spark, s"$storePath/grams").exists(_.action == action)
     val frozen = TableLog.read(spark, s"$storePath/df")
@@ -214,10 +215,8 @@ object AllPairsJoin {
       .orderBy("id_a", "id_b")
       .truncateLineage()   // pin results before the index mutates
 
-    if (!alreadyIndexed) {
-      TableLog.commitAppend(spark, s"$storePath/grams", newGrams, action)
-      TableLog.commitAppend(spark, s"$storePath/prefix", newPrefix, action)
-    }
+    TableLog.commitTagged(spark, s"$storePath/grams", action)(_ => newGrams)
+    TableLog.commitTagged(spark, s"$storePath/prefix", action)(_ => newPrefix)
     newGrams.unpersist(); newPrefix.unpersist()
     out
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.CorpusFilters
@@ -31,39 +30,26 @@ object CorpusHealth {
   /** Fold one batch of documents into the per-source increment table,
     * replay-safe. Returns rows appended (0 on a replayed batch). */
   private[graft] def ingestOnce(spark: SparkSession, batch: DataFrame,
-      healthPath: String, batchId: Long): Long = {
-    val act = action(batchId)
-    val hist = TableLog.history(spark, healthPath)
-    if (hist.exists(_.action == act)) return 0L
-    val inc = CorpusFilters.encodingFlags(batch)
-      .groupBy("source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("__repl"), 1L).otherwise(0L)).as("n_replacement"),
-        sum(when(col("__ctrl"), 1L).otherwise(0L)).as("n_control"),
-        sum(col("__nas")).as("sum_nas"))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet)
-      .getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, healthPath, inc, act)
-    TableLog.newDirRows(c, prevDirs).getOrElse(inc.count())
-  }
+      healthPath: String, batchId: Long): Long =
+    TableLog.commitTagged(spark, healthPath, action(batchId)) { _ =>
+      CorpusFilters.encodingFlags(batch)
+        .groupBy("source")
+        .agg(count(lit(1)).as("n_docs"),
+          sum(when(col("__repl"), 1L).otherwise(0L)).as("n_replacement"),
+          sum(when(col("__ctrl"), 1L).otherwise(0L)).as("n_control"),
+          sum(col("__nas")).as("sum_nas"))
+    }.fold(0L)(_._2)
 
   /** Watch a documents parquet stream; fold each micro-batch into
     * `healthPath`. */
   def monitor(spark: SparkSession, sourceDir: String, glob: String,
       healthPath: String, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) =>
         ingestOnce(batch.sparkSession, batch, healthPath, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** The audit over everything ingested so far — identical schema and
     * values to [[CorpusFilters.encodingAudit]] over the full corpus:

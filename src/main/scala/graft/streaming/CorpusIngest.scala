@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.IncrementalDedup
@@ -45,44 +44,38 @@ object CorpusIngest {
       corpusPath: String, bandStorePath: String, batchId: Long,
       idCol: String = "doc_id", textCol: String = "text"): Long = {
     val act = admitAction(batchId)
-    val bandHist = TableLog.history(spark, bandStorePath)
-    val corpusHist = TableLog.history(spark, corpusPath)
-    val corpusDone = corpusHist.exists(_.action == act)
-    val priorBandCommit = bandHist.find(_.action == act)
-    if (corpusDone && priorBandCommit.isDefined) return 0L
-
-    // the store AS OF before this batch's own bands (deterministic
-    // replay); None on the very first batch
-    val store = priorBandCommit match {
-      case Some(c) if c.version > 1 =>
-        Some(TableLog.read(spark, bandStorePath, Some(c.version - 1)))
-      case Some(_) => None
-      case None => bandHist.lastOption.map(_ =>
-        TableLog.read(spark, bandStorePath))
+    // admission runs only when a commit needs it (a fully replayed
+    // batch builds nothing), once for both commits
+    var admitted: Option[IncrementalDedup.Admission] = None
+    def adm: IncrementalDedup.Admission = admitted.getOrElse {
+      val bandHist = TableLog.history(spark, bandStorePath)
+      // the store AS OF before this batch's own bands (deterministic
+      // replay); None on the very first batch
+      val store = bandHist.find(_.action == act) match {
+        case Some(c) if c.version > 1 =>
+          Some(TableLog.read(spark, bandStorePath, Some(c.version - 1)))
+        case Some(_) => None
+        case None => bandHist.lastOption.map(_ =>
+          TableLog.read(spark, bandStorePath))
+      }
+      val a = IncrementalDedup.admitBatch(
+        batch.select(col(idCol), col(textCol)), store,
+        idCol = idCol, textCol = textCol)
+      admitted = Some(a)
+      a
     }
-    val adm = IncrementalDedup.admitBatch(
-      batch.select(col(idCol), col(textCol)), store,
-      idCol = idCol, textCol = textCol)
     try {
-      if (priorBandCommit.isEmpty)
-        TableLog.commitAppend(spark, bandStorePath, adm.bands, act)
-      if (!corpusDone) {
-        // semi-join on the FULL batch (adm.accepted carries only the
-        // (id, text) projection admitBatch saw); appended-row count
-        // resolves from the commit's file stats, not a re-evaluation
-        // of the admission pipeline
-        val accepted = batch.join(
-          adm.accepted.select(col(idCol)), Seq(idCol), "left_semi")
-        val prevDirs = corpusHist.lastOption.map(_.dirs.toSet)
-          .getOrElse(Set.empty[String])
-        val c = TableLog.commitAppend(spark, corpusPath, accepted, act)
-        TableLog.newDirRows(c, prevDirs).getOrElse(accepted.count())
-      } else 0L
+      TableLog.commitTagged(spark, bandStorePath, act)(_ => adm.bands)
+      // semi-join on the FULL batch (adm.accepted carries only the
+      // (id, text) projection admitBatch saw)
+      TableLog.commitTagged(spark, corpusPath, act)(_ => batch.join(
+        adm.accepted.select(col(idCol)), Seq(idCol), "left_semi"))
+        .fold(0L)(_._2)
     } finally
       // admitBatch persists the batch band table for its three
       // consumers; a long-running ingest would otherwise leak one
       // cached frame per micro-batch
-      adm.bands.unpersist(blocking = false)
+      admitted.foreach(_.bands.unpersist(blocking = false))
   }
 
   /** Continuous admission of a parquet document stream into the corpus
@@ -92,18 +85,10 @@ object CorpusIngest {
   def admitDocuments(spark: SparkSession, sourceDir: String,
       corpusPath: String, bandStorePath: String, checkpointDir: String,
       glob: String = "documents.parquet",
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitOnce(batch.sparkSession, batch, corpusPath, bandStorePath,
-          batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) => admitOnce(batch.sparkSession, batch, corpusPath,
+        bandStorePath, batchId)
+    }
 }

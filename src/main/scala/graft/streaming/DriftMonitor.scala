@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.Drift
@@ -30,26 +29,27 @@ import graft.operators.Drift
   */
 object DriftMonitor {
 
-  private def driftAction(batchId: Long) = s"drift-$batchId"
+  /** The report commit every variant shares: `report` over the pinned
+    * baseline snapshot, tagged with the batch id and committed as
+    * `<kind>-<batchId>`. Returns the rows reported this call, from the
+    * commit's file stats (0 on a fully-replayed batch, which builds no
+    * report). */
+  private def reportTagged(spark: SparkSession, reportPath: String,
+      kind: String, batchId: Long, baselinePath: String,
+      baselineVersion: Int)(report: DataFrame => DataFrame): Long =
+    TableLog.commitTagged(spark, reportPath, s"$kind-$batchId") { _ =>
+      report(TableLog.read(spark, baselinePath, Some(baselineVersion)))
+        .withColumn("batch_id", lit(batchId))
+    }.fold(0L)(_._2)
 
   /** One batch's report, replay-safe. Returns the rows reported this
     * call (0 on a fully-replayed batch). Exposed for the spec's
     * crash-window simulations. */
   private[graft] def reportOnce(spark: SparkSession, batch: DataFrame,
       baselinePath: String, baselineVersion: Int, reportPath: String,
-      valueCol: String, bucketWidth: Double, batchId: Long): Long = {
-    val act = driftAction(batchId)
-    val hist = TableLog.history(spark, reportPath)
-    if (hist.exists(_.action == act)) return 0L
-    val baseline = TableLog.read(spark, baselinePath, Some(baselineVersion))
-    val report = Drift.psiReport(baseline, batch, valueCol, bucketWidth)
-      .withColumn("batch_id", lit(batchId))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet).getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, reportPath, report, act)
-    // the commit already materialized the report once; its file stats
-    // carry the row count — re-evaluating would scan the baseline again
-    TableLog.newDirRows(c, prevDirs).getOrElse(report.count())
-  }
+      valueCol: String, bucketWidth: Double, batchId: Long): Long =
+    reportTagged(spark, reportPath, "drift", batchId, baselinePath,
+      baselineVersion)(Drift.psiReport(_, batch, valueCol, bucketWidth))
 
   /** Watch a parquet stream directory; one PSI report per micro-batch
     * against `baselinePath@baselineVersion`, appended to `reportPath`.
@@ -58,20 +58,13 @@ object DriftMonitor {
   def monitor(spark: SparkSession, sourceDir: String, glob: String,
       baselinePath: String, baselineVersion: Int, reportPath: String,
       valueCol: String, bucketWidth: Double, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        reportOnce(batch.sparkSession, batch, baselinePath, baselineVersion,
-          reportPath, valueCol, bucketWidth, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) => reportOnce(batch.sparkSession, batch,
+        baselinePath, baselineVersion, reportPath, valueCol, bucketWidth,
+        batchId)
+    }
 
   // ---- embedding-space variant: same monitoring contract (pinned
   // baseline, per-batch report commits, action-tag idempotence), the
@@ -80,24 +73,14 @@ object DriftMonitor {
   // documents land where the validated snapshot says its labels
   // live"). Per batch: two labels·dims aggs, nothing stateful. ----
 
-  private def embDriftAction(batchId: Long) = s"embdrift-$batchId"
-
   /** One batch's embedding-drift report, replay-safe (0 rows on a
     * fully-replayed batch). */
   private[graft] def reportEmbeddingOnce(spark: SparkSession,
       batch: DataFrame, baselinePath: String, baselineVersion: Int,
       reportPath: String, batchId: Long,
-      labelCol: String = "label", vecCol: String = "embedding"): Long = {
-    val act = embDriftAction(batchId)
-    val hist = TableLog.history(spark, reportPath)
-    if (hist.exists(_.action == act)) return 0L
-    val baseline = TableLog.read(spark, baselinePath, Some(baselineVersion))
-    val report = Drift.embeddingDrift(baseline, batch, labelCol, vecCol)
-      .withColumn("batch_id", lit(batchId))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet).getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, reportPath, report, act)
-    TableLog.newDirRows(c, prevDirs).getOrElse(report.count())
-  }
+      labelCol: String = "label", vecCol: String = "embedding"): Long =
+    reportTagged(spark, reportPath, "embdrift", batchId, baselinePath,
+      baselineVersion)(Drift.embeddingDrift(_, batch, labelCol, vecCol))
 
   // ---- categorical variant: same monitoring contract, the report is
   // [[Drift.mixDivergence]] (Jensen–Shannon bits over a discrete
@@ -107,43 +90,25 @@ object DriftMonitor {
   // floored numeric buckets. Per batch: two category-cardinality
   // aggs, nothing stateful. ----
 
-  private def mixDriftAction(batchId: Long) = s"mixdrift-$batchId"
-
   /** One batch's mix-divergence report, replay-safe (0 rows on a
     * fully-replayed batch). */
   private[graft] def reportMixOnce(spark: SparkSession, batch: DataFrame,
       baselinePath: String, baselineVersion: Int, reportPath: String,
-      catCol: String, batchId: Long): Long = {
-    val act = mixDriftAction(batchId)
-    val hist = TableLog.history(spark, reportPath)
-    if (hist.exists(_.action == act)) return 0L
-    val baseline = TableLog.read(spark, baselinePath, Some(baselineVersion))
-    val report = Drift.mixDivergence(baseline, batch, catCol)
-      .withColumn("batch_id", lit(batchId))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet).getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, reportPath, report, act)
-    TableLog.newDirRows(c, prevDirs).getOrElse(report.count())
-  }
+      catCol: String, batchId: Long): Long =
+    reportTagged(spark, reportPath, "mixdrift", batchId, baselinePath,
+      baselineVersion)(Drift.mixDivergence(_, batch, catCol))
 
   /** Streaming categorical-mix monitor over a parquet stream; same
     * trigger/replay contract as [[monitor]]. */
   def monitorMix(spark: SparkSession, sourceDir: String, glob: String,
       baselinePath: String, baselineVersion: Int, reportPath: String,
       catCol: String, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        reportMixOnce(batch.sparkSession, batch, baselinePath,
-          baselineVersion, reportPath, catCol, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) => reportMixOnce(batch.sparkSession, batch,
+        baselinePath, baselineVersion, reportPath, catCol, batchId)
+    }
 
   // ---- Wasserstein variant: same monitoring contract, the report is
   // [[Drift.wassersteinReport]] — the monitor that answers "how far
@@ -151,44 +116,27 @@ object DriftMonitor {
   // answers "how surprising is the move". Per batch: one grouped
   // count each side + a cumulative window over the bucket table. ----
 
-  private def w1Action(batchId: Long) = s"w1-$batchId"
-
   /** One batch's Wasserstein report, replay-safe (0 rows on a fully
     * replayed batch). */
   private[graft] def reportW1Once(spark: SparkSession, batch: DataFrame,
       baselinePath: String, baselineVersion: Int, reportPath: String,
-      valueCol: String, bucketWidth: Double, batchId: Long): Long = {
-    val act = w1Action(batchId)
-    val hist = TableLog.history(spark, reportPath)
-    if (hist.exists(_.action == act)) return 0L
-    val baseline = TableLog.read(spark, baselinePath, Some(baselineVersion))
-    val report = Drift
-      .wassersteinReport(baseline, batch, valueCol, bucketWidth)
-      .withColumn("batch_id", lit(batchId))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet).getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, reportPath, report, act)
-    TableLog.newDirRows(c, prevDirs).getOrElse(report.count())
-  }
+      valueCol: String, bucketWidth: Double, batchId: Long): Long =
+    reportTagged(spark, reportPath, "w1", batchId, baselinePath,
+      baselineVersion)(
+      Drift.wassersteinReport(_, batch, valueCol, bucketWidth))
 
   /** Streaming Wasserstein monitor over a parquet stream; same
     * trigger/replay contract as [[monitor]]. */
   def monitorW1(spark: SparkSession, sourceDir: String, glob: String,
       baselinePath: String, baselineVersion: Int, reportPath: String,
       valueCol: String, bucketWidth: Double, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        reportW1Once(batch.sparkSession, batch, baselinePath,
-          baselineVersion, reportPath, valueCol, bucketWidth, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) => reportW1Once(batch.sparkSession, batch,
+        baselinePath, baselineVersion, reportPath, valueCol, bucketWidth,
+        batchId)
+    }
 
   // ---- separability variant: same monitoring contract, the report
   // is one [[graft.operators.ClassifierEval.aucSummary]] row per
@@ -200,8 +148,6 @@ object DriftMonitor {
   // grouped agg to the distinct-score table each side, nothing
   // stateful. ----
 
-  private def aucAction(batchId: Long) = s"auc-$batchId"
-
   /** One batch's separability report, replay-safe (0 rows on a
     * fully-replayed batch). `scoredBatch` and the baseline table both
     * carry `scoreCol` (discretized numeric) and boolean `labelCol`;
@@ -210,23 +156,17 @@ object DriftMonitor {
   private[graft] def reportAucOnce(spark: SparkSession,
       scoredBatch: DataFrame, baselinePath: String, baselineVersion: Int,
       reportPath: String, scoreCol: String, labelCol: String,
-      batchId: Long): Long = {
-    val act = aucAction(batchId)
-    val hist = TableLog.history(spark, reportPath)
-    if (hist.exists(_.action == act)) return 0L
-    val baseline = TableLog.read(spark, baselinePath, Some(baselineVersion))
-    val baseAuc = graft.operators.ClassifierEval
-      .aucSummary(baseline, scoreCol, labelCol)
-      .select(col("auc").as("base_auc"))
-    val report = graft.operators.ClassifierEval
-      .aucSummary(scoredBatch, scoreCol, labelCol)
-      .crossJoin(broadcast(baseAuc))   // 1-row × 1-row stat factor
-      .withColumn("delta", round(col("auc") - col("base_auc"), 6))
-      .withColumn("batch_id", lit(batchId))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet).getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, reportPath, report, act)
-    TableLog.newDirRows(c, prevDirs).getOrElse(report.count())
-  }
+      batchId: Long): Long =
+    reportTagged(spark, reportPath, "auc", batchId, baselinePath,
+      baselineVersion) { baseline =>
+      val baseAuc = graft.operators.ClassifierEval
+        .aucSummary(baseline, scoreCol, labelCol)
+        .select(col("auc").as("base_auc"))
+      graft.operators.ClassifierEval
+        .aucSummary(scoredBatch, scoreCol, labelCol)
+        .crossJoin(broadcast(baseAuc))   // 1-row × 1-row stat factor
+        .withColumn("delta", round(col("auc") - col("base_auc"), 6))
+    }
 
   /** Streaming separability monitor over a parquet stream: `score`
     * derives (scoreCol, labelCol) from each raw batch (the scorer
@@ -235,20 +175,13 @@ object DriftMonitor {
       score: DataFrame => DataFrame,
       baselinePath: String, baselineVersion: Int, reportPath: String,
       scoreCol: String, labelCol: String, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        reportAucOnce(batch.sparkSession, score(batch), baselinePath,
-          baselineVersion, reportPath, scoreCol, labelCol, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) => reportAucOnce(batch.sparkSession, score(batch),
+        baselinePath, baselineVersion, reportPath, scoreCol, labelCol,
+        batchId)
+    }
 
   /** Streaming embedding-drift monitor over a parquet vector stream;
     * same trigger/replay contract as [[monitor]]. */
@@ -256,18 +189,10 @@ object DriftMonitor {
       glob: String, baselinePath: String, baselineVersion: Int,
       reportPath: String, checkpointDir: String,
       maxFilesPerTrigger: Option[Int] = None,
-      labelCol: String = "label", vecCol: String = "embedding"): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        reportEmbeddingOnce(batch.sparkSession, batch, baselinePath,
-          baselineVersion, reportPath, batchId, labelCol, vecCol)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      labelCol: String = "label", vecCol: String = "embedding"): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) => reportEmbeddingOnce(batch.sparkSession, batch,
+        baselinePath, baselineVersion, reportPath, batchId, labelCol, vecCol)
+    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.Reliability
@@ -33,37 +32,24 @@ object EngagementMatrix {
   /** Fold one batch of events into the cell-count increment table,
     * replay-safe. Returns rows appended (0 on a replayed batch). */
   private[graft] def ingestOnce(spark: SparkSession, batch: DataFrame,
-      matrixPath: String, batchId: Long): Long = {
-    val act = action(batchId)
-    val hist = TableLog.history(spark, matrixPath)
-    if (hist.exists(_.action == act)) return 0L
-    val inc = batch
-      .where(col("user_id").isNotNull && col("event_type").isNotNull)
-      .groupBy(col("user_id").as("u"), col("event_type").as("i"))
-      .agg(count(lit(1)).as("c"))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet)
-      .getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, matrixPath, inc, act)
-    TableLog.newDirRows(c, prevDirs).getOrElse(inc.count())
-  }
+      matrixPath: String, batchId: Long): Long =
+    TableLog.commitTagged(spark, matrixPath, action(batchId)) { _ =>
+      batch
+        .where(col("user_id").isNotNull && col("event_type").isNotNull)
+        .groupBy(col("user_id").as("u"), col("event_type").as("i"))
+        .agg(count(lit(1)).as("c"))
+    }.fold(0L)(_._2)
 
   /** Watch an events parquet stream; fold each micro-batch into
     * `matrixPath`. */
   def monitor(spark: SparkSession, sourceDir: String, glob: String,
       matrixPath: String, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) =>
         ingestOnce(batch.sparkSession, batch, matrixPath, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** The alpha readout over everything ingested so far — identical
     * schema and values to [[Reliability.cronbachAlpha]] over the

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.Experiment
@@ -35,38 +34,25 @@ object ExperimentMonitor {
   /** Fold one batch's purchase events into the moments table,
     * replay-safe. Returns rows appended (0 on a replayed batch). */
   private[graft] def ingestOnce(spark: SparkSession, batch: DataFrame,
-      momentsPath: String, batchId: Long): Long = {
-    val act = expAction(batchId)
-    val hist = TableLog.history(spark, momentsPath)
-    if (hist.exists(_.action == act)) return 0L
-    val inc = batch
-      .where(col("event_type") === "purchase")
-      .groupBy(col("user_id"), to_date(col("ts")).as("d"))
-      .agg(sum("value").as("m"))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet)
-      .getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, momentsPath, inc, act)
-    TableLog.newDirRows(c, prevDirs).getOrElse(inc.count())
-  }
+      momentsPath: String, batchId: Long): Long =
+    TableLog.commitTagged(spark, momentsPath, expAction(batchId)) { _ =>
+      batch
+        .where(col("event_type") === "purchase")
+        .groupBy(col("user_id"), to_date(col("ts")).as("d"))
+        .agg(sum("value").as("m"))
+    }.fold(0L)(_._2)
 
   /** Watch an events parquet stream; fold each micro-batch into
     * `momentsPath`. AvailableNow + `maxFilesPerTrigger` bounds a
     * replayable run (the monitoring deployments drop the trigger). */
   def monitor(spark: SparkSession, sourceDir: String, glob: String,
       momentsPath: String, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.eventStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) =>
         ingestOnce(batch.sparkSession, batch, momentsPath, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** The always-valid dashboard over everything ingested so far:
     * re-aggregate the (user, day) increments, then the batch mSPRT.

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.Privacy
@@ -31,36 +30,25 @@ object PrivacyMonitor {
     * -1 for a replayed no-op. */
   def reportOnce(spark: SparkSession, batch: DataFrame,
       reportPath: String, quasiCols: Seq[String], sensitiveCol: String,
-      k: Int, batchId: Long): Int = {
-    val hist = TableLog.history(spark, reportPath)
-    if (hist.exists(_.action == act(batchId))) return -1
-    val report = Privacy
-      .anonymitySummary(batch, quasiCols, sensitiveCol, k)
-      .withColumn("batch_id", lit(batchId))
-    TableLog.commitAppend(spark, reportPath, report, act(batchId)).version
-  }
+      k: Int, batchId: Long): Int =
+    TableLog.commitTagged(spark, reportPath, act(batchId)) { _ =>
+      Privacy.anonymitySummary(batch, quasiCols, sensitiveCol, k)
+        .withColumn("batch_id", lit(batchId))
+    }.fold(-1)(_._1.version)
 
   /** Watch a parquet event stream; per micro-batch, audit the
     * (event_type, day) quasi-space with `user_id` as the sensitive
     * attribute and append the summary to `reportPath`. */
   def monitor(spark: SparkSession, sourceDir: String, glob: String,
       reportPath: String, checkpointDir: String, k: Int = 20,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = graft.io.Sources.repairEventTs(
-        Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        reportOnce(batch.sparkSession,
-          batch.withColumn("day", dayofmonth(col("ts"))),
-          reportPath, Seq("event_type", "day"), "user_id", k, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(ss =>
+      graft.io.Sources.repairEventTs(
+        Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger))) {
+      (batch, batchId) => reportOnce(batch.sparkSession,
+        batch.withColumn("day", dayofmonth(col("ts"))),
+        reportPath, Seq("event_type", "day"), "user_id", k, batchId)
+    }
 
   /** The registered query: single-batch AvailableNow run over the
     * bounded events table — the report equals the batch audit of the

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.Scd
@@ -28,41 +27,30 @@ object ScdStream {
   private def act(batchId: Long) = s"scd2-$batchId"
 
   /** Merge one batch into the dimension at `dimPath`, replay-safe.
+    * The merge reads the commit attempt's pinned snapshot, so a batch
+    * that loses the commit race re-merges onto the winner's dimension.
     * Returns the committed version, or -1 for a replayed no-op. */
   def applyBatchOnce(spark: SparkSession, batch: DataFrame,
       batchId: Long, dimPath: String, keyCol: String,
-      attrCol: Column): Int = {
-    val hist = TableLog.history(spark, dimPath)
-    if (hist.exists(_.action == act(batchId))) return -1
-    val merged =
-      if (hist.isEmpty) Scd.scd2Build(batch, keyCol, attrCol)
-      else Scd.scd2Merge(TableLog.read(spark, dimPath), batch,
-        keyCol, attrCol)
-    TableLog.commitOverwrite(spark, dimPath, merged,
-      action = act(batchId)).version
-  }
+      attrCol: Column): Int =
+    TableLog.commitTagged(spark, dimPath, act(batchId), replace = true) {
+      case None => Scd.scd2Build(batch, keyCol, attrCol)
+      case Some(dim) => Scd.scd2Merge(TableLog.readCommit(spark, dimPath, dim),
+        batch, keyCol, attrCol)
+    }.fold(-1)(_._1.version)
 
   /** Watch a parquet stream of profile events; each micro-batch's
     * signup/view rows update the user-tier dimension at `dimPath`. */
   def monitor(spark: SparkSession, sourceDir: String, glob: String,
       dimPath: String, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = graft.io.Sources.repairEventTs(
-        Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger))
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        applyBatchOnce(batch.sparkSession,
-          batch.where(col("event_type").isin("signup", "view")),
-          batchId, dimPath, "user_id",
-          floor(col("value") / 100).cast("int"))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(ss =>
+      graft.io.Sources.repairEventTs(
+        Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger))) {
+      (batch, batchId) => applyBatchOnce(batch.sparkSession,
+        batch.where(col("event_type").isin("signup", "view")),
+        batchId, dimPath, "user_id", floor(col("value") / 100).cast("int"))
+    }
 
   /** The registered query: replay the bounded events table as three
     * in-order day tranches (one micro-batch each), stream them into

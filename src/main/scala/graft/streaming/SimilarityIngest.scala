@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.AllPairsJoin
@@ -33,18 +32,12 @@ object SimilarityIngest {
     * replayed batch). */
   private[graft] def admitOnce(spark: SparkSession, batch: DataFrame,
       indexRoot: String, pairsPath: String, threshold: Double,
-      batchId: Long): Long = {
-    val a = act(batchId)
-    val hist = TableLog.history(spark, pairsPath)
-    if (hist.exists(_.action == a)) return 0L
-    if (batch.isEmpty) return 0L
-    val pairs = AllPairsJoin
-      .admit(spark, indexRoot, batch, threshold, action = a)
-      .withColumn("batch_id", lit(batchId))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet).getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, pairsPath, pairs, a)
-    TableLog.newDirRows(c, prevDirs).getOrElse(pairs.count())
-  }
+      batchId: Long): Long =
+    if (batch.isEmpty) 0L
+    else TableLog.commitTagged(spark, pairsPath, act(batchId)) { _ =>
+      AllPairsJoin.admit(spark, indexRoot, batch, threshold,
+        action = act(batchId)).withColumn("batch_id", lit(batchId))
+    }.fold(0L)(_._2)
 
   /** Watch a parquet stream directory; admit each micro-batch against
     * the index at `indexRoot` (built by [[AllPairsJoin.buildIndex]]),
@@ -53,18 +46,10 @@ object SimilarityIngest {
   def ingest(spark: SparkSession, sourceDir: String, glob: String,
       indexRoot: String, pairsPath: String, threshold: Double,
       checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitOnce(batch.sparkSession, batch, indexRoot, pairsPath,
-          threshold, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) => admitOnce(batch.sparkSession, batch, indexRoot,
+        pairsPath, threshold, batchId)
+    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Watermarked stream–stream interval join — the §2.8 operator the
   * tier was missing next to stream-static enrichment (q56): attribute
@@ -29,40 +28,30 @@ object StreamJoin {
     * contract. Ordered by (purchase_id, view_id). */
   def viewPurchasePairs(spark: SparkSession, sourceDir: String,
       glob: String = "events.parquet", windowMinutes: Int = 30,
-      sinkName: String = "vp_pairs",
-      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val ss = Streams.streamSession(spark)
-    def side(tpe: String, idAs: String, tsAs: String) =
-      Streams.eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
-        .where(col("event_type") === tpe)
-        .select(col("user_id"), col("event_id").as(idAs),
-          col("ts").as(tsAs),
-          (if (tpe == "purchase") col("value") else lit(null))
-            .as(s"__v_$tpe"))
-        .withWatermark(tsAs, "1 hour")
-    val views = side("view", "view_id", "view_ts")
-      .drop("__v_view")
-    val purchases = side("purchase", "purchase_id", "purchase_ts")
-      .withColumnRenamed("__v_purchase", "value")
-    val joined = views.as("v").join(purchases.as("p"),
-      expr(s"""v.user_id = p.user_id AND
-        p.purchase_ts >= v.view_ts AND
-        p.purchase_ts <= v.view_ts + INTERVAL $windowMinutes MINUTES"""))
-    val q = joined
-      .select(col("v.user_id").as("user_id"), col("view_id"),
-        col("purchase_id"), col("view_ts"), col("purchase_ts"),
-        (unix_timestamp(col("purchase_ts")) -
-          unix_timestamp(col("view_ts"))).as("lag_seconds"),
-        round(col("value"), 2).as("value"))
-      .writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(sinkName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    ss.table(sinkName).orderBy("purchase_id", "view_id")
-  }
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    Streams.runToTable(spark, "append") { ss =>
+      def side(tpe: String, idAs: String, tsAs: String) =
+        Streams.eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
+          .where(col("event_type") === tpe)
+          .select(col("user_id"), col("event_id").as(idAs),
+            col("ts").as(tsAs),
+            (if (tpe == "purchase") col("value") else lit(null))
+              .as(s"__v_$tpe"))
+          .withWatermark(tsAs, "1 hour")
+      val views = side("view", "view_id", "view_ts")
+        .drop("__v_view")
+      val purchases = side("purchase", "purchase_id", "purchase_ts")
+        .withColumnRenamed("__v_purchase", "value")
+      views.as("v").join(purchases.as("p"),
+        expr(s"""v.user_id = p.user_id AND
+          p.purchase_ts >= v.view_ts AND
+          p.purchase_ts <= v.view_ts + INTERVAL $windowMinutes MINUTES"""))
+        .select(col("v.user_id").as("user_id"), col("view_id"),
+          col("purchase_id"), col("view_ts"), col("purchase_ts"),
+          (unix_timestamp(col("purchase_ts")) -
+            unix_timestamp(col("view_ts"))).as("lag_seconds"),
+          round(col("value"), 2).as("value"))
+    }.orderBy("purchase_id", "view_id")
 
   /** DuckDB oracle for [[viewPurchasePairs]] at 30 minutes. */
   val viewPurchasePairsOracleSql: String =

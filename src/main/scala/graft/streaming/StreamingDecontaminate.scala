@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.Decontaminate
@@ -36,16 +35,11 @@ object StreamingDecontaminate {
     * batch is a tiny-file scan that feeds a broadcast. */
   private[graft] def gateOnce(spark: SparkSession, batch: DataFrame,
       benchGramPath: String, decisionsPath: String, batchId: Long,
-      n: Int, rejectMin: Long): Long = {
-    val act = s"gate-$batchId"
-    if (TableLog.history(spark, decisionsPath).exists(_.action == act))
-      return 0L
-    val decisions = Decontaminate.gateDecisions(
-      batch, spark.read.parquet(benchGramPath), n = n,
-      rejectMin = rejectMin)
-    TableLog.commitAppend(spark, decisionsPath, decisions, act)
-    decisions.count()
-  }
+      n: Int, rejectMin: Long): Long =
+    TableLog.commitTagged(spark, decisionsPath, s"gate-$batchId") { _ =>
+      Decontaminate.gateDecisions(batch, spark.read.parquet(benchGramPath),
+        n = n, rejectMin = rejectMin)
+    }.fold(0L)(_._2)
 
   /** Bounded gated run over the documents table: benchmark = docs
     * with `doc_id % benchMod == 0` (the q72 split), stream = the
@@ -65,20 +59,12 @@ object StreamingDecontaminate {
         allDocs.filter(col("doc_id") % benchMod === 0), n = n)
       .coalesce(1).write.parquet(benchPath)
 
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, dir, "documents.parquet",
-        maxFilesPerTrigger)
-      .filter(col("doc_id") % benchMod =!= 0)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        gateOnce(batch.sparkSession, batch, benchPath, decisionsPath,
-          batchId, n, rejectMin)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Streams.runBatches(spark, checkpoint)(ss =>
+      Streams.parquetStream(ss, dir, "documents.parquet", maxFilesPerTrigger)
+        .filter(col("doc_id") % benchMod =!= 0)) { (batch, batchId) =>
+      gateOnce(batch.sparkSession, batch, benchPath, decisionsPath,
+        batchId, n, rejectMin)
+    }
     TableLog.read(spark, decisionsPath).orderBy("doc_id")
   }
 }

@@ -66,6 +66,22 @@ object Streams {
     ss
   }
 
+  /** The micro-batch runner every foreachBatch sink shares: fork the
+    * stream session ([[streamSession]]), build `source` on it, run
+    * `sink` on each micro-batch under `AvailableNow` with the checkpoint
+    * at `checkpointDir`, and wait for the query to finish. The trigger
+    * decision lives here alone; a sink's replay safety lives in its
+    * commit ([[graft.lake.TableLog.commitTagged]]). */
+  private[streaming] def runBatches(spark: SparkSession,
+      checkpointDir: String)(source: SparkSession => DataFrame)(
+      sink: (DataFrame, Long) => Unit): Unit =
+    source(streamSession(spark)).writeStream
+      .foreachBatch(sink)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
   /** File-source stream over parquet files matching `glob`: one
     * schema-inference batch read, then a schema-pinned readStream —
     * the shared recipe behind every ingest loop in this package
@@ -288,25 +304,18 @@ object Streams {
   def mergeEventsToLake(spark: SparkSession, sourceDir: String,
       targetPath: String, checkpointDir: String,
       glob: String = "events.parquet",
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = streamSession(spark)
-    val stream = eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .withColumn("dt", to_date(col("ts")))
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // MERGE requires key-unique updates: duplicates WITHIN one batch
-        // (at-least-once upstream can re-deliver inside a trigger too)
-        // must collapse before the upsert, not just across batches.
-        graft.lake.MergeWriter.mergeWrite(
-          batch.sparkSession, targetPath,
-          batch.dropDuplicates("dt", "event_id"),
-          keys = Seq("dt", "event_id"), partitionCols = Seq("dt"))
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    runBatches(spark, checkpointDir)(ss =>
+      eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
+        .withColumn("dt", to_date(col("ts")))) { (batch, _) =>
+      // MERGE requires key-unique updates: duplicates WITHIN one batch
+      // (at-least-once upstream can re-deliver inside a trigger too)
+      // must collapse before the upsert, not just across batches.
+      graft.lake.MergeWriter.mergeWrite(
+        batch.sparkSession, targetPath,
+        batch.dropDuplicates("dt", "event_id"),
+        keys = Seq("dt", "event_id"), partitionCols = Seq("dt"))
+    }
 
   /** [[mergeEventsToLake]] with a versioned TABLE-LOG target: each
     * micro-batch is a `commitMerge`, so ingestion history is queryable
@@ -318,21 +327,13 @@ object Streams {
   def mergeEventsToVersionedLake(spark: SparkSession, sourceDir: String,
       tablePath: String, checkpointDir: String,
       glob: String = "events.parquet",
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = streamSession(spark)
-    val stream = eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .withColumn("dt", to_date(col("ts")))
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.lake.TableLog.commitMerge(
-          batch.sparkSession, tablePath,
-          batch.dropDuplicates("dt", "event_id"),
-          keys = Seq("dt", "event_id"))
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    runBatches(spark, checkpointDir)(ss =>
+      eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
+        .withColumn("dt", to_date(col("ts")))) { (batch, _) =>
+      graft.lake.TableLog.commitMerge(
+        batch.sparkSession, tablePath,
+        batch.dropDuplicates("dt", "event_id"),
+        keys = Seq("dt", "event_id"))
+    }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.Regression
@@ -34,36 +33,23 @@ object TrendMonitor {
   /** Fold one batch into the daily-increment table, replay-safe.
     * Returns rows appended (0 on a replayed batch). */
   private[graft] def ingestOnce(spark: SparkSession, batch: DataFrame,
-      dailyPath: String, batchId: Long): Long = {
-    val act = trendAction(batchId)
-    val hist = TableLog.history(spark, dailyPath)
-    if (hist.exists(_.action == act)) return 0L
-    val inc = batch
-      .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-      .agg(sum("value").as("y"))
-    val prevDirs = hist.lastOption.map(_.dirs.toSet)
-      .getOrElse(Set.empty[String])
-    val c = TableLog.commitAppend(spark, dailyPath, inc, act)
-    TableLog.newDirRows(c, prevDirs).getOrElse(inc.count())
-  }
+      dailyPath: String, batchId: Long): Long =
+    TableLog.commitTagged(spark, dailyPath, trendAction(batchId)) { _ =>
+      batch
+        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
+        .agg(sum("value").as("y"))
+    }.fold(0L)(_._2)
 
   /** Watch an events parquet stream; fold each micro-batch into
     * `dailyPath`. */
   def monitor(spark: SparkSession, sourceDir: String, glob: String,
       dailyPath: String, checkpointDir: String,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.eventStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.eventStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) =>
         ingestOnce(batch.sparkSession, batch, dailyPath, batchId)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+    }
 
   /** The trend dashboard over everything ingested so far:
     * re-aggregate the (event_type, day) increments, then the batch

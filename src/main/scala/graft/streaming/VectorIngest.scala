@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.lake.TableLog
 import graft.operators.VectorIndex
@@ -34,27 +33,29 @@ object VectorIngest {
   private[graft] def admitBatchOnce(spark: SparkSession, batch: DataFrame,
       indexRoot: String, batchId: Long, failOnDrift: Boolean = false,
       idCol: String = "vec_id", vecCol: String = "embedding"): (Long, Double) = {
-    val act = admitAction(batchId)
-    val postings = VectorIndex.postingsPath(indexRoot)
-    val hist = TableLog.history(spark, postings)
-    if (hist.exists(_.action == act)) return (0L, Double.NaN)
     if (batch.isEmpty) return (0L, Double.NaN)
-    val (cents, buildErr) = VectorIndex.loadCodebook(spark, indexRoot)
+    // built by the first commit attempt only (a replay builds nothing);
     // assigned feeds both the drift aggregate and the postings write —
     // pay the centroid assignment once per batch, not twice
-    val assigned = graft.operators.Similarity
-      .assignToCentroids(batch, cents, idCol, vecCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val drift = VectorIndex.batchDrift(assigned, cents, buildErr, vecCol)
+    var assigned: Option[DataFrame] = None
+    var drift = Double.NaN
+    def postings(): DataFrame = assigned.getOrElse {
+      val (cents, buildErr) = VectorIndex.loadCodebook(spark, indexRoot)
+      val a = graft.operators.Similarity
+        .assignToCentroids(batch, cents, idCol, vecCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      assigned = Some(a)
+      drift = VectorIndex.batchDrift(a, cents, buildErr, vecCol)
       if (failOnDrift && VectorIndex.needsRefit(drift))
         throw new IllegalStateException(
           f"embedding drift $drift%.2f exceeds refit tolerance — rebuild the " +
             "codebook (VectorIndex.build) and restart the stream")
-      val prevDirs = hist.lastOption.map(_.dirs.toSet).getOrElse(Set.empty[String])
-      val c = TableLog.commitAppend(spark, postings, assigned, act)
-      (TableLog.newDirRows(c, prevDirs).getOrElse(assigned.count()), drift)
-    } finally assigned.unpersist(blocking = false)
+      a
+    }
+    try TableLog.commitTagged(spark, VectorIndex.postingsPath(indexRoot),
+        admitAction(batchId))(_ => postings())
+      .fold((0L, Double.NaN))(c => (c._2, drift))
+    finally assigned.foreach(_.unpersist(blocking = false))
   }
 
   /** Continuous admission of a parquet embedding stream into the index
@@ -65,18 +66,10 @@ object VectorIngest {
       indexRoot: String, checkpointDir: String,
       glob: String = "embeddings.parquet",
       maxFilesPerTrigger: Option[Int] = None,
-      failOnDrift: Boolean = false): Unit = {
-    val ss = Streams.streamSession(spark)
-    val q = Streams.parquetStream(ss, sourceDir, glob, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        admitBatchOnce(batch.sparkSession, batch, indexRoot, batchId,
-          failOnDrift)
-        ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+      failOnDrift: Boolean = false): Unit =
+    Streams.runBatches(spark, checkpointDir)(
+      Streams.parquetStream(_, sourceDir, glob, maxFilesPerTrigger)) {
+      (batch, batchId) => admitBatchOnce(batch.sparkSession, batch,
+        indexRoot, batchId, failOnDrift)
+    }
 }

@@ -59,7 +59,7 @@ class CatalogSpec extends AnyFunSuite {
     // raw v1 (no inputs), raw v2 ingested from an unversioned feed
     TableLog.commitOverwrite(spark, s"$base/raw", df)
     TableLog.commitAppend(spark, s"$base/raw", Seq((2L, "b")).toDF("id", "v"),
-      "append", Seq(TableLog.InputRef("ext/feed", None)))
+      Seq(TableLog.InputRef("ext/feed", None)))
     // stg ← raw@2, mart ← stg@1: a staging→mart chain
     TableLog.commitOverwrite(spark, s"$base/stg", df,
       Seq(TableLog.inputRef(spark, s"$base/raw", "raw")))
@@ -100,7 +100,7 @@ class CatalogSpec extends AnyFunSuite {
       Seq(TableLog.inputRef(spark, s"$base/ord", "ord")))
     // ord advances PAST the recorded version, fed by a different feed
     TableLog.commitAppend(spark, s"$base/ord",
-      Seq((2L, "b")).toDF("id", "v"), "append",
+      Seq((2L, "b")).toDF("id", "v"),
       Seq(TableLog.InputRef("feed_new", None)))
     val tables = Map("ord" -> s"$base/ord", "mart" -> s"$base/mart")
     // the closure walks ord AT v1: feed_old appears, feed_new must not
@@ -124,7 +124,7 @@ class CatalogSpec extends AnyFunSuite {
     // ord v1 clean; ord v2 fed by the bad feed
     TableLog.commitOverwrite(spark, s"$base/ord", df)
     TableLog.commitAppend(spark, s"$base/ord",
-      Seq((2L, "b")).toDF("id", "v"), "append",
+      Seq((2L, "b")).toDF("id", "v"),
       Seq(TableLog.InputRef("bad_feed", None)))
     // mart v1 pinned to clean ord@1; mart v2 pinned to ord@2;
     // audit consumed ord WITHOUT a version — must taint conservatively
@@ -145,7 +145,7 @@ class CatalogSpec extends AnyFunSuite {
     // appends clean rows, but v2's poisoned rows persist in the v3
     // snapshot — a consumer pinned to ord@3 must still be flagged
     TableLog.commitAppend(spark, s"$base/ord",
-      Seq((3L, "c")).toDF("id", "v"), "append",
+      Seq((3L, "c")).toDF("id", "v"),
       Seq(TableLog.InputRef("clean_feed", None)))
     TableLog.commitMerge(spark, s"$base/mart", df, Seq("id"),
       Seq(TableLog.InputRef("ord", Some(3))))

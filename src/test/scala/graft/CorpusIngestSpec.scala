@@ -69,7 +69,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     // never happens
     val b2 = Seq((3L, textA), (4L, textC)).toDF("doc_id", "text")
     val adm = IncrementalDedup.admitBatch(b2, Some(TableLog.read(spark, bands)))
-    TableLog.commitAppend(spark, bands, adm.bands, "admit-1")
+    TableLog.commitTagged(spark, bands, "admit-1")(_ => adm.bands)
     // replay of batch 1: its own stored bands must NOT reject it —
     // admission re-runs against the store as of BEFORE the band commit
     val n = CorpusIngest.admitOnce(spark, b2, corpus, bands, batchId = 1L)

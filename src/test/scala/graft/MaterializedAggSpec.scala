@@ -117,7 +117,7 @@ class MaterializedAggSpec extends AnyFunSuite {
     // basename ("t1") differs — the default basename edge would be an
     // external leaf in this namespace and the walk would stop there
     TableLog.commitAppend(spark, s"$base/t1",
-      Seq(("a", 1L)).toDF("k", "v"), "append",
+      Seq(("a", 1L)).toDF("k", "v"),
       Seq(TableLog.InputRef("ext/feed", None)))
     MaterializedAgg.refresh(spark, s"$base/t1", s"$base/mv_dir", spec,
       srcName = Some("sales_src"))

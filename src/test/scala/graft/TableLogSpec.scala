@@ -411,26 +411,21 @@ class TableLogSpec extends AnyFunSuite {
     assert(dataFiles(p1, c1).size == 1,
       "10-row map-only commit should write 1 file")
     assert(TableLog.read(spark, p1).count() == 10)
-    // disabled via conf: the map-side partitioning writes through
-    val p2 = freshPath()
-    spark.conf.set("graft.write.smallBytes", "0")
-    try {
-      val c2 = TableLog.commitAppend(spark, p2, small)
-      assert(dataFiles(p2, c2).size > 1,
-        "with optimize-write disabled the map partitioning persists")
-    } finally spark.conf.unset("graft.write.smallBytes")
-    // a frame the estimator can't call small keeps its parallelism:
-    // raw range partitions carry the full long-range size estimate
-    // large-estimate branch exercised cheaply: lower the threshold so
-    // a small 8-partition frame counts as "large" and writes through
+    // a frame the estimator can't call small keeps its parallelism: the
+    // non-CBO estimator keeps a filter's input size and multiplies a
+    // cross join's, so 1000 real rows (a filtered 8-partition range)
+    // crossed with one broadcast row estimate far above the 64 MiB
+    // threshold and are written with the 8 map partitions
     val p3 = freshPath()
-    spark.conf.set("graft.write.smallBytes", "64")
-    val c3 =
-      try TableLog.commitAppend(spark, p3,
-        spark.range(0, 1000, 1, 8).select(col("id"), col("id").as("v")))
-      finally spark.conf.unset("graft.write.smallBytes")
+    val large = spark.range(0, 1000000, 1, 8).where(col("id") % 1000 === 0)
+      .crossJoin(spark.range(0, 100).where(col("id") === 0)
+        .select(col("id").as("v")))
+    assert(large.queryExecution.optimizedPlan.stats.sizeInBytes >
+      BigInt(64L * 1024 * 1024))
+    val c3 = TableLog.commitAppend(spark, p3, large)
     assert(dataFiles(p3, c3).size == 8,
       "a large-estimate frame is written with its own partitioning")
+    assert(TableLog.read(spark, p3).count() == 1000)
     // an explicit repartition is the caller's layout choice (z-order
     // files, pruning structure) — never collapsed, however small
     val p4 = freshPath()

@@ -6,6 +6,8 @@ import scala.concurrent.{Await, Future}
 import scala.concurrent.duration._
 import scala.concurrent.ExecutionContext.Implicits.global
 
+import org.apache.spark.sql.functions.col
+
 import graft.lake.TableLog
 
 /** Concurrent-writer STRESS net for the table log, beyond
@@ -428,6 +430,84 @@ class TableLogStressSpec extends AnyFunSuite {
     assert(c.version == 3 && c.action == "optimize")
     assert(TableLog.read(spark, path).as[(Long, Long)].collect().toSet ==
       (base :+ ((1000L, 1000L))).toSet)
+    cleanAfterRace(path)
+  }
+
+  test("lost race: a tagged commit that loses to a winner carrying the " +
+    "same tag returns None and the tag's rows land once") {
+    val path = mockS3Table()
+    TableLog.commitAppend(spark, path, Seq((1L, "base")).toDF("id", "v"))
+    val got = losingTo(TableLog.commitTagged(spark, path, "batch-7")(_ =>
+        Seq((7L, "winner")).toDF("id", "v"))) {
+      TableLog.commitTagged(spark, path, "batch-7")(_ =>
+        Seq((7L, "zombie")).toDF("id", "v"))
+    }
+    assert(got.isEmpty, "the loser must not publish a second batch-7")
+    assert(TableLog.history(spark, path).count(_.action == "batch-7") == 1)
+    assert(rows(TableLog.read(spark, path)) ==
+      Set((1L, "base"), (7L, "winner")))
+    cleanAfterRace(path)
+  }
+
+  test("lost race: a tagged append that loses to an untagged append is " +
+    "rebuilt on the winner and counts only its own rows") {
+    val path = mockS3Table()
+    TableLog.commitAppend(spark, path, Seq((1L, "base")).toDF("id", "v"))
+    val seen = scala.collection.mutable.Buffer.empty[Option[Int]]
+    val got = losingTo(TableLog.commitAppend(spark, path,
+        (10L to 14L).map(i => (i, "winner")).toDF("id", "v"))) {
+      TableLog.commitTagged(spark, path, "batch-3") { prev =>
+        seen += prev.map(_.version)
+        Seq((3L, "own"), (4L, "own")).toDF("id", "v")
+      }
+    }
+    assert(seen == Seq(Some(1), Some(2)),
+      s"the retry must build on the winner's snapshot: $seen")
+    val (c, n) = got.get
+    assert(c.version == 3 && c.action == "batch-3")
+    assert(n == 2L, s"expected this commit's 2 rows, got $n")
+    assert(rows(TableLog.read(spark, path)).size == 8)
+    cleanAfterRace(path)
+
+    // the same through a sink: its count excludes the winner's rows
+    val matrix = mockS3Table()
+    val events = Seq((1L, "view"), (1L, "click"), (2L, "view"))
+      .toDF("user_id", "event_type")
+    val appended = losingTo(TableLog.commitAppend(spark, matrix,
+        Seq((9L, "view", 5L)).toDF("u", "i", "c"))) {
+      graft.streaming.EngagementMatrix.ingestOnce(spark, events, matrix, 0L)
+    }
+    assert(appended == 3L, s"expected the batch's 3 cells, got $appended")
+    cleanAfterRace(matrix)
+  }
+
+  test("lost race: an SCD2 batch whose first attempt loses keeps the " +
+    "winner's rows, merging onto its dimension") {
+    import graft.operators.Scd
+    import graft.streaming.ScdStream
+    val path = mockS3Table()
+    def feed(rs: (Long, String, Long, Int)*) =
+      rs.toDF("user_id", "ts_s", "event_id", "attr_in")
+        .withColumn("ts", col("ts_s").cast("timestamp")).drop("ts_s")
+    val b0 = feed((1L, "2024-01-01 00:00:00", 0L, 10),
+      (2L, "2024-01-02 00:00:00", 1L, 5))
+    val b1 = feed((1L, "2024-01-03 00:00:00", 2L, 20),
+      (3L, "2024-01-03 00:00:00", 3L, 7))
+    val b2 = feed((1L, "2024-01-05 00:00:00", 4L, 30),
+      (2L, "2024-01-05 00:00:00", 5L, 6))
+    ScdStream.applyBatchOnce(spark, b0, 0L, path, "user_id", col("attr_in"))
+    val v = losingTo(ScdStream.applyBatchOnce(spark, b1, 1L, path,
+        "user_id", col("attr_in"))) {
+      ScdStream.applyBatchOnce(spark, b2, 2L, path, "user_id", col("attr_in"))
+    }
+    assert(v == 3)
+    def dim(df: org.apache.spark.sql.DataFrame) = df
+      .select("user_id", "attr", "valid_from", "valid_to", "is_current")
+      .orderBy("user_id", "valid_from").collect().toSeq
+    assert(dim(TableLog.read(spark, path)) == dim(Scd.scd2Build(
+      b0.unionByName(b1).unionByName(b2), "user_id", col("attr_in"))),
+      "the retried merge must keep batch 1's rows (user 3, user 1's " +
+        "2024-01-03 version)")
     cleanAfterRace(path)
   }
 }

@@ -90,7 +90,7 @@ class UpliftStreamSpec extends AnyFunSuite {
     writeOne(root, "f1.parquet", ev)
     val pairs = StreamJoin.viewPurchasePairs(spark,
       root.resolve("src").toString, "*.parquet",
-      windowMinutes = 30, sinkName = "vp_spec")
+      windowMinutes = 30)
       .collect()
     assert(pairs.map(r => (r.getLong(1), r.getLong(2))).toSet ==
       Set((1L, 2L), (1L, 3L)), "exactly the in-window pairs")
