@@ -772,7 +772,19 @@ object ScaleProbe {
       // daily agg + days² double-centered distance matrices
       "dcor" -> (d =>
         graft.operators.Causality.distanceCorrelation(d).count()),
-      // 24-row hour histogram + ordered windows over it
+      // exact KS, Lilliefors and BWS over the distinct-value table of
+      // `value`: the frequency table and its running counts are the
+      // PrefixSum stage (BWS adds its per-(value, cohort) row numbers);
+      // collected, so no result column is pruned away
+      "ks_exact" -> (d => graft.operators.Drift.ksReport(
+        d.where(col("user_id") % 2 === 0), d.where(col("user_id") % 2 === 1),
+        "value").collect().length.toLong),
+      "lilliefors" -> (d => graft.operators.Normality
+        .lilliefors(d, col("value")).collect().length.toLong),
+      "bws" -> (d => graft.operators.TwoSampleRank.bws(d,
+        col("user_id") % 2 === 1, col("value"), col("event_id"))
+        .collect().length.toLong),
+      // 24-row hour histogram + running counts over it
       "kuiper" -> (d =>
         graft.operators.Drift.kuiperUniformity(d).count()),
       // per-season day-pair cross (calendar²/7) + tie tables

@@ -158,16 +158,17 @@ object AllPairsJoin {
   def admit(spark: org.apache.spark.sql.SparkSession,
       storePath: String, batch: DataFrame, threshold: Double,
       k: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text", action: String = "admit"): DataFrame = {
+      textCol: String = "text", action: Option[String] = None): DataFrame = {
     import graft.lake.TableLog
     // replay guard for the streaming path: a crash between the index
     // append and the consumer's own commit re-runs this call with the
     // batch ALREADY indexed — pair math stays correct (the id_a≠id_b
     // guard drops self-matches against the stored copy, distinct
     // merges the doubled candidates), and each index append is a
-    // commit tagged `action`, which the replay skips
-    val alreadyIndexed = TableLog
-      .history(spark, s"$storePath/grams").exists(_.action == action)
+    // commit tagged `action`, which the replay skips. An untagged call
+    // is never a replay: it always appends.
+    val alreadyIndexed = action.exists(tag => TableLog
+      .history(spark, s"$storePath/grams").exists(_.action == tag))
     val frozen = TableLog.read(spark, s"$storePath/df")
     val oldGrams = TableLog.read(spark, s"$storePath/grams")
     val oldPrefix = TableLog.read(spark, s"$storePath/prefix")
@@ -215,8 +216,12 @@ object AllPairsJoin {
       .orderBy("id_a", "id_b")
       .truncateLineage()   // pin results before the index mutates
 
-    TableLog.commitTagged(spark, s"$storePath/grams", action)(_ => newGrams)
-    TableLog.commitTagged(spark, s"$storePath/prefix", action)(_ => newPrefix)
+    def append(table: String, df: DataFrame): Unit = action match {
+      case Some(tag) =>
+        TableLog.commitTagged(spark, s"$storePath/$table", tag)(_ => df)
+      case None => TableLog.commitAppend(spark, s"$storePath/$table", df)
+    }
+    append("grams", newGrams); append("prefix", newPrefix)
     newGrams.unpersist(); newPrefix.unpersist()
     out
   }

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+
+import graft.util.PrefixSum
 
 /** Threshold-free classifier evaluation at corpus scale — ROC AUC via
   * the Mann–Whitney U identity (AUC = P(score⁺ > score⁻) + ½P(tie)),
@@ -19,10 +20,10 @@ import org.apache.spark.sql.expressions.Window
   *      `(score, n_pos, n_neg)` — scores in these pipelines are
   *      rounded/bucketed (this engine rounds quality to 4 decimals),
   *      so the table is at most ~10⁴ rows regardless of corpus size;
-  *   2. a window over THAT table accumulates negatives strictly
-  *      below each score; AUC = Σ_s n_pos(s)·(cneg_below(s) +
-  *      ½·n_neg(s)) / (P·N) — the ½ term IS the tied-pair
-  *      correction, identical to average-rank Mann–Whitney.
+  *   2. running counts over THAT table ([[PrefixSum]]) give the
+  *      negatives strictly below each score; AUC = Σ_s n_pos(s)·
+  *      (cneg_below(s) + ½·n_neg(s)) / (P·N) — the ½ term IS the
+  *      tied-pair correction, identical to average-rank Mann–Whitney.
   * Continuous scores take the same path after an explicit
   * `round(score, d)` (a documented resolution choice, not a silent
   * approximation: with d decimals the bucketing perturbs AUC by at
@@ -30,7 +31,10 @@ import org.apache.spark.sql.expressions.Window
   */
 object ClassifierEval {
 
-  /** Distinct-score class-count table: `(score, n_pos, n_neg)`. */
+  /** Distinct-score class-count table: `(score, n_pos, n_neg)`. Its
+    * NULL-score group has no rank: [[PrefixSum]] drops it, and so must
+    * every total. Not a filter: Spark pushes a filter on the grouping
+    * key below the agg, which evaluates a computed score twice. */
   private def scoreTable(scored: DataFrame, scoreCol: String,
       labelCol: String): DataFrame =
     scored
@@ -46,20 +50,17 @@ object ClassifierEval {
     * degenerate corpus (single class): no ordering evidence either
     * way. */
   def aucSummary(scored: DataFrame, scoreCol: String,
-      labelCol: String): DataFrame = {
-    val byScore = scoreTable(scored, scoreCol, labelCol)
-    // the window runs over the distinct-score table only — bounded,
-    // never corpus-sized; single-partition is correct AND cheap here
-    val w = Window.orderBy("score")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    byScore
-      .withColumn("__cneg", coalesce(sum("n_neg").over(w), lit(0L)))
+      labelCol: String): DataFrame =
+    PrefixSum.running(scoreTable(scored, scoreCol, labelCol), "score",
+        Seq("n_neg"))
       .agg(
         sum("n_pos").as("n_pos"),
         sum("n_neg").as("n_neg"),
         count(lit(1)).as("n_scores"),
-        sum(col("n_pos") * (col("__cneg").cast("double") +
-          col("n_neg").cast("double") / 2.0)).as("__u"))
+        // negatives strictly below the score, plus half the tied ones
+        sum(col("n_pos") *
+          ((col("n_neg_cum") - col("n_neg")).cast("double") +
+            col("n_neg").cast("double") / 2.0)).as("__u"))
       .select(
         col("n_pos"), col("n_neg"), col("n_scores"),
         round(when(col("n_pos") === 0 || col("n_neg") === 0, 0.5)
@@ -67,6 +68,21 @@ object ClassifierEval {
             (col("n_pos").cast("double") * col("n_neg").cast("double"))),
           6).as("auc"))
       .withColumn("gini", round(col("auc") * 2.0 - 1.0, 6))
+
+  /** The distinct-score table with the class totals `__p`, `__n` and
+    * the class counts at or above each score, `__tp` and `__fp` — the
+    * rule "predict positive when score ≥ s" at every threshold. */
+  private def atOrAbove(scored: DataFrame, scoreCol: String,
+      labelCol: String): DataFrame = {
+    val byScore = scoreTable(scored, scoreCol, labelCol)
+    val ranked = col("score").isNotNull
+    val totals = byScore.agg(sum(when(ranked, col("n_pos"))).as("__p"),
+      sum(when(ranked, col("n_neg"))).as("__n"))
+    PrefixSum.running(byScore, "score", Seq("n_pos", "n_neg"))
+      .crossJoin(broadcast(totals))  // 1-row stat factor, not data-sized
+      // at or above s = the total less what lies strictly below s
+      .withColumn("__tp", col("__p") - col("n_pos_cum") + col("n_pos"))
+      .withColumn("__fp", col("__n") - col("n_neg_cum") + col("n_neg"))
   }
 
   /** ROC curve at score-distribution resolution: one point per
@@ -77,15 +93,8 @@ object ClassifierEval {
     * chooser actually plots, and its trapezoid sum re-derives AUC
     * (asserted in the spec). */
   def rocCurve(scored: DataFrame, scoreCol: String,
-      labelCol: String): DataFrame = {
-    val byScore = scoreTable(scored, scoreCol, labelCol)
-    val wGe = Window.orderBy(col("score").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val totals = byScore.agg(sum("n_pos").as("__p"), sum("n_neg").as("__n"))
-    byScore
-      .withColumn("__tp", sum("n_pos").over(wGe))
-      .withColumn("__fp", sum("n_neg").over(wGe))
-      .crossJoin(broadcast(totals))  // 1-row stat factor, not data-sized
+      labelCol: String): DataFrame =
+    atOrAbove(scored, scoreCol, labelCol)
       .select(
         col("score"),
         round(col("__tp").cast("double") / col("__p"), 6).as("tpr"),
@@ -93,7 +102,6 @@ object ClassifierEval {
         round(col("__tp").cast("double") /
           (col("__tp") + col("__fp")).cast("double"), 6).as("prec"))
       .orderBy(col("score").desc)
-  }
 
   /** Average precision (the area under the precision–recall curve in
     * its standard step-interpolated form, as in the TREC/IR and
@@ -107,16 +115,8 @@ object ClassifierEval {
     * positives. Same two-agg distinct-score dataflow as
     * [[rocCurve]]. */
   def averagePrecision(scored: DataFrame, scoreCol: String,
-      labelCol: String): DataFrame = {
-    val byScore = scoreTable(scored, scoreCol, labelCol)
-    val wGe = Window.orderBy(col("score").desc)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val totals = byScore.agg(sum("n_pos").as("__p"),
-      sum("n_neg").as("__n"))
-    byScore
-      .withColumn("__tp", sum("n_pos").over(wGe))
-      .withColumn("__fp", sum("n_neg").over(wGe))
-      .crossJoin(broadcast(totals))  // 1-row stat factor
+      labelCol: String): DataFrame =
+    atOrAbove(scored, scoreCol, labelCol)
       .agg(
         first("__p").as("n_pos"), first("__n").as("n_neg"),
         count(lit(1)).as("n_scores"),
@@ -127,7 +127,6 @@ object ClassifierEval {
         col("n_pos"), col("n_neg"), col("n_scores"),
         round(when(col("n_pos") > 0,
           col("__s") / col("n_pos").cast("double")), 6).as("avg_prec"))
-  }
 
   /** Youden-J optimal operating point (Youden, Cancer 1950): the
     * score threshold maximizing J = TPR − FPR over the [[rocCurve]] —

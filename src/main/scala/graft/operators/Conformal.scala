@@ -2,7 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+
+import graft.util.PrefixSum
 
 /** Split-conformal outlier gate — a quality filter with a
   * DISTRIBUTION-FREE guarantee (Vovk et al., "Algorithmic Learning in
@@ -18,8 +19,9 @@ import org.apache.spark.sql.expressions.Window
   * Scale shape: the order statistic is the textbook scale trap (global
   * sort); like [[ClassifierEval]] the engine aggregates to the
   * distinct-score histogram first (scores are rounded) and walks the
-  * cumulative over that bounded table — exact, no corpus-wide rank.
-  * The threshold is a 1-row broadcast stat factor into the eval side.
+  * running counts ([[PrefixSum]]) over that bounded table — exact, no
+  * corpus-wide rank. The threshold is a 1-row broadcast stat factor
+  * into the eval side.
   */
 object Conformal {
 
@@ -34,17 +36,17 @@ object Conformal {
     val byScore = cal
       .groupBy(col(scoreCol).cast("double").as("s"))
       .agg(count(lit(1)).as("n"))
-    val w = Window.orderBy("s")
-      .rowsBetween(Window.unboundedPreceding, 0)
     // k-th smallest via the cumulative of the bounded histogram; if
     // k > n (tiny calibration set) the threshold is +∞: flag nothing —
-    // the honest degenerate reading of the guarantee
-    val cum = byScore.withColumn("__c", sum("n").over(w))
-    val tot = cal.agg(count(lit(1)).as("n_cal"),
+    // the honest degenerate reading of the guarantee. A NULL score has
+    // no rank: PrefixSum drops its group and n_cal skips it, counted
+    // off the histogram so a computed score is evaluated once
+    val tot = byScore.agg(
+      coalesce(sum(when(col("s").isNotNull, col("n"))), lit(0L)).as("n_cal"),
       lit(alpha).as("alpha"))
-    val qhat = cum
+    val qhat = PrefixSum.running(byScore, "s", Seq("n"))
       .crossJoin(broadcast(tot))   // 1-row stat factor
-      .where(col("__c") >= ceil((col("n_cal") + 1) * (1.0 - alpha)))
+      .where(col("n_cum") >= ceil((col("n_cal") + 1) * (1.0 - alpha)))
       .agg(min("s").as("__q"))
     val gate = tot.crossJoin(broadcast(qhat))
       .withColumn("qhat",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.PrefixSum
+
 /** Distribution-drift report between two frames: PSI (population
   * stability index), the standard score for "did this feature's
   * distribution move between the baseline snapshot and today" — the
@@ -30,13 +32,28 @@ object Drift {
   def psiReport(base: DataFrame, current: DataFrame, valueCol: String,
       bucketWidth: Double, floorP: Double = 1e-6): DataFrame = {
     require(bucketWidth > 0.0, "bucket width must be positive")
+    psiBuckets(base, current, floor(col(valueCol) / bucketWidth), floorP)
+  }
+
+  /** The bucket table of the fixed- and equi-depth reports: per-side
+    * counts of the bigint id `bucket`, full-outer merged, a side's
+    * missing bucket filled as 0 — `(bucket, base_n, cur_n)`. */
+  private def bucketCounts(base: DataFrame, current: DataFrame,
+      bucket: Column): DataFrame = {
     def counts(df: DataFrame, as: String) = df
-      .select(floor(col(valueCol) / bucketWidth).cast("bigint").as("bucket"))
+      .select(bucket.cast("bigint").as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as(as))
-    val w = Window.partitionBy()
     counts(base, "base_n")
       .join(counts(current, "cur_n"), Seq("bucket"), "full_outer")
       .na.fill(0L, Seq("base_n", "cur_n"))
+  }
+
+  /** [[psiReport]]'s report over the buckets `bucket` assigns: floored
+    * shares and each bucket's `psi_term`, ordered by bucket. */
+  private def psiBuckets(base: DataFrame, current: DataFrame,
+      bucket: Column, floorP: Double): DataFrame = {
+    val w = Window.partitionBy()   // side totals over the bucket table
+    bucketCounts(base, current, bucket)
       .withColumn("__bp",
         greatest(col("base_n") / sum("base_n").over(w), lit(floorP)))
       .withColumn("__cp",
@@ -349,27 +366,21 @@ object Drift {
     * = Σ |cumP_base − cumP_cur| · width, exact for the bucketed
     * distributions and within one width of the continuous value.
     *
-    * Dataflow: one grouped count per side, full-outer merge, one
-    * cumulative window over the BUCKET table (bounded by the value
-    * range / width, never corpus-sized). Per-bucket rows carry the
-    * running |ΔF| and every row repeats the total `w1` — the
-    * [[psiReport]] report shape. */
+    * Dataflow: one grouped count per side, full-outer merge, running
+    * counts ([[PrefixSum]]) and totals over the BUCKET table (bounded
+    * by the value range / width, never corpus-sized). Per-bucket rows
+    * carry |ΔF| and every row repeats the total `w1` — the
+    * [[psiReport]] report shape. NULL values are dropped. */
   def wassersteinReport(base: DataFrame, current: DataFrame,
       valueCol: String, bucketWidth: Double): DataFrame = {
     require(bucketWidth > 0.0, "bucket width must be positive")
-    def counts(df: DataFrame, as: String) = df
-      .select(floor(col(valueCol) / bucketWidth).cast("bigint").as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as(as))
-    val wAll = Window.partitionBy()
-    val wCum = Window.orderBy("bucket")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    counts(base, "base_n")
-      .join(counts(current, "cur_n"), Seq("bucket"), "full_outer")
-      .na.fill(0L, Seq("base_n", "cur_n"))
-      .withColumn("__bF",
-        sum("base_n").over(wCum) / sum("base_n").over(wAll))
-      .withColumn("__cF",
-        sum("cur_n").over(wCum) / sum("cur_n").over(wAll))
+    // a NULL value has no bucket, so no place in either CDF
+    val tbl = bucketCounts(base, current, floor(col(valueCol) / bucketWidth))
+      .where(col("bucket").isNotNull)
+    val wAll = Window.partitionBy()   // totals over the bucket table
+    PrefixSum.running(tbl, "bucket", Seq("base_n", "cur_n"))
+      .withColumn("__bF", col("base_n_cum") / sum("base_n").over(wAll))
+      .withColumn("__cF", col("cur_n_cum") / sum("cur_n").over(wAll))
       .withColumn("__d", abs(col("__bF") - col("__cF")))
       .select(col("bucket"), col("base_n"), col("cur_n"),
         round(col("__bF"), 6).as("base_cdf"),
@@ -438,23 +449,7 @@ object Drift {
     val bucketExpr = edges
       .map(e => when(col(valueCol) >= lit(e), 1).otherwise(0))
       .reduce(_ + _)
-    def counts(df: DataFrame, as: String) = df
-      .select(bucketExpr.cast("bigint").as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as(as))
-    val w = Window.partitionBy()
-    counts(base, "base_n")
-      .join(counts(current, "cur_n"), Seq("bucket"), "full_outer")
-      .na.fill(0L, Seq("base_n", "cur_n"))
-      .withColumn("__bp",
-        greatest(col("base_n") / sum("base_n").over(w), lit(floorP)))
-      .withColumn("__cp",
-        greatest(col("cur_n") / sum("cur_n").over(w), lit(floorP)))
-      .select(col("bucket"), col("base_n"), col("cur_n"),
-        round(col("__bp"), 6).as("base_p"),
-        round(col("__cp"), 6).as("cur_p"),
-        round((col("__cp") - col("__bp")) * log(col("__cp") / col("__bp")), 6)
-          .as("psi_term"))
-      .orderBy("bucket")
+    psiBuckets(base, current, bucketExpr, floorP)
   }
 
   /** DuckDB oracle for [[psiEquiDepth]] over events split at
@@ -514,7 +509,7 @@ object Drift {
     def counts(df: DataFrame, as: String) = df
       .select(col(catCol).as("category"))
       .groupBy("category").agg(count(lit(1)).as(as))
-    val w = Window.partitionBy()
+    val w = Window.partitionBy()   // totals over the category table
     val p = col("__p"); val q = col("__q")
     val m = (p + q) / 2.0
     val contrib =
@@ -585,16 +580,16 @@ object Drift {
     * binless and catches any CDF separation).
     *
     * `grid` controls the evaluation points and is the scale dial:
-    *   - `None` (exact): ECDFs at every DISTINCT value. The
-    *     cumulative window is unpartitioned over the distinct-value
-    *     table — the oracle pin; fine when the value domain is
-    *     bounded, a single-task sort when it is not.
+    *   - `None` (exact): ECDFs at every DISTINCT value — the oracle
+    *     pin. The running counts over the distinct-value table come
+    *     from [[PrefixSum]], which buckets that table once it
+    *     outgrows one task.
     *   - `Some(width)` (production): ECDFs at fixed-width bucket
-    *     boundaries. The window runs over range/width rows whatever
+    *     boundaries. The counts run over range/width rows whatever
     *     the corpus size, and D is exact AT the boundaries —
     *     understating true D by at most the largest single-bucket
     *     mass (bounded in DriftSpec).
-    * Both are one grouped count + a tiny cumulative window + a 1-row
+    * Both are one grouped count + the cumulative counts + a 1-row
     * broadcast total — same dataflow as [[psiReport]]. */
   def ksReport(a: DataFrame, b: DataFrame, valueCol: String,
       grid: Option[Double] = None): DataFrame = {
@@ -610,16 +605,11 @@ object Drift {
       .select(col("v"), lit(0L).as("ia"), lit(1L).as("ib"))
     val c = va.unionAll(vb).groupBy("v")
       .agg(sum("ia").as("an"), sum("ib").as("bn"))
-    val w = Window.orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val cum = c
-      .withColumn("ca", sum(col("an")).over(w))
-      .withColumn("cb", sum(col("bn")).over(w))
     val tot = c.agg(sum(col("an")).as("n_a"), sum(col("bn")).as("n_b"))
-    cum.crossJoin(broadcast(tot))
+    PrefixSum.running(c, "v", Seq("an", "bn")).crossJoin(broadcast(tot))
       .select(
-        abs(col("ca").cast("double") / col("n_a") -
-          col("cb").cast("double") / col("n_b")).as("d"),
+        abs(col("an_cum").cast("double") / col("n_a") -
+          col("bn_cum").cast("double") / col("n_b")).as("d"),
         col("n_a"), col("n_b"))
       .groupBy("n_a", "n_b")
       .agg(max(col("d")).as("__dmax"))
@@ -687,7 +677,7 @@ object Drift {
       .select(col(catCol).cast("string").as("category"))
       .where(col("category").isNotNull)
       .groupBy("category").agg(count(lit(1)).as(as))
-    val w = Window.partitionBy()
+    val w = Window.partitionBy()   // totals over the category table
     counts(base, "base_n")
       .join(counts(current, "cur_n"), Seq("category"), "full_outer")
       .na.fill(0L, Seq("base_n", "cur_n"))
@@ -906,30 +896,27 @@ object Drift {
     * data and auto-reject for n ≳ 435). Significance by the standard
     * large-n approximation V·(√n + 0.155 + 0.24/√n) > 1.747 at 5%.
     *
-    * Scale shape: one grouped count to 24 rows, ordered windows over
+    * Scale shape: one grouped count to 24 rows, running counts over
     * those 24, a 1-row total factor. One row
     * `(n, d_plus, d_minus, v_stat, sig_95)`. */
   def kuiperUniformity(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val h = events.select(hour(col("ts")).as("h"))
       .where(col("h").isNotNull)
       .groupBy("h").agg(count(lit(1)).as("c"))
     val tot = h.agg(sum("c").as("__n"))
-    val wCum = Window.orderBy("h")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val ecdf = h.withColumn("__cum", sum("c").over(wCum))
+    val ecdf = PrefixSum.running(h, "h", Seq("c"))
       .crossJoin(broadcast(tot))   // 1-row stat factor
     val nD = col("__n").cast("double")
     val fU = (col("h") + 1).cast("double") / 24.0
-    val dPlus = col("__cum") / nD - fU
+    val dPlus = col("c_cum") / nD - fU
     // empty hour bins never reach the grouped table, so each present
     // bin's D⁻ candidate also covers the flat-ECDF run of missing
     // bins before it via its pre-step point h/24 − cumPrev/n (the
     // lattice max over any gap sits at the gap's right edge); on a
     // fully-present flat histogram both candidates are exactly 0
-    val dMinus = greatest(fU - col("__cum") / nD,
+    val dMinus = greatest(fU - col("c_cum") / nD,
       col("h").cast("double") / 24.0 -
-        (col("__cum") - col("c")) / nD)
+        (col("c_cum") - col("c")) / nD)
     val s = ecdf.agg(first("__n").as("n"),
       max(dPlus).as("__dp"), max(dMinus).as("__dm"))
     val v = col("__dp") + col("__dm")
@@ -985,29 +972,25 @@ object Drift {
     * accept region stays meaningful at corpus n. Asymptotic 5%
     * critical value 0.187.
     *
-    * Scale shape: one grouped count to 24 rows, one cumulative
-    * window over them, per-bin closed-form stair sums, a 1-row
-    * reduction. One row `(n, w2, u2, sig_95)`. */
+    * Scale shape: one grouped count to 24 rows, running counts over
+    * them, per-bin closed-form stair sums, a 1-row reduction. One row `(n, w2, u2, sig_95)`. */
   def watsonU2(events: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val h = events.select(hour(col("ts")).as("h"))
       .where(col("h").isNotNull)
       .groupBy("h").agg(count(lit(1)).as("c"))
     val tot = h.agg(sum("c").as("__n"))
-    val wCum = Window.orderBy("h")
-      .rowsBetween(Window.unboundedPreceding, 0)
     val nD = col("__n").cast("double")
     val cD = col("c").cast("double")
     val u = (col("h").cast("double") + 0.5) / 24.0
-    val b = col("__cum").cast("double")          // stair end rank
-    val a0 = (col("__cum") - col("c")).cast("double")   // a − 1
+    val b = col("c_cum").cast("double")          // stair end rank
+    val a0 = (col("c_cum") - col("c")).cast("double")   // a − 1
     // Σ_{i=a}^{b}(2i−1) and Σ(2i−1)² via triangular/pyramidal sums
     val s1 = b * (b + 1.0) / 2.0 - a0 * (a0 + 1.0) / 2.0
     val s2 = b * (b + 1.0) * (b * 2.0 + 1.0) / 6.0 -
       a0 * (a0 + 1.0) * (a0 * 2.0 + 1.0) / 6.0
     val sumOdd = b * b - a0 * a0
     val sumOddSq = s2 * 4.0 - s1 * 4.0 + cD
-    val ecdf = h.withColumn("__cum", sum("c").over(wCum))
+    val ecdf = PrefixSum.running(h, "h", Seq("c"))
       .crossJoin(broadcast(tot))   // 1-row stat factor
       .select(col("__n"),
         (cD * u * u - u * sumOdd / nD +

@@ -882,7 +882,7 @@ object Homogeneity {
     val bc = cell.groupBy("b").agg(count(lit(1)).as("__cnt"))
     val full = cell.join(bc, "b").crossJoin(broadcast(kf))
       .where(col("__cnt") === col("__k"))
-    val wJ = Window.orderBy("j")
+    val wJ = Window.orderBy("j")   // b·k cells (treatment levels): bounded
     val wRank = Window.partitionBy("b").orderBy("v")
     val wTie = Window.partitionBy("b", "v")
     val ranked = full

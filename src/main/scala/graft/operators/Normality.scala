@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.util.PrefixSum
 
 /** Jarque–Bera normality test (Jarque & Bera, Economics Letters
   * 1980): JB = n/6 · (S² + (K−3)²/4) from the sample skewness S and
@@ -70,8 +71,8 @@ object Normality {
     * `(n, mean, sd, d_stat, d_crit_95, sig_95)`.
     *
     * Scale shape: one moment pass, then the sup over the VALUE-
-    * FREQUENCY table (distinct values, cumulative counts — the
-    * q178 KS recipe; both D⁺ and D⁻ corners of the step function).
+    * FREQUENCY table (distinct values, running counts from
+    * [[PrefixSum]] — the q178 KS recipe; both D⁺ and D⁻ corners of the step function).
     * Φ via a fixed polynomial shared verbatim with the oracle. */
   def lilliefors(df: DataFrame, metric: Column): DataFrame = {
     val vals = df.select(metric.cast("double").as("x"))
@@ -79,14 +80,12 @@ object Normality {
     val m = vals.agg(count(lit(1)).as("__n"), avg("x").as("__mu"),
       stddev_samp(col("x")).as("__sd"))
     val freq = vals.groupBy("x").agg(count(lit(1)).as("__c"))
-    val wCum = Window.orderBy("x")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ecdf = freq.withColumn("__cum", sum("__c").over(wCum))
+    val ecdf = PrefixSum.running(freq, "x", Seq("__c"))
       .crossJoin(broadcast(m))   // 1-row moment factor
     val n = col("__n").cast("double")
     val phi = normCdf((col("x") - col("__mu")) / col("__sd"))
-    val dPlus = col("__cum") / n - phi
-    val dMinus = phi - (col("__cum") - col("__c")) / n
+    val dPlus = col("__c_cum") / n - phi
+    val dMinus = phi - (col("__c_cum") - col("__c")) / n
     val s = ecdf.agg(first("__n").as("__n"), first("__mu").as("__mu"),
       first("__sd").as("__sd"),
       max(greatest(dPlus, dMinus)).as("__d"))
@@ -375,13 +374,11 @@ object Normality {
     val m = vals.agg(count(lit(1)).as("__n"), avg("x").as("__mu"),
       stddev_samp(col("x")).as("__sd"))
     val freq = vals.groupBy("x").agg(count(lit(1)).as("__c"))
-    val wCum = Window.orderBy("x")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val ecdf = freq.withColumn("__cum", sum("__c").over(wCum))
+    val ecdf = PrefixSum.running(freq, "x", Seq("__c"))
       .crossJoin(broadcast(m))   // 1-row moment factor
     val n = col("__n").cast("double")
-    val b = col("__cum").cast("double")
-    val a0 = (col("__cum") - col("__c")).cast("double")
+    val b = col("__c_cum").cast("double")
+    val a0 = (col("__c_cum") - col("__c")).cast("double")
     val cD = col("__c").cast("double")
     val s1 = b * b - a0 * a0
     val s2 = cD * n * 2.0 - s1

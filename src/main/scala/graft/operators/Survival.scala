@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.PrefixSum
+
 /** Kaplan–Meier survival estimation over user lifetimes (Kaplan &
   * Meier, JASA 1958) — the censoring-aware retention curve: q121's
   * cohort retention counts users active at day k, but users whose
@@ -39,6 +41,7 @@ object Survival {
       sum(when(!col("__cens"), 1L).otherwise(0L)).as("d"),
       count(lit(1)).as("__ended"),
       first("__n").as("__n"))
+    // kept: the double log/hazard sums share t; lifetimes are days
     val wBefore = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy("t")
@@ -102,6 +105,7 @@ object Survival {
       sum(when(col("__cause") === 1, 1L).otherwise(0L)).as("d1"),
       sum(when(col("__cause") === 2, 1L).otherwise(0L)).as("d2"),
       count(lit(1)).as("__ended"), first("__n").as("__n"))
+    // kept: the double log/hazard sums share t; lifetimes are days
     val wBefore = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy("t")
@@ -194,18 +198,13 @@ object Survival {
       |  ROUND(c1, 6) AS cif_purchase, ROUND(c2, 6) AS cif_error
       |FROM cif WHERE d1 + d2 > 0 ORDER BY t_days""".stripMargin
 
-  /** Log-rank test between two cohorts' survival curves (Mantel
-    * 1966) — the hypothesis test that belongs next to [[kaplanMeier]]
-    * the way Welch belongs next to a mean: at every event time the
-    * observed cohort-1 deaths are compared to the expectation under
-    * "both curves identical" (hypergeometric mean d·n₁/n), and χ² =
-    * (Σ(O−E))²/ΣV with the hypergeometric variance. Significance
-    * against the 1-df χ² thresholds (3.841/6.635) in closed form.
-    *
-    * Same dataflow as KM: one per-user agg, then risk-table windows
-    * per cohort over the lifetime-cardinality frame. */
-  def logRank(events: DataFrame, cohort: org.apache.spark.sql.Column,
-      horizonDays: Int = 3): DataFrame = {
+  /** The two-cohort risk table [[logRank]] and [[gehanWilcoxon]] read:
+    * per lifetime `t` with ≥ 1 uncensored end, the ends `d` (cohort 1:
+    * `d1`), the users still at risk `n` (cohort 1: `n1`) and the user
+    * count `__nall`. A user with no timestamp has no lifetime and is
+    * dropped. */
+  private def twoCohortRisk(events: DataFrame,
+      cohort: org.apache.spark.sql.Column, horizonDays: Int): DataFrame = {
     val per = events.groupBy("user_id").agg(
       min(to_date(col("ts"))).as("__f"),
       max(to_date(col("ts"))).as("__l"),
@@ -216,6 +215,7 @@ object Survival {
         datediff(col("__l"), col("__f")).cast("double").as("t"),
         (datediff(col("__mx"), col("__l")) < horizonDays).as("__cens"),
         col("__g").cast("boolean").as("__g"))
+      .where(col("t").isNotNull)
     val tbl = obs.groupBy("t").agg(
       sum(when(!col("__cens") && col("__g"), 1L).otherwise(0L)).as("d1"),
       sum(when(!col("__cens"), 1L).otherwise(0L)).as("d"),
@@ -224,14 +224,27 @@ object Survival {
     val tot = obs.agg(
       sum(when(col("__g"), 1L).otherwise(0L)).as("__n1all"),
       count(lit(1)).as("__nall"))
-    val wBefore = Window.orderBy("t")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val risk = tbl.crossJoin(broadcast(tot))
-      .withColumn("n",
-        col("__nall") - coalesce(sum("__end").over(wBefore), lit(0L)))
-      .withColumn("n1",
-        col("__n1all") - coalesce(sum("__end1").over(wBefore), lit(0L)))
+    // at risk at t: everyone less the lifetimes that ended before t
+    PrefixSum.running(tbl, "t", Seq("__end", "__end1"))
+      .crossJoin(broadcast(tot))   // 1-row stat factor
+      .withColumn("n", col("__nall") - col("__end_cum") + col("__end"))
+      .withColumn("n1", col("__n1all") - col("__end1_cum") + col("__end1"))
       .where(col("d") > 0)
+  }
+
+  /** Log-rank test between two cohorts' survival curves (Mantel
+    * 1966) — the hypothesis test that belongs next to [[kaplanMeier]]
+    * the way Welch belongs next to a mean: at every event time the
+    * observed cohort-1 deaths are compared to the expectation under
+    * "both curves identical" (hypergeometric mean d·n₁/n), and χ² =
+    * (Σ(O−E))²/ΣV with the hypergeometric variance. Significance
+    * against the 1-df χ² thresholds (3.841/6.635) in closed form.
+    *
+    * Same dataflow as KM: one per-user agg, then the per-cohort risk
+    * table over the lifetime-cardinality frame. */
+  def logRank(events: DataFrame, cohort: org.apache.spark.sql.Column,
+      horizonDays: Int = 3): DataFrame = {
+    val risk = twoCohortRisk(events, cohort, horizonDays)
     val dD = col("d").cast("double")
     val nD = col("n").cast("double")
     val n1D = col("n1").cast("double")
@@ -371,6 +384,7 @@ object Survival {
       sum(when(!col("__cens"), 1L).otherwise(0L)).as("d"),
       count(lit(1)).as("__ended"),
       first("__n").as("__n"))
+    // kept: the double log/hazard sums share t; lifetimes are days
     val wBefore = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy("t")
@@ -473,38 +487,13 @@ object Survival {
     * weights, so the n/N normalization changes nothing statistically
     * while keeping the reported sums O(1).
     *
-    * Same single corpus pass + lifetime-cardinality risk-table
-    * windows as [[logRank]]. One row `(n_times, o1, w_diff, w_var,
+    * Same single corpus pass + lifetime-cardinality risk table as
+    * [[logRank]]. One row `(n_times, o1, w_diff, w_var,
     * chi_sq, sig_95, sig_99)`. */
   def gehanWilcoxon(events: DataFrame,
       cohort: org.apache.spark.sql.Column,
       horizonDays: Int = 3): DataFrame = {
-    val per = events.groupBy("user_id").agg(
-      min(to_date(col("ts"))).as("__f"),
-      max(to_date(col("ts"))).as("__l"),
-      first(cohort).as("__g"))
-    val mx = per.agg(max("__l").as("__mx"))
-    val obs = per.crossJoin(broadcast(mx))
-      .select(
-        datediff(col("__l"), col("__f")).cast("double").as("t"),
-        (datediff(col("__mx"), col("__l")) < horizonDays).as("__cens"),
-        col("__g").cast("boolean").as("__g"))
-    val tbl = obs.groupBy("t").agg(
-      sum(when(!col("__cens") && col("__g"), 1L).otherwise(0L)).as("d1"),
-      sum(when(!col("__cens"), 1L).otherwise(0L)).as("d"),
-      sum(when(col("__g"), 1L).otherwise(0L)).as("__end1"),
-      count(lit(1)).as("__end"))
-    val tot = obs.agg(
-      sum(when(col("__g"), 1L).otherwise(0L)).as("__n1all"),
-      count(lit(1)).as("__nall"))
-    val wBefore = Window.orderBy("t")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val risk = tbl.crossJoin(broadcast(tot))
-      .withColumn("n",
-        col("__nall") - coalesce(sum("__end").over(wBefore), lit(0L)))
-      .withColumn("n1",
-        col("__n1all") - coalesce(sum("__end1").over(wBefore), lit(0L)))
-      .where(col("d") > 0)
+    val risk = twoCohortRisk(events, cohort, horizonDays)
     val dD = col("d").cast("double")
     val nD = col("n").cast("double")
     val n1D = col("n1").cast("double")
@@ -610,6 +599,7 @@ object Survival {
       sum(when(!col("__cens"), 1L).otherwise(0L)).as("d"),
       count(lit(1)).as("__ended"),
       first("__n").as("__n"))
+    // kept: the double log/hazard sums share t; lifetimes are days
     val wBefore = Window.orderBy("t")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.orderBy("t")

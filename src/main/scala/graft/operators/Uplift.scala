@@ -1,8 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.util.PrefixSum
 
 /** Uplift (incremental-response) evaluation — the Qini curve
   * (Radcliffe, "Using control groups to target on predicted lift",
@@ -16,9 +17,9 @@ import org.apache.spark.sql.functions._
   *
   * The curve is computed at every distinct score threshold ("treat
   * everyone scoring ≥ s"), not at row-level ntiles: thresholds are
-  * the deployable policies, and the distinct-score table keeps every
-  * window SCORE-cardinality-bounded — at 100 TB the cumulative pass
-  * runs over thousands of rows, not billions (the q274
+  * the deployable policies, and the running counts run over the
+  * distinct-score table ([[PrefixSum]]) — at 100 TB the cumulative
+  * pass reads thousands of rows, not billions (the q274
   * value-histogram discipline).
   */
 object Uplift {
@@ -41,14 +42,12 @@ object Uplift {
       sum(when(!col("t"), 1L).otherwise(0L)).as("bc"),
       sum(when(col("t"), col("y")).otherwise(0L)).as("byt"),
       sum(when(!col("t"), col("y")).otherwise(0L)).as("byc"))
-    // score-cardinality frame: the single-partition window is bounded
-    val w = Window.orderBy(desc("s"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perScore
+    // counts at or above each score: running sums in -score order
+    PrefixSum.running(perScore.withColumn("__neg", -col("s")), "__neg",
+        Seq("bt", "bc", "byt", "byc"))
       .select(col("s").as("score_ge"),
-        sum("bt").over(w).as("n_t"), sum("bc").over(w).as("n_c"),
-        sum("byt").over(w).as("conv_t"),
-        sum("byc").over(w).as("conv_c"))
+        col("bt_cum").as("n_t"), col("bc_cum").as("n_c"),
+        col("byt_cum").as("conv_t"), col("byc_cum").as("conv_c"))
       .select(col("score_ge"), col("n_t"), col("n_c"),
         col("conv_t"), col("conv_c"),
         round(when(col("n_t") > 0 && col("n_c") > 0,

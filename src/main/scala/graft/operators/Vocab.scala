@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
+import graft.util.PrefixSum
 
 /** Corpus vocabulary construction — the counting pass every tokenizer
   * build (BPE/WordPiece/unigram-LM) starts from, and a pipeline step the
@@ -46,6 +47,7 @@ object Vocab {
       .orderBy(col("tf").desc, col("token").asc)
       .limit(topK)
     val total = toks.agg(count(lit(1)).as("__total"))
+    // ranks the topK rows the limit above kept: bounded by topK
     val w = Window.orderBy(col("tf").desc, col("token").asc)
     ranked
       .crossJoin(broadcast(total))
@@ -117,10 +119,11 @@ object Vocab {
     * (`min(bucket) per token` — one token-keyed aggregate), so
     * per-bucket new-type counts arrive from a vocabulary-sized
     * table and the cumulative sums run over the bucket-count-sized
-    * result (unpartitioned window over ~|docs|/bucketDocs rows, not
-    * corpus rows). `beta_pointwise` = ln V / ln n is the Heaps
-    * exponent under the K=1 normalization — a per-bucket trend
-    * diagnostic, flat when growth follows the power law. */
+    * result ([[PrefixSum]] over ~|docs|/bucketDocs rows, not corpus
+    * rows). `beta_pointwise` = ln V / ln n is the Heaps exponent under
+    * the K=1 normalization — a per-bucket trend diagnostic, flat when
+    * growth follows the power law. A NULL `doc_id` has no bucket and
+    * is dropped. */
   def growthCurve(docs: DataFrame, bucketDocs: Long = 50L,
       textCol: String = "text"): DataFrame = {
     val toks = docs
@@ -133,12 +136,11 @@ object Vocab {
       .agg(min(col("bucket")).as("bucket"))
       .groupBy("bucket")
       .agg(count(lit(1)).as("new_types"))
-    val w = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    perBucket.join(newTypes, Seq("bucket"), "left")
+    val table = perBucket.join(newTypes, Seq("bucket"), "left")
       .na.fill(0L, Seq("new_types"))
-      .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-      .withColumn("cum_types", sum(col("new_types")).over(w))
+    PrefixSum.running(table, "bucket", Seq("n_tokens", "new_types"))
+      .withColumnRenamed("n_tokens_cum", "cum_tokens")
+      .withColumnRenamed("new_types_cum", "cum_types")
       .withColumn("beta_pointwise",
         round(log(col("cum_types").cast("double")) /
           log(col("cum_tokens").cast("double")), 6))
@@ -484,14 +486,12 @@ object Vocab {
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("doc_id") === col("first_doc"), 1L).otherwise(0L))
           .as("n_novel"))
-    val w = Window.orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    perDoc
-      .withColumn("novelty_frac",
-        round(col("n_novel").cast("double") / col("n_grams"), 6))
-      .withColumn("cum_novelty",
-        round(sum("n_novel").over(w).cast("double") /
-          sum("n_grams").over(w), 6))
+    PrefixSum.running(perDoc, "bucket", Seq("n_novel", "n_grams"))
+      .select(col("bucket"), col("n_grams"), col("n_novel"),
+        round(col("n_novel").cast("double") / col("n_grams"), 6)
+          .as("novelty_frac"),
+        round(col("n_novel_cum").cast("double") / col("n_grams_cum"), 6)
+          .as("cum_novelty"))
       .orderBy("bucket")
   }
 

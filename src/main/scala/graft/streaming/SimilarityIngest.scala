@@ -36,7 +36,7 @@ object SimilarityIngest {
     if (batch.isEmpty) 0L
     else TableLog.commitTagged(spark, pairsPath, act(batchId)) { _ =>
       AllPairsJoin.admit(spark, indexRoot, batch, threshold,
-        action = act(batchId)).withColumn("batch_id", lit(batchId))
+        action = Some(act(batchId))).withColumn("batch_id", lit(batchId))
     }.fold(0L)(_._2)
 
   /** Watch a parquet stream directory; admit each micro-batch against

@@ -70,11 +70,15 @@ object PrefixSum {
     * allowed); an empty `bounds` is the single ordered window. */
   private[graft] def running(df: DataFrame, key: String, sums: Seq[String],
       bounds: Seq[Double]): DataFrame = {
-    val keyed = df.where(col(key).isNotNull)
+    // NULL keys sort (and bucket) last, so they add to no other key's
+    // sums, and drop after the window: a filter before it would be
+    // pushed below the aggregate that computes the key and evaluate a
+    // computed key twice
+    val ordered = col(key).asc_nulls_last
     val b = bounds.distinct.sorted(Ordering.Double.TotalOrdering).toIndexedSeq
     val upTo = Window.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    if (b.isEmpty)
-      sums.foldLeft(keyed)((d, c) => d.withColumn(s"${c}_cum", sum(c).over(upTo.orderBy(key))))
+    (if (b.isEmpty)
+      sums.foldLeft(df)((d, c) => d.withColumn(s"${c}_cum", sum(c).over(upTo.orderBy(ordered))))
     else {
       // bucket = label of the number of boundaries <= key, by binary search
       val label = labels(b.length + 1, df.sparkSession.sessionState.conf.numShufflePartitions)
@@ -84,18 +88,18 @@ object PrefixSum {
           val mid = (lo + hi) / 2
           when(col(key) < lit(b(mid)), bucket(lo, mid)).otherwise(bucket(mid + 1, hi))
         }
-      val bucketed = keyed.withColumn("__pfx_bkt", bucket(0, b.length))
+      val bucketed = df.withColumn("__pfx_bkt", bucket(0, b.length))
       val before = Window.orderBy("__pfx_bkt").rowsBetween(Window.unboundedPreceding, -1)
       val offsets = bucketed.groupBy("__pfx_bkt")
         .agg(sum(sums.head).as(s"__pfx_t_${sums.head}"),
           sums.tail.map(c => sum(c).as(s"__pfx_t_$c")): _*)
         .select(col("__pfx_bkt") +: sums.map(c =>
           coalesce(sum(s"__pfx_t_$c").over(before), lit(0L)).as(s"__pfx_o_$c")): _*)
-      val within = upTo.partitionBy("__pfx_bkt").orderBy(key)
+      val within = upTo.partitionBy("__pfx_bkt").orderBy(ordered)
       sums.foldLeft(bucketed.join(broadcast(offsets), "__pfx_bkt")) { (d, c) =>
         d.withColumn(s"${c}_cum", col(s"__pfx_o_$c") + sum(c).over(within))
       }.select((df.columns.toSeq ++ sums.map(c => s"${c}_cum")).map(col): _*)
-    }
+    }).where(col(key).isNotNull)
   }
 
   /** Increasing labels for `n` buckets such that bucket i hashes to

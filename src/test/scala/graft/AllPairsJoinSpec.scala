@@ -97,6 +97,23 @@ class AllPairsJoinSpec extends AnyFunSuite {
     assert(seedPairs ++ p1 ++ p2 == full)
   }
 
+  test("untagged admissions each index their batch: a second direct admit keeps its pairs") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_apuntagged").toString
+    def docs(id: Long, text: String) = Seq((id, text)).toDF("doc_id", "text")
+    AllPairsJoin.buildIndex(spark,
+      docs(1L, "alpha beta gamma delta epsilon"), root, 0.4)
+    AllPairsJoin.admit(spark, root,
+      docs(2L, "red orange yellow green blue indigo"), 0.4)
+    // shingles share 3 of 5: jaccard 0.6 against the second admission
+    val got = AllPairsJoin.admit(spark, root,
+      docs(3L, "orange yellow green blue indigo violet"), 0.4)
+      .select("id_a", "id_b", "jaccard")
+      .as[(Long, Long, Double)].collect().toList
+    assert(got == List((2L, 3L, 0.6)))
+    assert(graft.lake.TableLog.read(spark, s"$root/grams").count() == 3L)
+  }
+
   test("docs below k tokens never pair; identical docs score 1.0") {
     val got = join(Seq((1L, "x y"), (2L, "x y"),
       (3L, "m n o p q"), (4L, "m n o p q")), 0.5)

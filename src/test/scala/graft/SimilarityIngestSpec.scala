@@ -50,7 +50,7 @@ class SimilarityIngestSpec extends AnyFunSuite {
     // simulate the crash by running admit directly (indexes the batch,
     // returns pairs that were never committed)
     val direct = AllPairsJoin.admit(spark, s"$root/idx",
-      batch.toDF("doc_id", "text"), 0.4, action = "simadmit-3")
+      batch.toDF("doc_id", "text"), 0.4, action = Some("simadmit-3"))
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val gramsV = TableLog.latestVersion(spark, s"$root/idx/grams")
     // the replayed streaming call must recompute the SAME pairs from
