@@ -284,8 +284,7 @@ object ScaleProbe {
       // ~N× (adversarial for the first-seen shuffle); the cumulative
       // window stays bucket-count-sized
       "vocab_growth" -> (d => graft.operators.Vocab
-        .growthCurve(d, bucketDocs = 50L)
-        .agg(sum("new_types")).collect()(0).getLong(0)),
+        .growthCurve(d, bucketDocs = 50L).collect().length.toLong),
       // grid KS between two doc-length slices: the per-side bucket
       // count is the linear component; the cumulative window and the
       // sup-gap run over the fixed-width grid regardless of N
@@ -294,7 +293,8 @@ object ScaleProbe {
           (col("doc_id") % 2 === 0).as("h"))
         graft.operators.Drift.ksReport(
           lens.where(col("h")).select("v"),
-          lens.where(!col("h")).select("v"), "v", Some(8.0)).count()
+          lens.where(!col("h")).select("v"), "v", Some(8.0))
+          .collect().length.toLong
       },
       // PrefixSum over the doc-id table: the bucket count grows with the
       // input size estimate (one bucket while it fits one task) but stays
@@ -317,7 +317,7 @@ object ScaleProbe {
             graft.functions.TextFunctions.qualityScore(col("text"))
               .as("score"),
             (col("doc_id") % 2 === 0).as("label")),
-          "score", "label").count()),
+          "score", "label").collect().length.toLong),
       // native codegen'd DEFLATE pass, map-only
       "deflate_ratio" -> { d =>
         d.select(graft.functions.DeflateRatio.deflateRatio(col("text"))
@@ -383,7 +383,7 @@ object ScaleProbe {
           graft.functions.TextFunctions.qualityScore(col("text"))
             .as("score"),
           (pmod(col("doc_id"), lit(3)) === 0).as("label")),
-        "score", "label").count()),
+        "score", "label").collect().length.toLong),
       // same score-cardinality table as youden, one-row reduction
       "avg_precision" -> (d =>
         graft.operators.ClassifierEval.averagePrecision(
@@ -391,7 +391,7 @@ object ScaleProbe {
             graft.functions.TextFunctions.qualityScore(col("text"))
               .as("score"),
             (pmod(col("doc_id"), lit(3)) === 0).as("label")),
-          "score", "label").count()),
+          "score", "label").collect().length.toLong),
       // explode → vocab-bounded counts + 1-row totals + top-k limit
       "dunning_llr" -> (d => graft.operators.Keyness.dunningLlr(d,
         pmod(col("doc_id"), lit(2)) === 0).count()),
@@ -786,7 +786,7 @@ object ScaleProbe {
         .collect().length.toLong),
       // 24-row hour histogram + running counts over it
       "kuiper" -> (d =>
-        graft.operators.Drift.kuiperUniformity(d).count()),
+        graft.operators.Drift.kuiperUniformity(d).collect().length.toLong),
       // per-season day-pair cross (calendar²/7) + tie tables
       "seasonal_mk" -> (d =>
         graft.operators.Anomaly.seasonalMannKendall(d).count()),
@@ -795,7 +795,7 @@ object ScaleProbe {
         graft.operators.Anomaly.bartelsRank(d).count()),
       // 24-row histogram + closed-form stair sums
       "watson_u2" -> (d =>
-        graft.operators.Drift.watsonU2(d).count()),
+        graft.operators.Drift.watsonU2(d).collect().length.toLong),
       // k×k cell grid from one corpus-scale grouped count
       "weighted_kappa" -> (d =>
         graft.quality.Agreement.weightedKappa(d,

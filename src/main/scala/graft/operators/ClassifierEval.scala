@@ -52,7 +52,7 @@ object ClassifierEval {
   def aucSummary(scored: DataFrame, scoreCol: String,
       labelCol: String): DataFrame =
     PrefixSum.running(scoreTable(scored, scoreCol, labelCol), "score",
-        Seq("n_neg"))
+        Seq("n_neg"), Nil)   // bounded score table: one task
       .agg(
         sum("n_pos").as("n_pos"),
         sum("n_neg").as("n_neg"),
@@ -78,7 +78,7 @@ object ClassifierEval {
     val ranked = col("score").isNotNull
     val totals = byScore.agg(sum(when(ranked, col("n_pos"))).as("__p"),
       sum(when(ranked, col("n_neg"))).as("__n"))
-    PrefixSum.running(byScore, "score", Seq("n_pos", "n_neg"))
+    PrefixSum.running(byScore, "score", Seq("n_pos", "n_neg"), Nil)   // bounded
       .crossJoin(broadcast(totals))  // 1-row stat factor, not data-sized
       // at or above s = the total less what lies strictly below s
       .withColumn("__tp", col("__p") - col("n_pos_cum") + col("n_pos"))

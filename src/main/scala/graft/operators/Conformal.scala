@@ -44,7 +44,7 @@ object Conformal {
     val tot = byScore.agg(
       coalesce(sum(when(col("s").isNotNull, col("n"))), lit(0L)).as("n_cal"),
       lit(alpha).as("alpha"))
-    val qhat = PrefixSum.running(byScore, "s", Seq("n"))
+    val qhat = PrefixSum.running(byScore, "s", Seq("n"), Nil)   // bounded
       .crossJoin(broadcast(tot))   // 1-row stat factor
       .where(col("n_cum") >= ceil((col("n_cal") + 1) * (1.0 - alpha)))
       .agg(min("s").as("__q"))

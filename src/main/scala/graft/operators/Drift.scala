@@ -374,11 +374,10 @@ object Drift {
   def wassersteinReport(base: DataFrame, current: DataFrame,
       valueCol: String, bucketWidth: Double): DataFrame = {
     require(bucketWidth > 0.0, "bucket width must be positive")
-    // a NULL value has no bucket, so no place in either CDF
     val tbl = bucketCounts(base, current, floor(col(valueCol) / bucketWidth))
-      .where(col("bucket").isNotNull)
     val wAll = Window.partitionBy()   // totals over the bucket table
-    PrefixSum.running(tbl, "bucket", Seq("base_n", "cur_n"))
+    // range/width rows: one task; a NULL value's bucket drops here
+    PrefixSum.running(tbl, "bucket", Seq("base_n", "cur_n"), Nil)
       .withColumn("__bF", col("base_n_cum") / sum("base_n").over(wAll))
       .withColumn("__cF", col("cur_n_cum") / sum("cur_n").over(wAll))
       .withColumn("__d", abs(col("__bF") - col("__cF")))
@@ -585,8 +584,8 @@ object Drift {
     *     from [[PrefixSum]], which buckets that table once it
     *     outgrows one task.
     *   - `Some(width)` (production): ECDFs at fixed-width bucket
-    *     boundaries. The counts run over range/width rows whatever
-    *     the corpus size, and D is exact AT the boundaries —
+    *     boundaries. The counts run in one task over range/width rows
+    *     whatever the corpus size, and D is exact AT the boundaries —
     *     understating true D by at most the largest single-bucket
     *     mass (bounded in DriftSpec).
     * Both are one grouped count + the cumulative counts + a 1-row
@@ -606,7 +605,10 @@ object Drift {
     val c = va.unionAll(vb).groupBy("v")
       .agg(sum("ia").as("an"), sum("ib").as("bn"))
     val tot = c.agg(sum(col("an")).as("n_a"), sum(col("bn")).as("n_b"))
-    PrefixSum.running(c, "v", Seq("an", "bn")).crossJoin(broadcast(tot))
+    val cum =
+      if (grid.isEmpty) PrefixSum.running(c, "v", Seq("an", "bn"))
+      else PrefixSum.running(c, "v", Seq("an", "bn"), Nil)  // grid: one task
+    cum.crossJoin(broadcast(tot))
       .select(
         abs(col("an_cum").cast("double") / col("n_a") -
           col("bn_cum").cast("double") / col("n_b")).as("d"),
@@ -904,7 +906,7 @@ object Drift {
       .where(col("h").isNotNull)
       .groupBy("h").agg(count(lit(1)).as("c"))
     val tot = h.agg(sum("c").as("__n"))
-    val ecdf = PrefixSum.running(h, "h", Seq("c"))
+    val ecdf = PrefixSum.running(h, "h", Seq("c"), Nil)   // 24 rows: one task
       .crossJoin(broadcast(tot))   // 1-row stat factor
     val nD = col("__n").cast("double")
     val fU = (col("h") + 1).cast("double") / 24.0
@@ -990,7 +992,7 @@ object Drift {
       a0 * (a0 + 1.0) * (a0 * 2.0 + 1.0) / 6.0
     val sumOdd = b * b - a0 * a0
     val sumOddSq = s2 * 4.0 - s1 * 4.0 + cD
-    val ecdf = PrefixSum.running(h, "h", Seq("c"))
+    val ecdf = PrefixSum.running(h, "h", Seq("c"), Nil)   // 24 rows: one task
       .crossJoin(broadcast(tot))   // 1-row stat factor
       .select(col("__n"),
         (cD * u * u - u * sumOdd / nD +

@@ -225,7 +225,8 @@ object Survival {
       sum(when(col("__g"), 1L).otherwise(0L)).as("__n1all"),
       count(lit(1)).as("__nall"))
     // at risk at t: everyone less the lifetimes that ended before t
-    PrefixSum.running(tbl, "t", Seq("__end", "__end1"))
+    // (one row per lifetime in days: bounded by the span, one task)
+    PrefixSum.running(tbl, "t", Seq("__end", "__end1"), Nil)
       .crossJoin(broadcast(tot))   // 1-row stat factor
       .withColumn("n", col("__nall") - col("__end_cum") + col("__end"))
       .withColumn("n1", col("__n1all") - col("__end1_cum") + col("__end1"))

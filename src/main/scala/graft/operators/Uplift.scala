@@ -42,12 +42,18 @@ object Uplift {
       sum(when(!col("t"), 1L).otherwise(0L)).as("bc"),
       sum(when(col("t"), col("y")).otherwise(0L)).as("byt"),
       sum(when(!col("t"), col("y")).otherwise(0L)).as("byc"))
-    // counts at or above each score: running sums in -score order
-    PrefixSum.running(perScore.withColumn("__neg", -col("s")), "__neg",
-        Seq("bt", "bc", "byt", "byc"))
+    val cnt = Seq("bt", "bc", "byt", "byc")
+    val tot = perScore.agg(sum(cnt.head).as(s"__${cnt.head}"),
+      cnt.tail.map(c => sum(c).as(s"__$c")): _*)
+    // at or above s = the total less what lies strictly below s, so NaN
+    // ranks above every score, as Spark orders it; the score table is
+    // bounded, so one task
+    def atOrAbove(c: String) = col(s"__$c") - col(s"${c}_cum") + col(c)
+    PrefixSum.running(perScore, "s", cnt, Nil)
+      .crossJoin(broadcast(tot))   // 1-row stat factor
       .select(col("s").as("score_ge"),
-        col("bt_cum").as("n_t"), col("bc_cum").as("n_c"),
-        col("byt_cum").as("conv_t"), col("byc_cum").as("conv_c"))
+        atOrAbove("bt").as("n_t"), atOrAbove("bc").as("n_c"),
+        atOrAbove("byt").as("conv_t"), atOrAbove("byc").as("conv_c"))
       .select(col("score_ge"), col("n_t"), col("n_c"),
         col("conv_t"), col("conv_c"),
         round(when(col("n_t") > 0 && col("n_c") > 0,

@@ -67,7 +67,11 @@ object PrefixSum {
   }
 
   /** [[running]] under explicit `bounds` (any order, duplicates
-    * allowed); an empty `bounds` is the single ordered window. */
+    * allowed); an empty `bounds` is the single ordered window. That is
+    * the form for a table bounded by design (24 hours, rounded scores,
+    * a fixed-width grid): a grouped table's size estimate follows its
+    * input, not its keys, so the estimated form would pay a quantile
+    * job over the whole input at scale for a table one task holds. */
   private[graft] def running(df: DataFrame, key: String, sums: Seq[String],
       bounds: Seq[Double]): DataFrame = {
     // NULL keys sort (and bucket) last, so they add to no other key's

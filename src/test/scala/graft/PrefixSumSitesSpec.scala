@@ -9,7 +9,9 @@ import graft.operators._
   * [[graft.util.PrefixSum]] returns the same rows on the bucketed plan
   * as on the single ordered window. A 1 KB advisory partition size and
   * 8 shuffle partitions make spec-sized frequency tables split into
-  * several buckets. */
+  * several buckets — except the tables bounded by design (hours,
+  * rounded scores, grids, lifetimes in days, doc buckets), which must
+  * stay on the one window whatever the size estimate says. */
 class PrefixSumSitesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -35,6 +37,8 @@ class PrefixSumSitesSpec extends AnyFunSuite {
   private val sites: Seq[(String, () => DataFrame)] = Seq(
     "ksReport" -> (() => Drift.ksReport(events.where(!inB),
       events.where(inB), "value")),
+    "ksReport on a grid" -> (() => Drift.ksReport(events.where(!inB),
+      events.where(inB), "value", Some(2.0))),
     "wassersteinReport" -> (() => Drift.wassersteinReport(events.where(!inB),
       events.where(inB), "value", 2.0)),
     "kuiperUniformity" -> (() => Drift.kuiperUniformity(events)),
@@ -54,6 +58,11 @@ class PrefixSumSitesSpec extends AnyFunSuite {
     "logRank" -> (() => Survival.logRank(events, inB)),
     "gehanWilcoxon" -> (() => Survival.gehanWilcoxon(events, inB)))
 
+  private val bounded = Set("ksReport on a grid", "wassersteinReport",
+    "kuiperUniformity", "watsonU2", "aucSummary", "rocCurve",
+    "averagePrecision", "outlierGate", "qiniCurve", "logRank",
+    "gehanWilcoxon", "growthCurve", "noveltyCurve")
+
   private def bucketed(df: DataFrame): Boolean =
     df.queryExecution.analyzed.toString.contains("__pfx_bkt")
 
@@ -62,7 +71,9 @@ class PrefixSumSitesSpec extends AnyFunSuite {
     "spark.sql.shuffle.partitions" -> "8")
 
   sites.foreach { case (name, site) =>
-    test(s"$name: the bucketed plan returns the single-window rows") {
+    val shape = if (bounded(name)) "a bounded table keeps its one window"
+      else "the bucketed plan returns the single-window rows"
+    test(s"$name: $shape") {
       val single = site()
       assert(!bucketed(single))
       val expected = single.collect().toSeq
@@ -71,7 +82,7 @@ class PrefixSumSitesSpec extends AnyFunSuite {
       forcedConf.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         val split = site()
-        assert(bucketed(split))
+        assert(bucketed(split) == !bounded(name))
         assert(split.collect().toSeq == expected)
       } finally before.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)

@@ -38,6 +38,22 @@ class UpliftStreamSpec extends AnyFunSuite {
       "rate dilutes as the tail is included")
   }
 
+  test("qini: a NaN score ranks above every score, as Spark orders it") {
+    val df = Seq((Double.NaN, true, 1L), (1.0, true, 0L), (1.0, false, 1L),
+      (0.5, true, 1L), (0.5, false, 0L))
+      .toDF("score", "treated", "converted")
+    val r = Uplift.qiniCurve(df, col("score"), col("treated"),
+      col("converted")).collect()
+    assert(r.length == 3 && r(0).getDouble(0).isNaN)
+    assert(r.drop(1).map(_.getDouble(0)).toSeq == Seq(1.0, 0.5))
+    // (n_t, n_c, conv_t, conv_c, uplift, qini): the NaN unit is
+    // targeted at every threshold, and alone at its own
+    assert(r.map(_.toSeq.drop(1)).toSeq == Seq(
+      Seq(1L, 0L, 1L, 0L, null, null),
+      Seq(2L, 1L, 1L, 1L, -0.5, -1.0),
+      Seq(3L, 2L, 2L, 1L, 0.166667, 0.5)))
+  }
+
   private def writeOne(root: java.nio.file.Path, name: String,
       df: org.apache.spark.sql.DataFrame): Unit = {
     val tmp = root.resolve(name + ".tmp")
