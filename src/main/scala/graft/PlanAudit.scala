@@ -73,9 +73,6 @@ object PlanAudit {
     // average precision: the (P, N) class totals are the q205
     // ROC-shape 1-row stat factor
     "q386_avg_precision",
-    // Qini: the per-arm count totals are the same 1-row stat factor
-    // (at-or-above = total − cum + c over the score table)
-    "q328_qini",
     // Hodges–Lehmann: the days² pair grid is a deliberate
     // calendar-bounded cross (the Theil–Sen shape) plus two 1-row
     // cohort-count factors

@@ -1,9 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-
-import graft.util.PrefixSum
 
 /** Uplift (incremental-response) evaluation — the Qini curve
   * (Radcliffe, "Using control groups to target on predicted lift",
@@ -17,9 +16,9 @@ import graft.util.PrefixSum
   *
   * The curve is computed at every distinct score threshold ("treat
   * everyone scoring ≥ s"), not at row-level ntiles: thresholds are
-  * the deployable policies, and the running counts run over the
-  * distinct-score table ([[PrefixSum]]) — at 100 TB the cumulative
-  * pass reads thousands of rows, not billions (the q274
+  * the deployable policies, and the distinct-score table keeps every
+  * window SCORE-cardinality-bounded — at 100 TB the cumulative pass
+  * runs over thousands of rows, not billions (the q274
   * value-histogram discipline).
   */
 object Uplift {
@@ -42,18 +41,14 @@ object Uplift {
       sum(when(!col("t"), 1L).otherwise(0L)).as("bc"),
       sum(when(col("t"), col("y")).otherwise(0L)).as("byt"),
       sum(when(!col("t"), col("y")).otherwise(0L)).as("byc"))
-    val cnt = Seq("bt", "bc", "byt", "byc")
-    val tot = perScore.agg(sum(cnt.head).as(s"__${cnt.head}"),
-      cnt.tail.map(c => sum(c).as(s"__$c")): _*)
-    // at or above s = the total less what lies strictly below s, so NaN
-    // ranks above every score, as Spark orders it; the score table is
-    // bounded, so one task
-    def atOrAbove(c: String) = col(s"__$c") - col(s"${c}_cum") + col(c)
-    PrefixSum.running(perScore, "s", cnt, Nil)
-      .crossJoin(broadcast(tot))   // 1-row stat factor
+    // score-cardinality frame: the single-partition window is bounded
+    val w = Window.orderBy(desc("s"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    perScore
       .select(col("s").as("score_ge"),
-        atOrAbove("bt").as("n_t"), atOrAbove("bc").as("n_c"),
-        atOrAbove("byt").as("conv_t"), atOrAbove("byc").as("conv_c"))
+        sum("bt").over(w).as("n_t"), sum("bc").over(w).as("n_c"),
+        sum("byt").over(w).as("conv_t"),
+        sum("byc").over(w).as("conv_c"))
       .select(col("score_ge"), col("n_t"), col("n_c"),
         col("conv_t"), col("conv_c"),
         round(when(col("n_t") > 0 && col("n_c") > 0,
